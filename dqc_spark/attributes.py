@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dqc_spark import gates
+from dqc_spark.features import FEATURE_NAMES
 from dqc_spark.langid import lang_mismatch_pred
 from dqc_spark.perplexity import DEFAULT_MAX_PPL, high_ppl_pred
 
@@ -47,8 +48,8 @@ MODEL_COLS = ["lang_pred", "lang_conf", "ppl"]
 
 
 def feature_cols() -> list[str]:
-    """The stored feature attribute names (single source: gates.py)."""
-    return list(gates.feature_columns(F.lit("")))
+    """The stored feature attribute names (single source: features.py)."""
+    return list(FEATURE_NAMES)
 
 
 def tag(
@@ -59,7 +60,6 @@ def tag(
     thresholds: dict | None = None,
     max_ppl: float = DEFAULT_MAX_PPL,
     lm: dict | None = None,
-    engine: str = "pandas",
     langid_model: dict | None = None,
 ) -> DataFrame:
     """One tagging pass -> the narrow per-document attribute table.
@@ -78,7 +78,6 @@ def tag(
         thresholds=thresholds,
         max_ppl=max_ppl,
         lang_col=lang_col,
-        engine=engine,
         lm=lm,
         scrub=False,
         langid_model=langid_model,
@@ -107,7 +106,7 @@ def regate(
     a narrow-table projection, not a tagging pass.  The lang-mismatch
     gate fires only when the attribute table stored the claimed lang.
     """
-    from dqc_spark.pipeline import GATE_ORDER
+    from dqc_spark.pipeline import fold_gates
 
     feats: dict[str, Column] = {k: F.col(k) for k in feature_cols()}
     preds = gates.gate_predicates(feats, thresholds)
@@ -119,15 +118,7 @@ def regate(
     # lang-mismatch when the claimed lang wasn't stored) must not leak
     # through as if this sweep produced them
     stale = [c for c in attrs.columns if c.startswith("gate_") and c not in preds]
-    df = attrs.drop(*stale) if stale else attrs
-    any_gate = None
-    for name in GATE_ORDER:
-        if name not in preds:
-            continue
-        p = F.coalesce(preds[name], F.lit(False))
-        df = df.withColumn(name, p)
-        any_gate = p if any_gate is None else (any_gate | p)
-    return df.withColumn("keep", ~F.coalesce(any_gate, F.lit(False)))
+    return fold_gates(attrs.drop(*stale) if stale else attrs, preds)
 
 
 def apply_filter(

@@ -999,7 +999,7 @@ def main(argv=None) -> int:
         if args.quality_labels:
             from pyspark.sql import functions as F
 
-            from dqc_spark.gates import feature_columns
+            from dqc_spark.features import FEATURE_NAMES
             from dqc_spark.pipeline import annotate
             from dqc_spark.qualitymodel import score_col, train_logreg
 
@@ -1008,14 +1008,13 @@ def main(argv=None) -> int:
                 print("error: --quality-labels parquet needs "
                       "(url, label) columns", file=sys.stderr)
                 return 2
-            fcols = list(feature_columns(F.lit("")))
             # features of the LABELED slice only (inner join first so
             # the annotate kernel scores thousands of rows, not the
             # corpus); persisted — it feeds the IRLS passes + PR curve
             feats = annotate(
                 pages.join(labels.select("url", "label"), on="url")
             ).persist()
-            quality_model = train_logreg(feats, fcols, "label")
+            quality_model = train_logreg(feats, FEATURE_NAMES, "label")
             if args.quality_min_precision >= 0:
                 from dqc_spark.evalmetrics import choose_threshold, pr_curve
 

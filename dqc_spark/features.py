@@ -1,19 +1,20 @@
-"""Per-document heuristic features — the shared Python kernel.
+"""Per-document heuristic gate features — the two kernels.
 
-This single function is used by BOTH sides of the golden contract:
-  * the distributed pipeline (inside the fused Arrow-batched UDF,
-    scoring.py) and
-  * the single-process oracle (pipeline_oracle.py),
-so Spark-vs-oracle feature agreement is by construction.
+  * ``features_py`` — one document at a time; the golden oracle's
+    kernel (pipeline_oracle.py).
+  * ``features_batch`` — its batch-vectorized twin, the hot path
+    inside the fused Arrow UDF (scoring.py); pinned bit-equal to
+    ``features_py`` by tests/test_pipeline.py::
+    test_features_batch_matches_features_py.
 
-It mirrors the pure-Column implementations in gates.py expression for
-expression (same tokenization, same edge defaults).  The Column forms
-remain available — they push work to the JVM and compose with Catalyst
-— but Spark's higher-order-function lambdas execute interpreted (no
-whole-stage codegen) and their unique lambda-variable IDs defeat
-subexpression elimination, which measured 100x slower per core than
-this kernel (37.7s vs 0.4s for 25k docs); the pipeline therefore
-defaults to the fused-UDF path (pipeline.annotate(engine="pandas")).
+These are the ONLY implementations of the features: annotate, attribute
+tagging and gate calibration (gates.calibrate_thresholds) all score
+through ``features_batch``.  Do not add a Catalyst Column form beside
+them: higher-order-function lambdas execute interpreted and their
+unique lambda-variable IDs defeat subexpression elimination (measured
+100x slower per core: 37.7s vs 0.4s for 25k docs), and Java regex
+``\\s`` is ASCII-only, so a ``split(text, "\\s+")`` form counts
+NBSP/U+3000-separated words differently from Python's ``\\s``.
 """
 
 from __future__ import annotations

@@ -1,20 +1,27 @@
-"""Gopher/C4-style heuristic quality gates as pure Catalyst Columns.
+"""Gopher/C4-style heuristic quality gates over the scored features.
 
-Every gate is a whole-stage-codegen'd expression over ``text`` — no
-Python in the hot path, no shuffle, fully fused into the single
-pipeline scan.  Each returns a *feature* Column; thresholded gates are
-built with ``Check.custom_pred`` (suite.py) or gate_columns() below so
-they participate in both the per-document keep decision and the
-table-level zero-row-success audit (SURVEY §2.4).
+The seven gate features are computed by ONE kernel — the fused scoring
+UDF (``scoring.with_scores`` -> ``features.features_batch``, pinned
+bit-equal to the oracle's ``features.features_py``).  This module holds
+what sits on top of them as Catalyst: the default thresholds, the
+violation predicates (``gate_predicates``) that ``pipeline.annotate``
+and ``attributes.regate`` fold into ``keep``, and the trusted-corpus
+threshold calibration.  They feed both the per-document keep decision
+and the table-level zero-row-success audit (SURVEY §2.4).
 
 Gate set (public heuristics from the Gopher and C4 papers):
-  * doc length in words / chars
+  * doc length in words
   * mean word length
   * stop-word ratio
   * alpha-character ratio
   * symbol-to-word ratio (# and ellipsis)
-  * max / mean line length, duplicate-line fraction
+  * duplicate-line fraction
   * repetition: duplicate word-bigram fraction
+
+``words_col`` / ``stopword_ratio`` stay as Column forms for the
+text-statistics queries (textstats.py, entry_ext.py).  They split on
+Java regex ``\\s``, which is ASCII-only, so they are NOT the gate
+features on text with non-ASCII whitespace (NBSP, U+3000).
 """
 
 from __future__ import annotations
@@ -34,101 +41,10 @@ def words_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
 
 
-def n_words(text: Column) -> Column:
-    return F.size(words_col(text))
-
-
-def n_chars(text: Column) -> Column:
-    return F.length(text)
-
-
-def mean_word_length(text: Column) -> Column:
-    w = words_col(text)
-    return F.when(F.size(w) > 0,
-                  F.aggregate(w, F.lit(0.0), lambda acc, x: acc + F.length(x))
-                  / F.size(w))
-
-
 def stopword_ratio(text: Column) -> Column:
     w = words_col(F.lower(text))
     hits = F.size(F.filter(w, lambda x: x.isin(ALL_STOPWORDS)))
     return F.when(F.size(w) > 0, hits / F.size(w)).otherwise(F.lit(0.0))
-
-
-def alpha_ratio(text: Column) -> Column:
-    """Fraction of NON-WHITESPACE characters that are letters (unicode
-    letter class) — whitespace excluded so single-character-token
-    languages (zh) aren't penalized for their space density."""
-    total = F.length(F.regexp_replace(text, r"\s", ""))
-    alpha = F.length(F.regexp_replace(text, r"[^\p{L}]", ""))
-    return F.when(total > 0, alpha / total).otherwise(F.lit(0.0))
-
-
-def symbol_word_ratio(text: Column) -> Column:
-    """Gopher: ratio of '#' or '...' symbols to words."""
-    syms = (
-        F.length(text) - F.length(F.regexp_replace(text, r"#", ""))
-        + (F.length(text) - F.length(F.regexp_replace(text, r"\.\.\.", ""))) / 3
-    )
-    nw = n_words(text)
-    return F.when(nw > 0, syms / nw).otherwise(F.lit(0.0))
-
-
-def lines_col(text: Column) -> Column:
-    return F.filter(F.split(text, r"\n"), lambda l: l != F.lit(""))
-
-
-def max_line_length(text: Column) -> Column:
-    return F.coalesce(
-        F.array_max(F.transform(lines_col(text), F.length)), F.lit(0)
-    )
-
-
-def mean_line_length(text: Column) -> Column:
-    l = lines_col(text)
-    return F.when(
-        F.size(l) > 0,
-        F.aggregate(l, F.lit(0.0), lambda acc, x: acc + F.length(x)) / F.size(l),
-    ).otherwise(F.lit(0.0))
-
-
-def dup_line_fraction(text: Column) -> Column:
-    l = lines_col(text)
-    return F.when(
-        F.size(l) > 0,
-        1.0 - F.size(F.array_distinct(l)) / F.size(l),
-    ).otherwise(F.lit(0.0))
-
-
-def dup_bigram_fraction(text: Column) -> Column:
-    """Repetition gate: fraction of duplicate word bigrams — boilerplate
-    and SEO spam repeat phrase patterns.
-
-    Implementation note: ``array_distinct`` over string arrays is O(n^2)
-    with per-element string equality (66s for 20k docs measured); instead
-    hash each bigram (tokens are space-free, so the pair<->hash mapping
-    is faithful), sort the hash array, and count adjacent equals:
-    duplicates = n - distinct.  O(n log n) with long comparisons.
-    """
-    w = words_col(F.lower(text))
-    n_b = F.size(w) - 1
-    hashes = F.transform(
-        F.sequence(F.lit(0), F.size(w) - 2),
-        lambda i: F.xxhash64(F.element_at(w, i + 1), F.element_at(w, i + 2)),
-    )
-    s = F.array_sort(hashes)
-    dups = F.aggregate(
-        F.zip_with(
-            F.slice(s, 1, n_b - 1),
-            F.slice(s, 2, n_b - 1),
-            lambda a, b: (a == b).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    # size>=3 so the slice lengths stay positive; a 2-word doc has one
-    # bigram and therefore duplicate fraction 0 by definition
-    return F.when(F.size(w) >= 3, dups.cast("double") / n_b).otherwise(F.lit(0.0))
 
 
 # ---------------------------------------------------------------------------
@@ -146,19 +62,6 @@ DEFAULT_THRESHOLDS = {
     "max_dup_line_fraction": 0.30,
     "max_dup_bigram_fraction": 0.40,
 }
-
-
-def feature_columns(text: Column) -> dict[str, Column]:
-    """All gate features — computed once, shared by every threshold."""
-    return {
-        "n_words": n_words(text),
-        "mean_word_len": mean_word_length(text),
-        "stopword_ratio": stopword_ratio(text),
-        "alpha_ratio": alpha_ratio(text),
-        "symbol_word_ratio": symbol_word_ratio(text),
-        "dup_line_fraction": dup_line_fraction(text),
-        "dup_bigram_fraction": dup_bigram_fraction(text),
-    }
 
 
 def gate_predicates(
@@ -198,9 +101,10 @@ def calibrate_thresholds(
     returned dict is ``DEFAULT_THRESHOLDS``-shaped and feeds straight
     into ``annotate``/``curate(thresholds=...)``.
 
-    Scale shape: ONE scan — all seven feature columns are pure
-    Catalyst expressions and all thirteen percentiles fuse into a
-    single ``percentile_approx`` aggregate (mergeable sketch; exact
+    Scale shape: ONE scan — the seven feature columns come from the
+    fused scoring kernel (``scoring.with_scores``), the SAME numbers the
+    gates test in ``annotate``, and all thirteen percentiles fuse into
+    a single ``percentile_approx`` aggregate (mergeable sketch; exact
     percentiles would force ObjectHashAggregate per the repo's
     measured rule).  At the default accuracy the approximation error
     is <= 1/accuracy of rank, exact on corpora smaller than it.
@@ -209,13 +113,13 @@ def calibrate_thresholds(
     (skipped by the percentile — empties must not drag the word-length
     band down) and zeros elsewhere, matching the gate features
     themselves."""
+    from dqc_spark.scoring import with_scores
+
     if not (0.0 < quantile < 0.5):
         raise ValueError(
             f"quantile must be in (0, 0.5), got {quantile}")
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    feats = feature_columns(text)
-    proj = trusted.select(
-        *[c.alias(k) for k, c in feats.items()])
+    # the kernel scores NULL text as "" (scoring.score_udf)
+    proj = with_scores(trusted.select(text_col), text_col)
     lo, hi = float(quantile), float(1.0 - quantile)
     qq = F.array(F.lit(lo), F.lit(hi))
     row = proj.agg(

@@ -34,9 +34,6 @@ N_DOMAINS = 1000
 HOT_DOMAINS = 5          # first few domains absorb most urls (skew)
 HOT_SHARE = 0.55
 DUP_URL_RATE = 0.02
-# bump when make_page's output changes in ANY byte — cache dirs (bench
-# pages parquet) embed it so a generator change can't serve stale data
-CORPUS_VERSION = 2
 
 PAGES_SCHEMA = T.StructType(
     [

@@ -1,8 +1,9 @@
 """End-to-end document quality pipeline.
 
 pages(url, warc_ts, html, text, lang)
-  -> one fused projection: heuristic gate features (pure Catalyst
-     Columns), langid + perplexity (broadcast-model pandas UDFs)
+  -> one fused projection: heuristic gate features + langid +
+     perplexity in ONE broadcast-model Arrow UDF (scoring.py), gates
+     as Catalyst predicates over its columns
   -> keep = no gate fired        (per-doc generalization, SURVEY §2.4)
   -> scrubbed_text = PII scrub, ONLY for kept docs (dropped docs never
      pay the Python regex cost)
@@ -25,8 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dqc_spark import gates
+from dqc_spark.features import FEATURE_NAMES
 from dqc_spark.langid import lang_mismatch_pred
 from dqc_spark.perplexity import DEFAULT_MAX_PPL, high_ppl_pred
+from dqc_spark.scoring import with_scores
 from dqc_spark.scrub import scrub_udf
 from dqc_spark.skew import salted_duplicate_count
 from dqc_spark.textmodels import LANGS
@@ -45,62 +48,10 @@ GATE_ORDER = [
 ]
 
 
-def annotate(
-    pages: DataFrame,
-    text_col: str = "text",
-    thresholds: dict | None = None,
-    max_ppl: float = DEFAULT_MAX_PPL,
-    lang_col: str | None = "lang",
-    engine: str = "pandas",
-    lm: dict | None = None,
-    scrub: bool = True,
-    langid_model: dict | None = None,
-) -> DataFrame:
-    """Append feature, gate, keep and scrubbed_text columns in one pass.
-
-    ``scrub=False`` skips the scrubbed_text column entirely (the
-    attribute-store tagging path, which persists a narrow frame and
-    must not pay the scrub UDF).  ``langid_model`` swaps the language-
-    ID profile for one trained IN Spark (langid.train_langid_model).
-
-    ``engine="pandas"`` (default): one fused Arrow UDF computes all
-    features + langid + perplexity in a single tokenization pass — the
-    fast path (see features.py for why the Column forms lose here).
-    ``engine="column"``: pure-Catalyst feature expressions from gates.py
-    + the langid/ppl UDF — JVM-side, useful where Python workers are the
-    constrained resource.  Both produce identical gate decisions (tested).
-    """
-    if engine not in ("pandas", "column"):
-        raise ValueError(f"engine must be 'pandas' or 'column', got {engine!r}")
-    # NULL text == empty text for every gate: the pandas kernel already
-    # maps None -> "" (scoring.score_udf), so the Column forms must see
-    # "" too or the engines diverge on NULL rows (NULL predicates get
-    # coalesced to False -> doc kept; "" fires too_few_words -> dropped)
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    df = pages
-    if engine == "pandas":
-        from dqc_spark.scoring import with_scores
-
-        df = with_scores(df, text_col, lm=lm, langid_model=langid_model)
-        feat_names = list(gates.feature_columns(text))
-    else:
-        feats = gates.feature_columns(text)
-        for name, col in feats.items():
-            df = df.withColumn(name, col)
-        feat_names = list(feats)
-        from dqc_spark.langid import with_langid
-        from dqc_spark.perplexity import with_perplexity
-
-        df = with_langid(df, text_col, model=langid_model)
-        df = with_perplexity(df, text_col, lm=lm)
-
-    preds = gates.gate_predicates(
-        {k: F.col(k) for k in feat_names}, thresholds
-    )
-    if lang_col is not None and lang_col in pages.columns:
-        preds["gate_lang_mismatch"] = lang_mismatch_pred(lang_col)
-    preds["gate_high_ppl"] = high_ppl_pred(max_ppl)
-
+def fold_gates(df: DataFrame, preds: dict[str, Column]) -> DataFrame:
+    """Append the ``preds`` gates as ``gate_*`` columns in GATE_ORDER
+    (NULL coalesced to False) and ``keep`` = no gate fired — the one
+    keep fold shared by ``annotate`` and ``attributes.regate``."""
     any_gate = None
     for name in GATE_ORDER:
         if name not in preds:
@@ -108,13 +59,44 @@ def annotate(
         p = F.coalesce(preds[name], F.lit(False))
         df = df.withColumn(name, p)
         any_gate = p if any_gate is None else (any_gate | p)
+    return df.withColumn("keep", ~F.coalesce(any_gate, F.lit(False)))
 
-    df = df.withColumn("keep", ~F.coalesce(any_gate, F.lit(False)))
+
+def annotate(
+    pages: DataFrame,
+    text_col: str = "text",
+    thresholds: dict | None = None,
+    max_ppl: float = DEFAULT_MAX_PPL,
+    lang_col: str | None = "lang",
+    lm: dict | None = None,
+    scrub: bool = True,
+    langid_model: dict | None = None,
+) -> DataFrame:
+    """Append feature, gate, keep and scrubbed_text columns in one pass.
+
+    One fused Arrow UDF (``scoring.with_scores``) computes all gate
+    features + langid + perplexity in a single tokenization pass; the
+    gates are Catalyst predicates over its columns.
+
+    ``scrub=False`` skips the scrubbed_text column entirely (the
+    attribute-store tagging path, which persists a narrow frame and
+    must not pay the scrub UDF).  ``langid_model`` swaps the language-
+    ID profile for one trained IN Spark (langid.train_langid_model).
+    """
+    df = with_scores(pages, text_col, lm=lm, langid_model=langid_model)
+    preds = gates.gate_predicates(
+        {k: F.col(k) for k in FEATURE_NAMES}, thresholds
+    )
+    if lang_col is not None and lang_col in pages.columns:
+        preds["gate_lang_mismatch"] = lang_mismatch_pred(lang_col)
+    preds["gate_high_ppl"] = high_ppl_pred(max_ppl)
+    df = fold_gates(df, preds)
     # scrub ONLY kept docs: the when() sits INSIDE the UDF argument, so
     # dropped docs ship a NULL through Arrow instead of their full text
     # (a when() around the UDF call would still evaluate it on all rows —
     # pandas UDFs are extracted into an unconditional ArrowEvalPython node)
     if scrub:
+        text = F.coalesce(F.col(text_col), F.lit(""))
         df = df.withColumn(
             "scrubbed_text", scrub_udf(F.when(F.col("keep"), text))
         )
@@ -581,7 +563,7 @@ def curate(
             raise ValueError(
                 f"quality_model needs feature column(s) {missing} — "
                 "train on the gate feature set annotate() emits "
-                "(gates.feature_columns) so scoring stays a pure "
+                "(features.FEATURE_NAMES) so scoring stays a pure "
                 "Column expression over the annotated frame")
         thr = (0.5 if quality_model_threshold is None
                else float(quality_model_threshold))

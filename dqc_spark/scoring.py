@@ -2,11 +2,12 @@
 perplexity in ONE Arrow transfer and one tokenization pass.
 
 Why fused: every pandas UDF ships the full ``text`` column through
-Arrow; and Spark's higher-order-function Column expressions (the
-gates.py forms) execute interpreted, re-splitting the text per feature
-(measured 100x slower per core than this kernel — see features.py).
-One UDF = one transfer + one pass, and the models are broadcast once
-per executor.
+Arrow; and Spark's higher-order-function Column expressions execute
+interpreted, re-splitting the text per feature (measured 100x slower
+per core than this kernel — see features.py).  One UDF = one transfer
++ one pass, and the models are broadcast once per executor.  This is
+the only path that computes gate features: annotate, attribute tagging
+and gate calibration all call ``with_scores``.
 
 langid.py / perplexity.py expose the standalone operators built on the
 same model functions.

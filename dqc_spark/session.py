@@ -47,7 +47,8 @@ def get_spark(
         # memory stays flat regardless of document size distribution
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("DQC_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("DQC_DRIVER_MEM") or default_driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -55,6 +56,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def default_driver_memory() -> str:
+    """Half of physical RAM, capped at 16g: in local mode the driver
+    JVM is the whole engine, and a heap sized past the machine's RAM
+    gets the JVM killed by the kernel OOM killer instead of spilling."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 >> 20, 16 << 10)}m"
 
 
 def iceberg_available() -> bool:

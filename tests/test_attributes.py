@@ -101,8 +101,3 @@ def test_apply_filter_returns_exactly_kept_docs(pages, attrs):
 def test_tag_requires_key_column(pages):
     with pytest.raises(ValueError, match="key column"):
         tag(pages.drop("url"))
-
-
-def test_tag_column_engine_parity(pages, attrs):
-    got = _keyed(tag(pages, engine="column"))
-    assert got == _keyed(attrs)

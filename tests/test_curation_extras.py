@@ -624,8 +624,9 @@ def test_calibrate_thresholds_from_trusted_corpus(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from dqc_spark.gates import (calibrate_thresholds, feature_columns,
-                                 gate_predicates)
+    from dqc_spark.features import FEATURE_NAMES
+    from dqc_spark.gates import calibrate_thresholds, gate_predicates
+    from dqc_spark.scoring import with_scores
 
     docs = spark.createDataFrame(
         [(i, ("the word list number %d " % i) * (2 + i // 2))
@@ -638,15 +639,55 @@ def test_calibrate_thresholds_from_trusted_corpus(spark):
     assert 0.0 < th["min_stopword_ratio"] <= 0.25  # 'the' is 1/5 words
     # self-consistency: the trusted corpus passes its own gates almost
     # everywhere (<= ~8 gates x 2x5% tails, loosely bounded)
-    feats = feature_columns(F.coalesce(F.col("text"), F.lit("")))
+    feats = {k: F.col(k) for k in FEATURE_NAMES}
     drop = None
     for p in gate_predicates(feats, th).values():
         drop = p if drop is None else (drop | p)
-    assert docs.filter(drop).count() <= 30
+    assert with_scores(docs).filter(drop).count() <= 30
     with pytest.raises(ValueError, match="quantile"):
         calibrate_thresholds(docs, quantile=0.7)
     with pytest.raises(ValueError, match="empty"):
         calibrate_thresholds(docs.filter(F.lit(False)))
+
+
+def test_calibrate_thresholds_match_annotate_features_on_unicode_space(spark):
+    """Calibration and the gates read ONE feature definition: on words
+    separated by NBSP / U+3000 (Python's \\s, not Java's ASCII \\s),
+    every calibrated percentile equals the same percentile over
+    annotate()'s feature columns, and annotate's n_words is the
+    oracle's features_py count."""
+    from pyspark.sql import functions as F
+
+    from dqc_spark.features import features_py
+    from dqc_spark.gates import calibrate_thresholds
+    from dqc_spark.pipeline import annotate
+
+    texts = [("\u00a0" if i % 2 else "\u3000").join(
+        ["the", "cat", "sat", "on", "mat", "word%d" % i] * (2 + i % 7))
+        for i in range(60)]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
+    q = 0.05
+    th = calibrate_thresholds(docs, quantile=q)
+
+    ann = annotate(docs, lang_col=None, scrub=False).persist()
+    got = {r["doc_id"]: r["n_words"]
+           for r in ann.select("doc_id", "n_words").collect()}
+    assert got == {i: features_py(t)["n_words"] for i, t in enumerate(texts)}
+
+    def pct(col, p):
+        return ann.agg(F.percentile_approx(col, F.lit(p), 10_000)).first()[0]
+
+    assert th["min_words"] == pct("n_words", q)
+    assert th["max_words"] == pct("n_words", 1 - q)
+    assert th["min_mean_word_length"] == pct("mean_word_len", q)
+    assert th["max_mean_word_length"] == pct("mean_word_len", 1 - q)
+    assert th["min_stopword_ratio"] == pct("stopword_ratio", q)
+    assert th["min_alpha_ratio"] == pct("alpha_ratio", q)
+    assert th["max_symbol_word_ratio"] == pct("symbol_word_ratio", 1 - q)
+    assert th["max_dup_line_fraction"] == pct("dup_line_fraction", 1 - q)
+    assert th["max_dup_bigram_fraction"] == pct("dup_bigram_fraction", 1 - q)
+    ann.unpersist()
 
 
 def test_verify_shards_detects_tampering(spark, sf_dir, tmp_path):

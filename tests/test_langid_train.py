@@ -103,11 +103,6 @@ def test_trained_model_threads_through_annotate_and_oracle(spark, pages):
     ann = annotate(sample, langid_model=model)
     got = {r["url"]: r["keep"] for r in ann.select("url", "keep").collect()}
     assert got == want
-    # column engine agrees too
-    gotc = {r["url"]: r["keep"]
-            for r in annotate(sample, engine="column", langid_model=model)
-            .select("url", "keep").collect()}
-    assert gotc == want
     sample.unpersist()
 
 

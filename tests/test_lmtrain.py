@@ -104,32 +104,27 @@ def test_partition_invariance(spark, pages):
 
 def test_annotate_with_trained_lm_matches_golden_oracle(spark, pages):
     """The CCNet loop end-to-end: a Spark-trained LM drives the high-ppl
-    gate, and BOTH engines' keep decisions match the golden oracle with
-    the same model."""
+    gate, and annotate's keep decisions match the golden oracle with the
+    same model."""
     from dqc_spark.pipeline import annotate
     from dqc_spark.pipeline_oracle import gate_flags_py
 
     lm = train_bigram_lm(pages, max_vocab=None, min_count=1,
                          max_bigrams=None)
 
-    def keeps(engine):
-        return annotate(pages, engine=engine, lm=lm).select(
-            "text", "lang", "keep").collect()
-
-    for engine in ("pandas", "column"):
-        rows = keeps(engine)
-        assert len(rows) == 120
-        for r in rows:
-            flags = gate_flags_py(r["text"], r["lang"], lm=lm)
-            want = not any(v for k, v in flags.items()
-                           if k.startswith("gate_"))
-            assert r["keep"] == want, (engine, r["text"][:40])
+    rows = annotate(pages, lm=lm).select("text", "lang", "keep").collect()
+    assert len(rows) == 120
+    for r in rows:
+        flags = gate_flags_py(r["text"], r["lang"], lm=lm)
+        want = not any(v for k, v in flags.items()
+                       if k.startswith("gate_"))
+        assert r["keep"] == want, r["text"][:40]
     # the trained model must actually change SOMETHING vs the default
     # (the corpus contains gibberish docs whose bigrams the self-trained
     # LM has seen — their ppl drops), otherwise this test pins nothing
     default_keep = sum(r["keep"] for r in annotate(pages).select(
         "keep").collect())
-    trained_keep = sum(r["keep"] for r in keeps("pandas"))
+    trained_keep = sum(r["keep"] for r in rows)
     assert trained_keep != default_keep
 
 

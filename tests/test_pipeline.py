@@ -265,21 +265,9 @@ def test_perplexity_cache_is_exact():
     assert len(cache) > 0
 
 
-def test_column_engine_matches_pandas_engine(spark):
-    """The pure-Catalyst gate expressions and the fused-UDF kernel are
-    dual implementations of the same semantics — identical keep/gate
-    decisions (floating-point ties aside, which the generator avoids)."""
-    pages = generate_pages(spark, 150, n_partitions=3)
-    cols = ["url", "text", "keep"] + [c for c in
-            annotate(pages).columns if c.startswith("gate_")]
-    a = annotate(pages, engine="pandas").select(*cols)
-    b = annotate(pages, engine="column").select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_engines_agree_on_null_and_empty_text(spark):
-    """NULL text must gate identically to "" in BOTH engines (the pandas
-    kernel maps None -> ""; the Column forms coalesce the input)."""
+    """NULL text must gate identically to "" (the scoring kernel maps
+    None -> "")."""
     import datetime as dt
 
     from dqc_spark.pagesgen import PAGES_SCHEMA
@@ -292,11 +280,9 @@ def test_engines_agree_on_null_and_empty_text(spark):
     from pyspark.sql import types as T
     nullable = T.StructType([T.StructField(f.name, f.dataType, True) for f in sch])
     pages = spark.createDataFrame(rows, nullable)
-    for eng in ("pandas", "column"):
-        ann = {r.url: (r.keep, r.n_words)
-               for r in annotate(pages, engine=eng).collect()}
-        assert ann["u1"][0] is False and ann["u2"][0] is False, eng
-        assert ann["u1"][1] == 0 and ann["u2"][1] == 0, eng
+    ann = {r.url: (r.keep, r.n_words) for r in annotate(pages).collect()}
+    assert ann["u1"][0] is False and ann["u2"][0] is False
+    assert ann["u1"][1] == 0 and ann["u2"][1] == 0
 
 
 def test_curate_end_to_end(spark):

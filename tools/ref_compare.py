@@ -61,10 +61,24 @@ def duck_run(mult: int) -> float:
 
 
 def spark_suite():
-    # the SAME suite bench.py times as checks_fused_10 — single source
-    import bench
+    """The 10-check lineitem suite, one Check per duck_checks() query
+    above (same order) — keep the two lists in sync."""
+    from dqc_spark.suite import Check, CheckSuite
 
-    return bench.headline_suite()
+    return CheckSuite(
+        [
+            Check.not_null("l_orderkey"),
+            Check.enum("l_returnflag", ["A", "N", "R"]),
+            Check.between("l_discount", 0.0, 0.1),
+            Check.length("l_linestatus", 1, 1),
+            Check.max_between("l_quantity", 1, 50),
+            Check.min_between("l_extendedprice", 0, 1e9),
+            Check.mean_between("l_extendedprice", 0, 1e9),
+            Check.median_between("l_extendedprice", 0, 1e9, approx=True),
+            Check.row_count_between(1, 10**12),
+            Check.distinct_in_set("l_linestatus", ["O", "F"]),
+        ]
+    )
 
 
 def main() -> None:
