@@ -317,7 +317,6 @@ DRIVER_ORDER = [
     "text_hashed_tfidf",
     # --- new in round 4 (appended as operators land) ---
     "text_tokens_unicode",
-    "media_describe",
     "url_domain_blocklist",
     "metric_anomaly_days",
     "attr_refilter",
@@ -326,8 +325,6 @@ DRIVER_ORDER = [
     "warc_ingest",
     "text_fix_mojibake",
     "robots_gate_verdicts",
-    "media_image_near_dups",
-    "media_audio_near_dups",
     "cdx_select_captures",
     "warc_range_fetch",
     "order_shard_assign",
@@ -384,7 +381,6 @@ TAIL_ORDER = [
     "olap_cheapest_part_per_brand",
     "olap_moving_avg",
     "olap_value_percentiles_approx",
-    "media_real_decode",
     "text_substr_dedup",
     "url_canonicalize",
     "url_domain_stats",
@@ -461,7 +457,6 @@ TAIL_ORDER = [
     "olap_lang_source_cube",
     "olap_asof_join",
     "olap_range_join",
-    "media_features",
 ]
 
 

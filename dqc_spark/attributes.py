@@ -25,7 +25,7 @@ Scale notes
 -----------
 - `tag` output is a pure projection of the corpus scan (no shuffle);
   write it partitioned the same way as the corpus so `apply`'s
-  semi-join can be co-partitioned (or bucketed via bucketing.py).
+  semi-join can be co-partitioned.
 - `regate` is a projection over the attribute table — no shuffle, no
   Python, safe to run interactively while sweeping thresholds.
 - `apply` is one shuffle join on the key (broadcast if the kept set is

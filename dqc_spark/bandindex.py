@@ -168,30 +168,36 @@ def extend_band_index(
     signatures: DataFrame | None = None,
 ) -> None:
     """Append ``df``'s signatures + band rows to the index, FIRST-WINS
-    per key: keys already present are anti-joined away before the
-    append.  That makes extend idempotent under the crash-reprocess
+    per key: each append anti-joins away the keys its OWN table already
+    holds.  That makes extend idempotent under the crash-reprocess
     contract (a replayed increment re-extends to a no-op instead of
     duplicating signature rows, which would multiply every scored pair
-    touching the key) and pins the re-crawl semantics — a url whose
-    text changed keeps its ORIGINAL signature; revision-level dedup is
-    the url-canonicalization layer's job, not the index's.
+    touching the key; after a crash between the two appends the replay
+    writes just the missing band rows) and pins the re-crawl semantics
+    — a url whose text changed keeps its ORIGINAL signature;
+    revision-level dedup is the url-canonicalization layer's job, not
+    the index's.
 
     Pass ``signatures`` (a ``minhash_signatures`` frame for the SAME
     docs under the index's params) to skip re-signaturing when the
     caller already computed them for the query pass."""
     sigs = signatures if signatures is not None else minhash_signatures(
         df, key_col, text_col, idx.num_perm, idx.shingle_k)
-    if os.path.isdir(idx.sig_path):
-        seen = idx.signatures().select("key")
-        sigs = sigs.join(seen, on="key", how="left_anti")
-    # localCheckpoint, not persist: the anti-join READS sig_path and the
-    # append WRITES it — the write would otherwise refreshByPath-refresh
-    # a plan scanning the very directory being appended (the resume.py
-    # lesson); the checkpoint also covers the two-writes multi-consumer
-    # rule (signatures + bands consume the expensive Python stage once)
+    # localCheckpoint, not persist: both appends consume the expensive
+    # Python stage once, and the checkpoint is cut BEFORE the anti-joins
+    # read the tables being appended — a persisted plan scanning
+    # sig_path would be refreshByPath-recomputed by the signature
+    # append, over the updated table (the resume.py lesson)
     sigs = sigs.localCheckpoint()
-    sigs.write.mode("append").parquet(idx.sig_path)
-    band_frame(sigs, idx.bands, idx.rows_per_band) \
+
+    def unseen(path: str) -> DataFrame:
+        if not os.path.isdir(path):
+            return sigs
+        seen = idx.spark.read.parquet(path).select("key")
+        return sigs.join(seen, on="key", how="left_anti")
+
+    unseen(idx.sig_path).write.mode("append").parquet(idx.sig_path)
+    band_frame(unseen(idx.band_path), idx.bands, idx.rows_per_band) \
         .write.mode("append").parquet(idx.band_path)
 
 

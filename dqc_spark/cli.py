@@ -451,16 +451,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--source-column", default="source")
     p.add_argument("--text-column", default="text")
 
-    p = sub.add_parser("media-profile",
-                       help="header-only media metadata profile: format/"
-                            "dims/duration histograms with NO decode")
-    p.add_argument("--data", required=True,
-                   help="parquet with a binary media column")
-    p.add_argument("--media-column", default="media")
-    p.add_argument("--key-column", default="url")
-    p.add_argument("--output", default=None,
-                   help="also write the per-blob metadata parquet here")
-
     p = sub.add_parser("induce-blocklist",
                        help="induce a domain blocklist from a curated "
                             "run's keep decisions (low keep-rate hosts)")
@@ -1361,43 +1351,6 @@ def main(argv=None) -> int:
         row = kept.agg(F.sum("n_lines").alias("a"),
                        F.sum("n_lines_kept").alias("b")).first()
         print(f"line-dedup: kept {row['b']}/{row['a']} lines -> {args.output}")
-        return 0
-    if c == "media-profile":
-        from pyspark.sql import functions as F
-
-        from dqc_spark.multimodal import describe_media
-
-        df = spark.read.parquet(args.data)
-        meta = describe_media(df, media_col=args.media_column,
-                              key_col=args.key_column)
-        if args.output:
-            meta.write.mode("overwrite").parquet(args.output)
-            meta = spark.read.parquet(args.output)  # summary re-reads the
-            # written table, not the Python stage (multi-consumer rule)
-        else:
-            from dqc_spark.cache import track
-            meta = track(meta)
-        summary = (
-            meta.groupBy(
-                "media_type",
-                F.element_at("media_meta", "format").alias("format"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.avg(F.element_at("media_meta", "duration_s")
-                               .cast("double")), 3).alias("avg_duration_s"),
-                 F.round(F.avg(F.element_at("media_meta", "width")
-                               .cast("double")), 1).alias("avg_width"))
-            .orderBy(F.col("n").desc(), "media_type")
-        ).collect()
-        n_bad = meta.filter(
-            F.element_at("media_meta", "parsed") == "false").count()
-        for r in summary:
-            extra = (f" avg_duration={r['avg_duration_s']}s"
-                     if r["avg_duration_s"] is not None else "") + (
-                     f" avg_width={r['avg_width']}"
-                     if r["avg_width"] is not None else "")
-            print(f"{r['media_type']:<28} format={r['format'] or '-':<8} "
-                  f"n={r['n']}{extra}")
-        print(f"unparseable: {n_bad}")
         return 0
     if c == "decontaminate":
         from dqc_spark.decontam import decontaminate

@@ -4,10 +4,10 @@ Five families, ordered by cost:
 
   * exact           — hash-groupBy on a content digest (1 shuffle)
   * ngram_jaccard   — exact Jaccard over shingle sets for candidate pairs
-  * minhash_lsh     — MinHash signatures + banded LSH bucketing: near-dup
+  * minhash_lsh     — MinHash signatures + banded LSH: near-dup
                       candidates meet in a bucket join instead of an
                       O(n^2) cross join (the 100 TB path)
-  * simhash         — 64-bit SimHash + hamming-ball bucketing
+  * simhash         — 64-bit SimHash + pigeonhole chunk join
   * embedding cosine near-dup — see similarity.py (shares the LSH shape)
 
 All signatures are computed with vectorized/pandas kernels inside Arrow
@@ -491,19 +491,28 @@ def simhash_near_dups(
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance <= max_hamming.
 
-    Bucketing: split the 64-bit hash into 4 16-bit chunks; by pigeonhole
-    any pair within hamming<=3 agrees on at least one chunk -> candidates
-    meet in a chunk-equality join (4x fanout, no cross join), then exact
-    hamming via bit_count(xor).
+    Candidates meet in ``hamming_near_dups``' pigeonhole chunk join: the
+    64-bit hash splits into 4x16-bit chunks for hamming<=3, 8x8 for <=7
+    and 16x4 for <=15, so any pair within the radius agrees on at least
+    one chunk; exact hamming is then bit_count(xor).
 
     The signature kernel output is persisted: bucket-count capping plus
     the two sides of the self-join are three consumers, and without a
     persist the Arrow kernel re-runs for each (measured ~3x slower at
     5k docs).  At cluster scale: materialize signatures once, join after.
     """
+    _n_chunks(max_hamming)  # reject the radius before persisting anything
     sh = track(simhash_signatures(df, key_col, text_col))
     return hamming_near_dups(sh, max_hamming=max_hamming,
                              max_bucket=max_bucket)
+
+
+def _n_chunks(max_hamming: int) -> int:
+    """Chunks per 64-bit hash for a pigeonhole join of this radius."""
+    for n in (4, 8, 16):
+        if max_hamming < n:
+            return n
+    raise ValueError("max_hamming > 15 defeats pigeonhole banding")
 
 
 def hamming_near_dups(
@@ -511,21 +520,14 @@ def hamming_near_dups(
     max_bucket: int | None = 500, sim_col: str = "sim",
 ) -> DataFrame:
     """Near-dup pairs over any (key, 64-bit signature) frame — the
-    shared pigeonhole join behind SimHash text dedup and dHash image
-    dedup.  The 64-bit hash splits into n > max_hamming equal chunks
-    (4x16 for hamming<=3, 8x8 for <=7, 16x4 for <=15): any pair within
-    the radius agrees on at least one chunk, so candidates meet in a
-    chunk-equality join (n-fold fanout, never a cross join) and exact
-    hamming is one bit_count(xor).  Caller persists ``signatures`` when
-    it embeds a Python stage (the multi-consumer rule)."""
-    if max_hamming <= 3:
-        n_chunks = 4
-    elif max_hamming <= 7:
-        n_chunks = 8
-    elif max_hamming <= 15:
-        n_chunks = 16
-    else:
-        raise ValueError("max_hamming > 15 defeats pigeonhole banding")
+    pigeonhole join behind SimHash text dedup.  The 64-bit hash splits
+    into n > max_hamming equal chunks (4x16 for hamming<=3, 8x8 for
+    <=7, 16x4 for <=15): any pair within the radius agrees on at least
+    one chunk, so candidates meet in a chunk-equality join (n-fold
+    fanout, never a cross join) and exact hamming is one bit_count(xor).
+    Caller persists ``signatures`` when it embeds a Python stage (the
+    multi-consumer rule)."""
+    n_chunks = _n_chunks(max_hamming)
     width = 64 // n_chunks
     mask = (1 << width) - 1
     sh = signatures.withColumnRenamed(sim_col, "sim") \

@@ -718,166 +718,6 @@ def q_top_customers_per_nation(spark, sf):
     )
 
 
-# ---------------------------------------------------------------------------
-# multimodal plumbing (rows-only: stubbed decode)
-# ---------------------------------------------------------------------------
-
-
-def q_media_features(spark, sf):
-    from dqc_spark.multimodal import extract_features, with_media_type
-    from dqc_spark.pagesgen import generate_pages
-
-    pages = generate_pages(spark, 200, n_partitions=4).withColumnRenamed(
-        "html", "media"
-    )
-    typed = with_media_type(pages)
-    feats = extract_features(typed, media_col="media", key_col="url", out_dim=8)
-    return feats.select("key", "n_bytes", F.size("features").alias("dim"))
-
-
-def q_media_real_decode(spark, sf):
-    # REAL (non-stub) media decode: WAV, PPM, PNG and baseline-JPEG
-    # blobs synthesized
-    # deterministically from doc_ids inside an Arrow kernel, then
-    # featurized with decode_stub=False — every value below comes from
-    # an actual RIFF chunk walk / netpbm raster parse / PNG inflate +
-    # de-filter, not the digest fake.  Rows-only (binary synthesis is
-    # engine-specific); the duration/luminance slots are pinned exactly
-    # by test_mediacodec.
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from dqc_spark.jpegcodec import encode_jpeg
-    from dqc_spark.mediacodec import encode_png, encode_pnm, encode_wav
-    from dqc_spark.multimodal import extract_features
-
-    docs = _t(spark, sf, "documents").select("doc_id").limit(64)
-    # limit() collapses to one partition — re-spread before the kernel
-    docs = docs.repartition(4)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_keys, out_media = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                if d % 2 == 0:  # 100+d Hz sine, (1+d%5)/10 s @ 8 kHz
-                    t = np.arange(int(8000 * (1 + d % 5) / 10)) / 8000.0
-                    blob = encode_wav(
-                        np.sin(2 * np.pi * (100 + d) * t), rate=8000
-                    )
-                else:  # (4+d%3) x 4 gradient image; alternate container
-                    w = 4 + d % 3
-                    img = (
-                        np.arange(4 * w * 3, dtype=np.int64) * (d + 1) % 256
-                    ).astype(np.uint8).reshape(4, w, 3)
-                    # d%4==1 -> PNM, d%8==3 -> PNG, d%8==7 -> baseline
-                    # JPEG (all three containers decode for REAL; the
-                    # lossless pair must featurize identically, JPEG
-                    # deterministically within DCT rounding)
-                    if d % 4 == 1:
-                        blob = encode_pnm(img)
-                    elif d % 8 == 3:
-                        blob = encode_png(img)
-                    else:
-                        blob = encode_jpeg(img, quality=100)
-                out_keys.append(d)
-                out_media.append(blob)
-            yield pd.DataFrame({"doc_id": out_keys, "media": out_media})
-
-    media = docs.mapInPandas(
-        synth,
-        schema=T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    feats = extract_features(
-        media, media_col="media", key_col="doc_id", out_dim=8,
-        decode_stub=False,
-    )
-    return feats.select(
-        "key",
-        "n_bytes",
-        F.round(F.element_at("features", 1), 4).alias("slot0"),
-        F.round(F.element_at("features", 3), 4).alias("slot2"),
-    )
-
-
-def q_media_describe(spark, sf):
-    # header-only media profiling (describe_media): mixed WAV / PNM /
-    # PNG / JPEG / MP3 / corrupt blobs synthesized deterministically
-    # from doc_ids; metadata comes from chunk/marker/frame-header walks
-    # with NO pixel or sample decode — the corpus-profile path at
-    # 100 TB.  Rows-only (binary synthesis is engine-specific); exact
-    # per-format values are pinned by test_mediacodec.
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from dqc_spark.jpegcodec import encode_jpeg
-    from dqc_spark.mediacodec import encode_png, encode_pnm, encode_wav
-    from dqc_spark.multimodal import describe_media
-
-    docs = _t(spark, sf, "documents").select("doc_id").limit(64)
-    docs = docs.repartition(4)  # limit() collapses to one partition
-
-    def _mp3(n_frames: int) -> bytes:
-        # MPEG1 Layer III 128 kbps 44.1 kHz frames: header + junk body
-        # of the spec frame length (the walk reads headers only)
-        hdr = bytes([0xFF, 0xFB, 0x90, 0x00])
-        return (b"ID3\x04\x00\x00" + bytes([0, 0, 0, 10]) + b"\x00" * 10
-                + (hdr + b"\xaa" * (417 - 4)) * n_frames)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, media = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                m = d % 5
-                if m == 0:
-                    t = np.arange(800 * (1 + d % 3)) / 8000.0
-                    blob = encode_wav(np.sin(2 * np.pi * 100 * t), rate=8000)
-                elif m == 4:
-                    blob = _mp3(2 + d % 4)
-                else:
-                    w = 4 + d % 3
-                    img = (np.arange(4 * w * 3, dtype=np.int64) * (d + 1)
-                           % 256).astype(np.uint8).reshape(4, w, 3)
-                    blob = (encode_pnm(img) if m == 1 else
-                            encode_png(img) if m == 2 else
-                            encode_jpeg(img, quality=90))
-                if d % 17 == 13:  # planted corrupt: magic, no body
-                    blob = b"\x89PNG\r\n\x1a\n" + blob[:6]
-                keys.append(d)
-                media.append(blob)
-            yield pd.DataFrame({"doc_id": keys, "media": media})
-
-    media = docs.mapInPandas(
-        synth,
-        schema=T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("media", T.BinaryType()),
-        ]),
-    )
-    meta = describe_media(media, key_col="doc_id")
-    return meta.select(
-        F.col("key").cast("long").alias("doc_id"),
-        "media_type",
-        F.element_at("media_meta", "format").alias("format"),
-        F.element_at("media_meta", "width").alias("width"),
-        F.element_at("media_meta", "duration_s").alias("duration_s"),
-        F.element_at("media_meta", "bitrate_kbps").alias("bitrate_kbps"),
-        F.element_at("media_meta", "parsed").alias("parsed"),
-    )
-
-
 def _dup_pairs(spark, sf):
     # edges from a TRUNCATED text hash (3 hex chars = 4096 buckets):
     # unlike full-md5 exact-dup edges, this collides at every scale
@@ -2681,107 +2521,6 @@ def q_cdx_select(spark, sf):
     return select_captures(idx, dedup_digest=False).drop("languages")
 
 
-def q_image_near_dups(spark, sf):
-    """Image near-dup via perceptual dHash (multimodal.image_near_dups):
-    per doc_id a deterministic synthetic 'photo' is planted twice —
-    lossless PNM and a quality-85 baseline-JPEG re-encode — plus
-    undecodable junk rows; the pair search is the shared pigeonhole
-    hamming join.  Rows-only (binary synthesis + raster decode are
-    engine-specific); planted-pair recall, cross-format dHash
-    invariance and junk exclusion are pinned in tests/test_mediadedup."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from dqc_spark.jpegcodec import encode_jpeg
-    from dqc_spark.mediacodec import encode_pnm
-    from dqc_spark.multimodal import image_near_dups
-
-    docs = _t(spark, sf, "documents").select("doc_id").limit(24)
-    docs = docs.repartition(4)  # limit() collapses to one partition
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, blobs = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                r = np.random.default_rng(d)
-                yy, xx = np.mgrid[0:32, 0:40]
-                base = np.full((32, 40), 128.0)
-                for _ in range(4):
-                    fx, fy = r.uniform(0.5, 5, 2)
-                    px, py = r.uniform(0, 2 * np.pi, 2)
-                    base += r.uniform(20, 45) * np.sin(
-                        xx / 40 * np.pi * fx + px) * np.cos(
-                        yy / 32 * np.pi * fy + py)
-                img = np.clip(
-                    base[:, :, None] + r.normal(0, 4, (32, 40, 3)),
-                    0, 255).astype(np.uint8)
-                keys += [f"d{d}_pnm", f"d{d}_jpg", f"d{d}_junk"]
-                blobs += [encode_pnm(img), encode_jpeg(img, quality=85),
-                          b"JUNK" + d.to_bytes(4, "big")]
-            yield pd.DataFrame({"key": keys, "media": blobs})
-
-    media = docs.mapInPandas(synth, schema=T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("media", T.BinaryType()),
-    ]))
-    return image_near_dups(media, "key", max_hamming=6)
-
-
-def q_audio_near_dups(spark, sf):
-    """Audio near-dup via the spectral fingerprint
-    (multimodal.audio_near_dups): per doc_id a deterministic synthetic
-    'recording' (broadband bed + enveloped tones) is planted twice —
-    original 16 kHz WAV and a band-limited 8 kHz resample — plus
-    undecodable junk rows; the pair search is the shared pigeonhole
-    hamming join.  Rows-only (waveform synthesis + FFT fingerprints are
-    engine-specific); transform invariance, distinct-recording
-    separation and junk exclusion are pinned in tests/test_mediadedup."""
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from dqc_spark.mediacodec import encode_wav
-    from dqc_spark.multimodal import audio_near_dups
-
-    docs = _t(spark, sf, "documents").select("doc_id").limit(24)
-    docs = docs.repartition(4)  # limit() collapses to one partition
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys, blobs = [], []
-            for did in pdf["doc_id"]:
-                d = int(did)
-                r = np.random.default_rng(d)
-                n = 8000
-                t = np.arange(n) / 16000.0
-                sig = 0.04 * r.standard_normal(n)
-                for _ in range(5):
-                    f = r.uniform(150, 3500)
-                    env = 0.5 + 0.5 * np.sin(
-                        2 * np.pi * r.uniform(0.5, 3) * t
-                        + r.uniform(0, 2 * np.pi))
-                    sig = sig + r.uniform(0.1, 0.25) * env * np.sin(
-                        2 * np.pi * f * t + r.uniform(0, 2 * np.pi))
-                sig = np.clip(sig, -1, 1)
-                rs = np.fft.irfft(np.fft.rfft(sig)[: 2001], n=4000) * 0.5
-                keys += [f"d{d}_16k", f"d{d}_8k", f"d{d}_junk"]
-                blobs += [encode_wav(sig, 16000), encode_wav(rs, 8000),
-                          b"JUNK" + d.to_bytes(4, "big")]
-            yield pd.DataFrame({"key": keys, "media": blobs})
-
-    media = docs.mapInPandas(synth, schema=T.StructType([
-        T.StructField("key", T.StringType()),
-        T.StructField("media", T.BinaryType()),
-    ]))
-    return audio_near_dups(media, "key", max_hamming=8)
-
-
 # (robots_txt or None, path, expected-allowed-for-'*') — expectations
 # hand-derived from RFC 9309 / the published REP examples and spelled
 # ONLY in the oracle; the Spark side runs the real parser + matcher.
@@ -3210,9 +2949,6 @@ def extra_queries():
         "olap_range_join": q_range_join,
         "olap_rollup_daily": q_rollup_daily,
         "olap_events_windowed": q_events_windowed,
-        "media_features": q_media_features,
-        "media_real_decode": q_media_real_decode,
-        "media_describe": q_media_describe,
         "sample_hash_10pct": q_sample_hash,
         "sample_stratified_quota": q_sample_stratified,
         "pack_token_budget": q_pack_token_budget,
@@ -3280,8 +3016,6 @@ def extra_queries():
         "wet_ingest": q_wet_ingest,
         "text_fix_mojibake": q_fix_mojibake,
         "robots_gate_verdicts": q_robots_gate,
-        "media_image_near_dups": q_image_near_dups,
-        "media_audio_near_dups": q_audio_near_dups,
         "cdx_select_captures": q_cdx_select,
         "warc_range_fetch": q_warc_range_fetch,
         "order_shard_assign": q_shard_assign,

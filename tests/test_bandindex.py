@@ -225,6 +225,37 @@ def test_extend_is_first_wins_and_idempotent(spark, tmp_path, corpora):
     assert len(keys) == len(set(keys))
 
 
+def test_extend_crash_between_appends_is_replayable(spark, tmp_path,
+                                                   corpora, monkeypatch):
+    """A crash after the signature append but before the band append
+    must not leave keys with no band rows: the replay skips the landed
+    signatures and still writes their bands, or those docs would stay
+    invisible to candidate generation for good."""
+    import dqc_spark.bandindex as bi
+
+    a, b = corpora
+    idx = create_band_index(a, "key", str(tmp_path / "idx"))
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("simulated crash between the appends")
+
+    monkeypatch.setattr(bi, "band_frame", boom)
+    with pytest.raises(RuntimeError, match="simulated"):
+        extend_band_index(idx, b, "key")
+    monkeypatch.undo()
+    assert idx.signatures().count() == a.count() + b.count()
+
+    extend_band_index(idx, b, "key")  # the crash-reprocess replay
+    keys = [r["key"] for r in idx.signatures().select("key").collect()]
+    assert len(keys) == len(set(keys)) == a.count() + b.count()
+    assert idx.banded().count() == idx.signatures().count() * idx.bands
+    # the replayed band table is the one a clean build over a ∪ b makes
+    clean = create_band_index(a.unionByName(b), "key",
+                              str(tmp_path / "clean"))
+    assert sorted(map(tuple, idx.banded().collect())) == sorted(
+        map(tuple, clean.banded().collect()))
+
+
 def test_create_crash_leaves_no_wedged_index(spark, tmp_path, corpora,
                                              monkeypatch):
     """Review fix: create builds under a scratch dir and renames into

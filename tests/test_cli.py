@@ -279,44 +279,6 @@ def test_cli_curate_quality_model(capsys, spark, db_path, tmp_path):
     assert rc2 == 2
 
 
-def test_cli_media_profile(capsys, spark, db_path, tmp_path):
-    import numpy as np
-
-    from dqc_spark.jpegcodec import encode_jpeg
-    from dqc_spark.mediacodec import encode_wav
-
-    hdr = bytes([0xFF, 0xFB, 0x90, 0x00])  # MPEG1 L3 128kbps 44.1kHz
-    mp3 = (hdr + b"\xaa" * (417 - 4)) * 3
-    t = np.arange(1600) / 8000.0
-    y, x = np.mgrid[0:8, 0:12]
-    img = np.stack([x * 20 % 256, y * 30 % 256, (x + y) * 10 % 256],
-                   2).astype(np.uint8)
-    rows = [
-        ("u1", bytearray(encode_jpeg(img, quality=90))),
-        ("u2", bytearray(encode_wav(np.sin(2 * np.pi * 60 * t), rate=8000))),
-        ("u3", bytearray(mp3)),
-        ("u4", bytearray(b"not media at all")),
-    ]
-    src = str(tmp_path / "media.parquet")
-    out = str(tmp_path / "meta.parquet")
-    spark.createDataFrame(rows, "url string, media binary").write.parquet(src)
-
-    rc, txt = _run(capsys, ["--db-path", db_path, "media-profile",
-                            "--data", src, "--output", out])
-    assert rc == 0
-    assert "image/jpeg" in txt and "audio/mp3" in txt
-    assert "unparseable: 1" in txt
-    meta = {r["key"]: r for r in spark.read.parquet(out).collect()}
-    assert meta["u3"]["media_meta"]["bitrate_kbps"] == "128.0"
-    assert meta["u2"]["media_meta"]["duration_s"] == "0.2"
-    assert meta["u1"]["media_meta"]["width"] == "12"
-
-    # summary-only mode (no --output) prints the same histogram
-    rc2, txt2 = _run(capsys, ["--db-path", db_path, "media-profile",
-                              "--data", src])
-    assert rc2 == 0 and "unparseable: 1" in txt2
-
-
 def test_cli_induce_blocklist_and_reuse(capsys, spark, db_path, tmp_path):
     src = str(tmp_path / "labeled.parquet")
     rows = ([(f"http://farm.net/{i}", i % 10 == 0) for i in range(20)]

@@ -1,4 +1,4 @@
-"""Unit tests for dedup / similarity / textstats / multimodal operators
+"""Unit tests for dedup / similarity / textstats operators
 with planted duplicates and known-answer fixtures."""
 
 import numpy as np
@@ -59,13 +59,42 @@ def test_minhash_estimates_track_exact_jaccard(spark, docs):
         assert abs(est[(r["key_a"], r["key_b"])] - r["jaccard"]) < 0.25
 
 
-def test_simhash_finds_planted_near_dups(spark, docs):
-    from dqc_spark.dedup import simhash_near_dups, simhash_py
+@pytest.mark.parametrize("max_hamming", [0, 3, 6, 10])
+def test_simhash_finds_planted_near_dups(spark, docs, max_hamming):
+    # radii 0/3, 6 and 10 run the 4x16, 8x8 and 16x4 chunk layouts of
+    # the pigeonhole join; each must find exactly the all-pairs answer
+    from dqc_spark.dedup import (hamming_near_dups, simhash_near_dups,
+                                 simhash_py)
+
+    def within(sims):
+        dist = {(a, b): bin(sims[a] ^ sims[b]).count("1")
+                for a in sims for b in sims if a < b}
+        return {k: h for k, h in dist.items() if h <= max_hamming}
 
     assert simhash_py("") == 0
     pairs = {(r["key_a"], r["key_b"]): r["hamming"]
-             for r in simhash_near_dups(docs, "doc_id", max_hamming=3).collect()}
+             for r in simhash_near_dups(docs, "doc_id",
+                                        max_hamming=max_hamming).collect()}
     assert pairs[(0, 1)] == 0
+    sims = {r["doc_id"]: simhash_py(r["text"]) for r in docs.collect()}
+    assert pairs == within(sims)
+
+    # the fixture's hashes sit 0 or 9 bits apart; planted signatures
+    # with 0..11 flipped bits also put pairs just inside and outside
+    # every radius
+    rng = np.random.Generator(np.random.Philox(key=[11, 0]))
+    planted = {}
+    for b in range(3):
+        base = int("".join(map(str, rng.integers(0, 2, 63))), 2)
+        for k in range(12):
+            flips = rng.choice(63, size=k, replace=False)
+            planted[f"b{b}k{k:02d}"] = base ^ sum(1 << int(i) for i in flips)
+    sig = spark.createDataFrame(list(planted.items()), "key string, sim long")
+    got = {(r["key_a"], r["key_b"]): r["hamming"] for r in
+           hamming_near_dups(sig, max_hamming=max_hamming).collect()}
+    assert got == within(planted)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_near_dups(docs, "doc_id", max_hamming=16)
 
 
 def test_brute_force_topk_exact(spark):
@@ -227,52 +256,6 @@ def test_textstats_known_answers(spark):
     f1 = df.filter("doc_id=1").select(fingerprint(F.col("text")).alias("f")).first()["f"]
     f2 = df2.select(fingerprint(F.col("text")).alias("f")).first()["f"]
     assert f1 == f2
-
-
-def test_multimodal_plumbing(spark):
-    from dqc_spark.multimodal import extract_features, with_media_type
-
-    rows = [
-        ("u1", b"\x89PNG\r\n\x1a\n" + b"\x00" * 64),
-        ("u2", b"\xff\xd8\xff\xe0" + b"\x00" * 32),
-        ("u3", b"plain bytes"),
-        ("u4", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, media binary")
-    typed = {r["url"]: r["media_type"] for r in with_media_type(df).collect()}
-    assert typed == {"u1": "image/png", "u2": "image/jpeg",
-                     "u3": "application/octet-stream", "u4": "unknown"}
-    feats = {r["key"]: r for r in
-             extract_features(df, out_dim=16).collect()}
-    assert len(feats["u1"]["features"]) == 16
-    assert feats["u4"]["n_bytes"] == 0
-    # determinism: same bytes -> same features
-    again = {r["key"]: r for r in extract_features(df, out_dim=16).collect()}
-    assert feats["u1"]["features"] == again["u1"]["features"]
-
-    with pytest.raises(Exception, match="out of scope|no real decoder"):
-        extract_features(df, out_dim=4, decode_stub=False).collect()
-
-
-def test_multimodal_resize_plumbing(spark):
-    from dqc_spark.multimodal import resize_media
-
-    rows = [
-        ("u1", b"\x89PNG\r\n\x1a\n" + b"\x01\x02" * 100),
-        ("u2", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, media binary")
-    out = {r["key"]: r for r in resize_media(df, 8, 6).collect()}
-    # exact target byte size (w*h*3) regardless of input, deterministic
-    assert len(out["u1"]["media"]) == 8 * 6 * 3
-    assert len(out["u2"]["media"]) == 8 * 6 * 3
-    assert out["u1"]["media_meta"]["width"] == "8"
-    assert out["u1"]["media_meta"]["src_bytes"] == "208"
-    again = {r["key"]: r for r in resize_media(df, 8, 6).collect()}
-    assert bytes(out["u1"]["media"]) == bytes(again["u1"]["media"])
-
-    with pytest.raises(Exception, match="out of scope|no real decoder"):
-        resize_media(df, 4, 4, decode_stub=False).collect()
 
 
 def test_dedup_exact_multi_key_no_phantom_winner(spark):

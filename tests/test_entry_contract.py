@@ -40,3 +40,19 @@ def test_driver_window_holds_the_untested_before_the_tail():
 def test_every_oracle_key_has_a_query():
     qs, oracles = set(E.queries()), set(E.oracle_sql())
     assert oracles <= qs, f"oracle without query: {oracles - qs}"
+
+
+def test_oracle_check_rejects_unknown_query_name():
+    # an unregistered name used to select zero queries and exit 0
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "oracle_check.py"),
+         "no_such_query"],
+        cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode != 0
+    assert "no_such_query" in proc.stdout + proc.stderr

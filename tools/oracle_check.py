@@ -79,6 +79,12 @@ def main() -> int:
     import __spark_entry__ as E
     from dqc_spark.session import get_spark
 
+    qs, oracles = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:  # a typo or a missing sf dir would otherwise select nothing
+        print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
+        return 2
+
     spark = get_spark(app_name="oracle_check", master="local[8]",
                       shuffle_partitions=8)
 
@@ -88,7 +94,6 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = E.queries(), E.oracle_sql()
     failures = []
     ran = 0
     for name, fn in qs.items():
@@ -139,7 +144,7 @@ def main() -> int:
     spark.stop()
     print(f"\n{ran - len(failures)}/{ran} matched"
           + ("" if not only else f" (of {len(qs)} registered)"))
-    return 1 if failures else 0
+    return 1 if failures or not ran else 0
 
 
 if __name__ == "__main__":
