@@ -33,6 +33,8 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from dqc_spark import snaptable
+
 AUDIT_SCHEMA = T.StructType(
     [
         T.StructField("run_id", T.StringType(), False),
@@ -87,10 +89,13 @@ class ParquetAuditSink(MemoryAuditSink):
 
     Rows are buffered driver-side and appended on ``flush()`` (one file
     per flush — audit volume is one row per check per run, so tiny).
+    The flush writes that file with pyarrow on the driver, not with a
+    Spark job, under a hidden temp name that ``os.replace`` publishes
+    whole (Spark's listing skips ``.``-prefixed files), so a reader
+    never sees a half-written file; the path is a local directory.
     Concurrent runs write distinct files (distinct run_id); readers see
     a union — the same append-only contract an Iceberg commit gives,
-    minus snapshot isolation, which tests don't need and production
-    would get by swapping the writer for ``df.writeTo(tbl).append()``.
+    minus snapshot isolation, which ``SnapshotAuditSink`` adds.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
@@ -101,8 +106,11 @@ class ParquetAuditSink(MemoryAuditSink):
     def flush(self) -> None:
         if not self.rows:
             return
-        df = self.spark.createDataFrame(self.rows, schema=AUDIT_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.path, f".{name}.tmp")
+        snaptable.write_rows(self.rows, AUDIT_SCHEMA, tmp)
+        os.replace(tmp, os.path.join(self.path, name))
         self.rows = []
 
     def read(self):
@@ -130,8 +138,10 @@ class SnapshotAuditSink(ParquetAuditSink):
     flush is an ATOMIC versioned commit, so concurrent runs' audit
     appends serialize cleanly and "the metrics as of run N" is a time
     travel read — the full Iceberg-audit-table contract the north rule
-    names, not just append-only parquet.  ``clear_logs`` is itself a
-    committed version (delete-all), so the history survives the wipe.
+    names, not just append-only parquet.  A flush is one driver-side
+    file plus one manifest (``SnapshotTable.append_rows``), no Spark
+    job.  ``clear_logs`` is itself a committed version (delete-all), so
+    the history survives the wipe.
     """
 
     def __init__(self, spark: SparkSession, path: str) -> None:
@@ -139,8 +149,6 @@ class SnapshotAuditSink(ParquetAuditSink):
         self._table = None
 
     def _tbl(self):
-        from dqc_spark import snaptable
-
         if self._table is None:
             t = snaptable.SnapshotTable(self.spark, self.path)
             try:
@@ -157,8 +165,7 @@ class SnapshotAuditSink(ParquetAuditSink):
     def flush(self) -> None:
         if not self.rows:
             return
-        df = self.spark.createDataFrame(self.rows, schema=AUDIT_SCHEMA)
-        self._tbl().append(df.coalesce(1))
+        self._tbl().append_rows(self.rows)
         self.rows = []
 
     def read(self):

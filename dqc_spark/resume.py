@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dqc_spark.audit import ParquetAuditSink
-from dqc_spark.pipeline import annotate
+from dqc_spark.pipeline import annotate, curate
 
 PARTITION_DONE = "partition_complete"
 
@@ -214,7 +214,6 @@ def curate_incremental(
     from pyspark.errors import AnalysisException
 
     from dqc_spark.cache import track
-    from dqc_spark.pipeline import curate
     from dqc_spark.snapshot import content_digests
 
     state_path = state_path or output_path.rstrip("/") + "_ingested"
@@ -245,7 +244,11 @@ def curate_incremental(
             "__digest", nullsafe(F.md5(F.col(text_col)))).join(
             seen.select(nullsafe(F.col("digest")).alias("__digest")),
             on="__digest", how="left_anti").drop("__digest")
-        new = track(new)
+        # cut the lineage before curate plans over it: every DataFrame
+        # call in curate would otherwise re-analyze this anti-join
+        # inside an ever deeper plan (Catalyst constraint inference
+        # stalled the second increment for minutes)
+        new = new.localCheckpoint()
         n_new = new.count()
     if n_new == 0:
         audit.log(INCREMENT_DONE, True,
