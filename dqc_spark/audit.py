@@ -28,6 +28,7 @@ import datetime as _dt
 import json
 import os
 import sqlite3
+import urllib.parse
 import uuid
 
 from pyspark.sql import SparkSession
@@ -48,6 +49,19 @@ AUDIT_SCHEMA = T.StructType(
         T.StructField("input_snapshot", T.StringType(), True),
     ]
 )
+
+
+def _local_dir(path: str) -> str:
+    """The sink's directory as a local path: flushes write it with os
+    calls while reads go through Spark, so a ``file:`` URI is reduced to
+    its path and any other URI scheme is refused (its rows would land in
+    a literal local ``hdfs:`` directory that ``read()`` never looks at)."""
+    u = urllib.parse.urlparse(path)
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return u.path
+    if u.scheme:
+        raise ValueError(f"audit sink path must be a local directory: {path}")
+    return path
 
 
 def _utcnow() -> _dt.datetime:
@@ -101,7 +115,7 @@ class ParquetAuditSink(MemoryAuditSink):
     def __init__(self, spark: SparkSession, path: str) -> None:
         super().__init__()
         self.spark = spark
-        self.path = path
+        self.path = _local_dir(path)
 
     def flush(self) -> None:
         if not self.rows:
@@ -123,7 +137,12 @@ class ParquetAuditSink(MemoryAuditSink):
         instead of chronologically (the reference orders by its
         AUTOINCREMENT id = insertion order)."""
         rows = self.read().orderBy("ts", "run_id", "seq").collect()
-        return format_log_rows(rows)
+        # collect turns ts into a naive datetime in the driver's local
+        # zone; print the logged UTC time, as the other sinks do
+        return format_log_rows([
+            dict(r.asDict(), ts=r["ts"].astimezone(_dt.timezone.utc)
+                 .replace(tzinfo=None))
+            for r in rows])
 
     def clear_logs(self) -> None:
         """clean-logs parity (connector.go:160-172 DELETE FROM log):

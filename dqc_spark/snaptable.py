@@ -326,7 +326,7 @@ class SnapshotTable:
             files, "append", m["schema"], m["partition_cols"], None,
             props=props)
 
-    def append_rows(self, rows: list[dict], props: dict | None = None) -> int:
+    def append_rows(self, rows: list[dict]) -> int:
         """``append`` for driver-resident rows (an audit flush): one
         parquet file written by pyarrow, no Spark job.  The file lands
         under its final ``data/`` name but stays invisible until the
@@ -341,7 +341,7 @@ class SnapshotTable:
         write_rows(rows, schema, os.path.join(self.root, path))
         return self._commit(
             [{"path": path, "rows": len(rows), "partition": {}}], "append",
-            m["schema"], [], None, props=props)
+            m["schema"], [], None)
 
     def overwrite(self, df: DataFrame) -> int:
         """Replace the ENTIRE table contents as one atomic commit (a

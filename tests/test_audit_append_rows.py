@@ -160,9 +160,8 @@ def test_append_rows_rejects_partitioned_table(spark, tmp_path):
         part.append_rows([{"k": "b", "day": "d2"}])
     assert part.current_version() == 1
     flat = snaptable.create(spark, str(tmp_path / "f"), df)
-    flat.append_rows([{"k": "b", "day": "d2"}], props={"why": "test"})
+    flat.append_rows([{"k": "b", "day": "d2"}])
     assert sorted(r["k"] for r in flat.read().collect()) == ["a", "b"]
-    assert flat.history()[-1]["props"] == {"why": "test"}
 
 
 def test_append_rows_crash_before_manifest_leaves_vacuumable_orphan(
@@ -248,15 +247,17 @@ for name, cls in (("parquet", ParquetAuditSink),
     logged = sink.rows[0]["ts"]
     sink.flush()
     got = sink.read().selectExpr("cast(ts as string) AS s").first()["s"]
-    out[name] = [logged.isoformat(sep=" "), got]
+    shown = " ".join(sink.print_all_logs().splitlines()[2].split()[1:3])
+    out[name] = [logged.isoformat(sep=" "), got, shown]
 spark.stop()
 print("RESULT " + json.dumps(out))
 """
 
 
 def test_audit_ts_is_utc_under_non_utc_driver_zone(tmp_path):
-    """``ts`` is logged as naive UTC; the sinks must store that instant
-    even when the driver's local zone is not UTC."""
+    """``ts`` is logged as naive UTC; the sinks must store that instant,
+    and show-logs print it, even when the driver's local zone is not
+    UTC."""
     env = dict(os.environ, TZ="America/New_York", PYTHONPATH=REPO,
                DQC_DRIVER_MEM="1g")
     proc = subprocess.run(
@@ -267,7 +268,22 @@ def test_audit_ts_is_utc_under_non_utc_driver_zone(tmp_path):
     assert proc.returncode == 0 and lines, proc.stderr[-2000:]
     out = json.loads(lines[-1][len("RESULT "):])
     assert set(out) == {"parquet", "snapshot"}
-    for name, (logged, got) in out.items():
-        skew = abs(dt.datetime.fromisoformat(got)
-                   - dt.datetime.fromisoformat(logged))
-        assert skew < dt.timedelta(seconds=5), (name, logged, got)
+    for name, (logged, got, shown) in out.items():
+        for seen in (got, shown):
+            skew = abs(dt.datetime.fromisoformat(seen)
+                       - dt.datetime.fromisoformat(logged))
+            assert skew < dt.timedelta(seconds=5), (name, logged, seen)
+
+
+@pytest.mark.parametrize("cls", [ParquetAuditSink, SnapshotAuditSink])
+def test_sink_path_takes_file_uri_and_refuses_other_schemes(
+        spark, tmp_path, cls):
+    path = tmp_path / "audit"
+    sink = cls(spark, path.as_uri())
+    assert sink.path == str(path)
+    _log_sample(sink)
+    sink.flush()
+    assert sink.read().count() == 3
+    assert cls(spark, str(path)).read().count() == 3
+    with pytest.raises(ValueError, match="local directory"):
+        cls(spark, "hdfs://namenode/audit")
