@@ -308,7 +308,6 @@ DRIVER_ORDER = [
     "semantic_dedup_text",
     "url_domain_filter",
     "url_dedup_canonical",
-    "bucket_split_by_lang",
     "text_repetition",
     "text_repetition_ngrams",
     "graph_domain_edges",
@@ -325,15 +324,12 @@ DRIVER_ORDER = [
     "warc_ingest",
     "text_fix_mojibake",
     "robots_gate_verdicts",
-    "cdx_select_captures",
-    "warc_range_fetch",
     "order_shard_assign",
     "text_toxicity_scores",
     "pack_fixed_sequences",
     "text_boilerplate_removal",
     "html_main_content",
     "wet_ingest",
-    "text_unigram_token_counts",
     "dedup_priority_keep",
     "dedup_canonical_priority",
     "mix_epoch_expand",
@@ -381,22 +377,17 @@ TAIL_ORDER = [
     "olap_cheapest_part_per_brand",
     "olap_moving_avg",
     "olap_value_percentiles_approx",
-    "text_substr_dedup",
     "url_canonicalize",
     "url_domain_stats",
     "html_extract_text",
     "lm_word_counts",
     "lm_bigram_counts",
     "graph_anchor_terms",
-    "dsir_select",
-    "text_bpe_token_counts",
     "text_c4_line_filter",
     "html_noindex",
     "graph_trustrank",
     "snapshot_drift_by_source",
-    "text_heavy_hitters_top10",
     "pack_first_fit_bins",
-    "ann_quantized_topk",
     "eval_threshold_choice",
     "text_bm25_topk",
     "dedup_soft_weights",
@@ -410,7 +401,6 @@ TAIL_ORDER = [
     "embedding_near_dups_exact",
     "olap_local_supplier_revenue",
     "olap_top_customers_per_nation",
-    "olap_sessionization",
     "olap_rich_idle_customers",
     "ann_bruteforce_topk",
     "dedup_distinct_count",
@@ -426,7 +416,6 @@ TAIL_ORDER = [
     "text_langid_heuristic",
     "olap_events_hourly",
     "olap_lang_source_pivot",
-    "olap_rollup_daily",
     "olap_events_windowed",
     "ann_ivf_fullprobe",
     "text_decontaminate",
@@ -443,7 +432,6 @@ TAIL_ORDER = [
     "text_compression_ratio",
     "text_line_dedup",
     "mix_temperature_sample",
-    "olap_session_window_native",
     "profile_documents",
     "profile_histogram_nchars",
     "eval_pr_curve",
@@ -455,8 +443,6 @@ TAIL_ORDER = [
     "olap_pricing_summary",
     "olap_shipping_priority",
     "olap_lang_source_cube",
-    "olap_asof_join",
-    "olap_range_join",
 ]
 
 

@@ -26,7 +26,7 @@ Scale design (1000-executor / 100 TB framing):
 
   * Line text never shuffles for the verdict: frequencies are counted
     over 16-byte md5 digests (raw-line equality up to collisions — the
-    same documented contract as ``substrdedup``/``linededup``).
+    same documented contract as ``linededup``).
   * Page counts per (group, line) go through a DISTINCT on
     (group, digest, key) — map-side partial distinct collapses a page's
     internal repeats before the exchange, so a footer repeated 50x on

@@ -148,18 +148,6 @@ def q_ann_bruteforce_topk(spark, sf):
     return brute_force_topk(emb, q, k=10, round_to=4)
 
 
-def q_ann_quantized_topk(spark, sf):
-    # int8-quantized candidates + exact rescore (vecquant.py): the
-    # result provably equals the exact brute force whenever the true
-    # top-10 survives into the 50-candidate set (rounding error per
-    # element <= scale/2) — so the oracle IS the exact brute-force SQL
-    from dqc_spark.vecquant import ann_topk_quantized
-
-    emb = _t(spark, sf, "embeddings")
-    q = _query_vec(spark, sf)
-    return ann_topk_quantized(emb, q, k=10, rescore_m=50, round_to=4)
-
-
 def q_ann_lsh_topk(spark, sf):
     # rows-only: approximate recall depends on the LSH draw
     from dqc_spark.similarity import lsh_topk
@@ -408,18 +396,6 @@ def q_events_hourly(spark, sf):
     )
 
 
-def q_sessionization(spark, sf):
-    # lag + cumsum sessionization (one shuffle on user_id, no global sort)
-    from dqc_spark.sessions import session_stats
-
-    ev = _t(spark, sf, "events")
-    s = session_stats(ev, gap_minutes=30.0)
-    return s.select(
-        "user_id", "session_id", "n_events",
-        F.round("duration_s", 4).alias("duration_s"),
-    )
-
-
 def q_events_windowed(spark, sf):
     # watermarked tumbling window (same code path as the streaming agg);
     # on a static frame the watermark is a no-op, so it is oracle-able
@@ -437,38 +413,11 @@ def q_events_windowed(spark, sf):
     )
 
 
-def q_asof_join(spark, sf):
-    # temporal nearest join (operator Spark lacks natively): for each
-    # click, the latest at-or-before purchase per user — checked against
-    # DuckDB's native ASOF LEFT JOIN
-    from dqc_spark.asof import asof_join
-
-    ev = _t(spark, sf, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    purch = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("value"))
-    )
-    j = asof_join(clicks, purch, on="ts", by="user_id", right_cols=["ts", "value"])
-    # asof_value is a raw stored double (no arithmetic on either side):
-    # emit it unrounded — identical bits hash-match directly, and any
-    # rounding mode would only ADD divergence risk
-    return j.select(
-        "event_id",
-        "user_id",
-        F.col("asof_ts").cast("timestamp_ntz").alias("asof_ts"),
-        "asof_value",
-    )
-
-
 def q_moving_avg(spark, sf):
     # RANGE-frame window (interval preceding): per event_type, the
     # trailing-6-hour moving average of value at each event time.
-    # Distinct machinery from the ROWS frames used elsewhere (packing,
-    # sessionization): the frame is value-based on the ORDER BY column,
+    # Distinct machinery from the ROWS frames used elsewhere (packing):
+    # the frame is value-based on the ORDER BY column,
     # so ties and gaps resolve by timestamp arithmetic, not row counts.
     ev = _t(spark, sf, "events")
     # ts is TIMESTAMP_NTZ: route through TIMESTAMP (session tz is UTC)
@@ -543,48 +492,6 @@ def q_value_percentiles(spark, sf):
         F.expr("percentile(value, 0.5)").alias("p50"),
         F.expr("percentile(value, 0.95)").alias("p95"),
         F.count(F.lit(1)).alias("n"),
-    )
-
-
-def q_range_join(spark, sf):
-    # interval containment join via bucketized equi-join (no nested-loop
-    # plan): purchases inside each user's daily view-activity window
-    from dqc_spark.temporal import range_join
-
-    ev = _t(spark, sf, "events")
-    iv = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id", F.date_trunc("day", "ts").alias("d"))
-        .agg(F.min("ts").alias("win_start"), F.max("ts").alias("win_end"))
-        .drop("d")
-    )
-    pts = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    j = range_join(pts, iv, "ts", "win_start", "win_end", by="user_id")
-    return j.select(
-        "event_id",
-        "user_id",
-        F.col("win_start").cast("timestamp_ntz").alias("win_start"),
-        F.col("win_end").cast("timestamp_ntz").alias("win_end"),
-    )
-
-
-def q_rollup_daily(spark, sf):
-    # hypertable-style continuous aggregate: the DAILY level re-aggregates
-    # the hourly one (never the raw scan) — the oracle groups raw rows
-    # directly, so a compositionality bug would hash-mismatch
-    from dqc_spark.temporal import rollup_hierarchy
-
-    ev = _t(spark, sf, "events")
-    day = rollup_hierarchy(ev, "ts", "value", dims=["event_type"])["day"]
-    return day.select(
-        F.col("bucket_ts").cast("timestamp_ntz").alias("day"),
-        "event_type",
-        "n",
-        F.round("sum_value", 4).alias("sum_value"),
-        "min_value",
-        "max_value",
     )
 
 
@@ -985,22 +892,6 @@ def q_line_dedup(spark, sf):
     )
 
 
-def q_substr_dedup(spark, sf):
-    # cross-document substring (k-word window) dedup: per-doc word
-    # counts before/after excising non-first occurrences of duplicated
-    # 10-word shingles.  The Spark side elects winners over 128-bit
-    # shingle hashes; the oracle reproduces the identical semantics over
-    # raw gram strings (hash collisions are the only possible divergence
-    # — none at these scales).
-    from dqc_spark.substrdedup import dedup_substrings
-
-    docs = _t(spark, sf, "documents")
-    out = dedup_substrings(docs, "doc_id", k=10)
-    return out.select(
-        F.col("key").alias("doc_id"), "n_words", "n_words_kept"
-    )
-
-
 def q_hashed_tfidf(spark, sf):
     # model-free document vectors (hashing trick + IDF), compared as
     # the SPARSE float64 (doc_id, bucket, weight) frame — every stage
@@ -1067,28 +958,6 @@ def q_quality_model(spark, sf):
     return out
 
 
-def q_dsir_select(spark, sf):
-    # DSIR importance resampling end-to-end (rows-only: the two LM fits
-    # are iterative/engine-specific; weight parity + sampler exactness
-    # are pinned by tests/test_dsir.py).  Target LM = the English
-    # slice, raw LM = the whole pool; report the selected docs' lang
-    # mix — a stable 5-rowish summary where `en` dominating is the
-    # method working.
-    from dqc_spark.dsir import importance_weights, weighted_sample
-    from dqc_spark.lmtrain import train_bigram_lm
-
-    docs = _t(spark, sf, "documents")
-    target_lm = train_bigram_lm(docs.filter(F.col("lang") == "en"))
-    raw_lm = train_bigram_lm(docs)
-    w = importance_weights(docs, target_lm, raw_lm)
-    sel = weighted_sample(w, 100, "logw", ["doc_id"], seed=42)
-    return (
-        sel.groupBy("lang")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("lang")
-    )
-
-
 def q_pack_first_fit(spark, sf):
     # first-fit-decreasing packing (rows-only: FFD is sequential
     # per-group and not SQL-expressible; exact python parity + the
@@ -1112,23 +981,6 @@ def q_pack_first_fit(spark, sf):
             F.sum("fill").alias("sum_tokens"),
         )
         .orderBy("lang")
-    )
-
-
-def q_heavy_hitters(spark, sf):
-    # Misra-Gries candidates (<= 64 counters/partition) + exact rescore
-    # of candidates only, then top-10.  Equals the exact top-10 because
-    # the guarantee holds (every word with freq > n/65 is a candidate;
-    # the synthetic vocabulary is far smaller than that).  The oracle
-    # computes the exact top-10 the brute-force way.
-    from dqc_spark.heavyhitters import heavy_hitters
-
-    docs = _t(spark, sf, "documents")
-    return (
-        heavy_hitters(docs, k=64, rescore=True)
-        .orderBy(F.desc("n_occurrences"), "gram")
-        .limit(10)
-        .select(F.col("gram").alias("word"), "n_occurrences")
     )
 
 
@@ -1213,56 +1065,6 @@ def q_c4_line_filter(spark, sf):
     return out.select("doc_id", "clean_text", "n_sentences", "keep")
 
 
-def q_bpe_token_counts(spark, sf):
-    # distributed BPE training (one combiner pass + driver merge loop)
-    # then trained-subword counting via one broadcast-ranks Arrow
-    # kernel.  Rows-only: merge training is iterative/engine-specific;
-    # Spark-vs-python model equality and encode parity are pinned by
-    # tests/test_bpe.py.  Per-lang subword totals summarize the
-    # end-to-end result in a stable ~5-row frame.
-    from dqc_spark.bpe import bpe_token_counts, train_bpe
-
-    docs = _t(spark, sf, "documents")
-    merges = train_bpe(docs, n_merges=100, max_words=20_000)
-    counted = bpe_token_counts(docs, merges)
-    return (
-        docs.select("doc_id", "lang")
-        .join(counted.select("doc_id", "n_bpe_tokens"), "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_bpe_tokens").alias("sum_bpe_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
-def q_unigram_token_counts(spark, sf):
-    # distributed unigram-LM (SentencePiece-style) tokenizer training
-    # (one combiner pass + driver EM/prune loop) then trained-piece
-    # counting via one broadcast-model Arrow kernel.  Rows-only: EM is
-    # iterative/engine-specific; Spark-vs-python model equality, the
-    # Viterbi encode contract and coverage are pinned by
-    # tests/test_unigramlm.py.  Same per-lang summary frame as the BPE
-    # twin so the two tokenizer families are directly comparable.
-    from dqc_spark.unigramlm import train_unigram, unigram_token_counts
-
-    docs = _t(spark, sf, "documents")
-    model = train_unigram(docs, vocab_size=500, max_words=20_000,
-                          seed_size=4000)
-    counted = unigram_token_counts(docs, model)
-    return (
-        docs.select("doc_id", "lang")
-        .join(counted.select("doc_id", "n_unigram_tokens"), "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_unigram_tokens").alias("sum_unigram_tokens"),
-        )
-        .orderBy("lang")
-    )
-
-
 def q_profile_documents(spark, sf):
     # deequ-style one-scan column profiler over documents (exact
     # distincts at this scale; approx=True is the 100 TB path)
@@ -1332,26 +1134,6 @@ def q_threshold_choice(spark, sf):
         _trunc4("precision").alias("prec"),
         _trunc4("recall").alias("rec"),
         "cum_n",
-    )
-
-
-def q_session_window_native(spark, sf):
-    # Spark's NATIVE session_window (gap-merged event-time windows, the
-    # batch twin of the streaming state operator) pinned against the
-    # classic gap-and-islands SQL — through the SAME library helper the
-    # streaming path uses.  Merge rule, verified empirically: two
-    # events exactly gap apart MERGE (Spark extends the session when
-    # next_ts <= prev_ts + gap), so the oracle's new-session condition
-    # is diff > gap — the same rule as sessions.sessionize.
-    from dqc_spark.sessions import streaming_session_counts
-
-    ev = _t(spark, sf, "events")
-    g = streaming_session_counts(ev, gap="30 minutes")
-    return g.select(
-        "user_id",
-        F.col("session_window.start").cast("timestamp_ntz").alias("s_start"),
-        F.col("session_window.end").cast("timestamp_ntz").alias("s_end"),
-        "n_events",
     )
 
 
@@ -1591,15 +1373,6 @@ def q_url_dedup_canonical(spark, sf):
     # collapse_ties=False keeps document text out of every exchange
     return (url_dedup(docs, key_cols=["doc_id"], collapse_ties=False)
             .select("doc_id", "url"))
-
-
-def q_bucket_split(spark, sf):
-    from dqc_spark.bucketsplit import score_buckets
-
-    docs = _t(spark, sf, "documents").select(
-        "doc_id", "lang", F.length("text").alias("score"))
-    return score_buckets(docs, "lang", "score", "doc_id").select(
-        "doc_id", "lang", "bucket")
 
 
 # documents.text is single-line, so the repetition entries plant
@@ -2174,9 +1947,8 @@ def _warc_fixture_dir(spark, sf) -> str:
     4 gzip-member shards so the read parallelizes like real CC dumps."""
     import datetime
     import hashlib
-    import json
 
-    from dqc_spark.warc import warc_bytes_with_index
+    from dqc_spark.warc import warc_bytes
 
     docs = _t(spark, sf, "documents").filter(
         (F.col("doc_id") < 128) & F.col("text").isNotNull())
@@ -2199,40 +1971,12 @@ def _warc_fixture_dir(spark, sf) -> str:
                 ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
                 r.text.encode("utf-8"),
             ))
-        ranges = []  # the CDX-shaped sidecar the range-fetch entry uses
         for i, shard in enumerate(shards):
-            fname = f"part-{i}.warc.gz"
-            data, index = warc_bytes_with_index(shard)
-            with open(os.path.join(path, fname), "wb") as f:
-                f.write(data)
-            ranges += [[fname, off, length] for off, length in index]
-        with open(os.path.join(path, "ranges.json"), "w") as f:
-            json.dump(ranges, f)
+            with open(os.path.join(path, f"part-{i}.warc.gz"), "wb") as f:
+                f.write(warc_bytes(shard, gzip_members=True))
         with open(done, "w"):
             pass
     return path
-
-
-def q_warc_range_fetch(spark, sf):
-    """Selective range fetch (warc.read_warc_ranges — the CDX->WARC
-    path): fetch every record of the authored fixture by its
-    (filename, offset, length) byte range instead of scanning files;
-    the result must equal the whole-file parse, so it shares
-    warc_ingest's documents-derived SQL oracle — seek framing, per-
-    member gzip decode and range bookkeeping are all in the compared
-    surface."""
-    import json
-
-    from dqc_spark.warc import read_warc_ranges
-
-    path = _warc_fixture_dir(spark, sf)
-    with open(os.path.join(path, "ranges.json")) as f:
-        ranges = json.load(f)
-    sel = spark.createDataFrame(
-        [(r[0], int(r[1]), int(r[2])) for r in ranges],
-        "filename string, offset long, length long")
-    return read_warc_ranges(spark, sel, path).select(
-        "url", "warc_ts", F.length("html").cast("long").alias("n_bytes"))
 
 
 # stand-in 'toxic' terms for the synthetic corpus (real deployments
@@ -2461,64 +2205,6 @@ def _moji_oracle_sql() -> str:
         FROM documents
         GROUP BY 1, 2
     """
-
-
-def _cdx_fixture_path(spark, sf) -> str:
-    """Author a CDXJ index FROM the documents table (every field a
-    deterministic function of doc_id/text) so the DuckDB oracle can
-    recompute the parsed output without reading CDXJ.  Same
-    content-addressed /tmp cache pattern as the WARC fixture."""
-    import datetime
-    import hashlib
-
-    from dqc_spark.cdx import cdxj_line
-
-    docs = _t(spark, sf, "documents").filter(
-        (F.col("doc_id") < 128) & F.col("text").isNotNull())
-    rows = sorted(docs.select("doc_id", "text").collect(),
-                  key=lambda r: r.doc_id)
-    h = hashlib.md5()
-    for r in rows:
-        h.update(str(r.doc_id).encode())
-        h.update(r.text.encode())
-    path = f"/tmp/dqc_cdx_fixture_{h.hexdigest()[:12]}.cdxj"
-    if not os.path.exists(path):
-        base = datetime.datetime(2025, 1, 1)
-        lines = []
-        for r in rows:
-            d = int(r.doc_id)
-            ts = base + datetime.timedelta(seconds=d)
-            lines.append(cdxj_line(
-                f"test)/d{d}", ts.strftime("%Y%m%d%H%M%S"),
-                {
-                    "url": f"http://cdx.test/d{d}",
-                    "mime": "text/html" if d % 3 else "image/png",
-                    "status": "200" if d % 4 else "404",
-                    "digest": hashlib.md5(r.text.encode()).hexdigest(),
-                    "length": str(len(r.text.encode("utf-8"))),
-                    "offset": str(d * 1000),
-                    "filename": f"crawl-{d % 2}.warc.gz",
-                    "languages": "eng",
-                },
-            ))
-        lines.append("truncated garbage tail")  # must be dropped
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines))
-        os.replace(tmp, path)
-    return path
-
-
-def q_cdx_select(spark, sf):
-    """CDXJ index differential (cdx.py): parse the authored index with
-    the pure-Catalyst reader, prune to fetchable captures
-    (status 200 + text/html), and compare every parsed field — line
-    split, from_json, 14-digit timestamp decode, casts and the
-    selection predicate are all in the compared surface."""
-    from dqc_spark.cdx import read_cdxj, select_captures
-
-    idx = read_cdxj(spark, _cdx_fixture_path(spark, sf))
-    return select_captures(idx, dedup_digest=False).drop("languages")
 
 
 # (robots_txt or None, path, expected-allowed-for-'*') — expectations
@@ -2941,13 +2627,9 @@ def extra_queries():
         "olap_lang_source_pivot": q_lang_source_pivot,
         "setop_customers_with_orders": q_customers_with_orders,
         "olap_rich_idle_customers": q_rich_idle_customers,
-        "olap_sessionization": q_sessionization,
-        "olap_asof_join": q_asof_join,
         "olap_value_percentiles": q_value_percentiles,
         "olap_moving_avg": q_moving_avg,
         "olap_value_percentiles_approx": q_value_percentiles_approx,
-        "olap_range_join": q_range_join,
-        "olap_rollup_daily": q_rollup_daily,
         "olap_events_windowed": q_events_windowed,
         "sample_hash_10pct": q_sample_hash,
         "sample_stratified_quota": q_sample_stratified,
@@ -2960,7 +2642,6 @@ def extra_queries():
         "dedup_ngram_jaccard": q_ngram_jaccard,
         "text_cdc_chunks": q_cdc_chunks,
         "ann_topk_arrow": q_ann_topk_arrow,
-        "ann_quantized_topk": q_ann_quantized_topk,
         "ann_ivf_fullprobe": q_ann_ivf_fullprobe,
         "pipeline_curate": q_pipeline_curate,
         "text_decontaminate": q_decontaminate,
@@ -2969,21 +2650,15 @@ def extra_queries():
         "order_training_positions": q_training_order,
         "text_compression_ratio": q_compression_ratio,
         "text_line_dedup": q_line_dedup,
-        "text_substr_dedup": q_substr_dedup,
         "mix_temperature_sample": q_mix_temperature,
-        "olap_session_window_native": q_session_window_native,
         "profile_documents": q_profile_documents,
         "profile_histogram_nchars": q_histogram_nchars,
         "eval_pr_curve": q_pr_curve,
         "eval_threshold_choice": q_threshold_choice,
         "quality_model_fit": q_quality_model,
-        "dsir_select": q_dsir_select,
-        "text_bpe_token_counts": q_bpe_token_counts,
-        "text_unigram_token_counts": q_unigram_token_counts,
         "text_c4_line_filter": q_c4_line_filter,
         "html_noindex": q_html_noindex,
         "snapshot_drift_by_source": q_snapshot_drift,
-        "text_heavy_hitters_top10": q_heavy_hitters,
         "pack_first_fit_bins": q_pack_first_fit,
         "text_hashed_tfidf": q_hashed_tfidf,
         "url_canonicalize": q_url_canonicalize,
@@ -2991,7 +2666,6 @@ def extra_queries():
         "html_extract_text": q_html_extract,
         "url_domain_filter": q_url_domain_filter,
         "url_dedup_canonical": q_url_dedup_canonical,
-        "bucket_split_by_lang": q_bucket_split,
         "text_repetition": q_text_repetition,
         "text_repetition_ngrams": q_text_repetition_ngrams,
         "graph_domain_edges": q_graph_domain_edges,
@@ -3016,8 +2690,6 @@ def extra_queries():
         "wet_ingest": q_wet_ingest,
         "text_fix_mojibake": q_fix_mojibake,
         "robots_gate_verdicts": q_robots_gate,
-        "cdx_select_captures": q_cdx_select,
-        "warc_range_fetch": q_warc_range_fetch,
         "order_shard_assign": q_shard_assign,
         "pack_fixed_sequences": q_pack_sequences,
         "text_toxicity_scores": q_toxicity_scores,
@@ -3188,16 +2860,6 @@ def extra_oracle_sql():
             FROM documents
             WHERE doc_id < 128 AND text IS NOT NULL
         """,
-        # range fetch must reproduce the whole-file parse exactly
-        "warc_range_fetch": """
-            SELECT 'http://warc.test/doc/' || CAST(doc_id AS VARCHAR)
-                     AS url,
-                   TIMESTAMP '2025-01-01 00:00:00'
-                     + doc_id * INTERVAL '1 second' AS warc_ts,
-                   CAST(octet_length(ENCODE(text)) AS BIGINT) AS n_bytes
-            FROM documents
-            WHERE doc_id < 128 AND text IS NOT NULL
-        """,
         # encoding repair: planted-literal spec oracle (clean expected
         # strings only; the corrupt inputs live on the Spark side)
         "text_fix_mojibake": _moji_oracle_sql(),
@@ -3205,23 +2867,6 @@ def extra_oracle_sql():
         "robots_gate_verdicts": _robots_oracle_sql(),
         # toxicity: int-ratio double over the shared tokenizer SQL
         "text_toxicity_scores": _toxicity_oracle_sql(),
-        # CDXJ index: every parsed field recomputed from documents
-        "cdx_select_captures": """
-            SELECT 'test)/d' || CAST(doc_id AS VARCHAR) AS urlkey,
-                   TIMESTAMP '2025-01-01 00:00:00'
-                     + doc_id * INTERVAL '1 second' AS capture_ts,
-                   'http://cdx.test/d' || CAST(doc_id AS VARCHAR) AS url,
-                   'text/html' AS mime,
-                   '200' AS status,
-                   md5(text) AS digest,
-                   CAST(octet_length(ENCODE(text)) AS BIGINT) AS length,
-                   doc_id * 1000 AS "offset",
-                   'crawl-' || CAST(doc_id % 2 AS VARCHAR) || '.warc.gz'
-                     AS filename
-            FROM documents
-            WHERE doc_id < 128 AND text IS NOT NULL
-              AND doc_id % 4 <> 0 AND doc_id % 3 <> 0
-        """,
         # attribute store: the f CTE mirrors the quality_scores
         # spelling above; raw-double threshold compares are safe (same
         # int-ratio expression in both engines -> identical bits)
@@ -3735,19 +3380,6 @@ def extra_oracle_sql():
                    AS fingerprint
             FROM documents
         """,
-        # exact top-10 words, brute force — the Spark side reaches the
-        # same rows through the MG-candidates + rescore path, which is
-        # exact whenever the 10th frequency exceeds n/(k+1)
-        "text_heavy_hitters_top10": f"""
-            WITH w AS (
-              SELECT {_FTOKS_SQL} AS toks
-              FROM documents
-            ), g AS (
-              SELECT unnest(toks) AS word FROM w
-            )
-            SELECT word, COUNT(*) AS n_occurrences FROM g GROUP BY 1
-            ORDER BY n_occurrences DESC, word LIMIT 10
-        """,
         "lm_word_counts": f"""
             WITH w AS (
               SELECT {_FTOKS_SQL} AS toks
@@ -3891,27 +3523,6 @@ def extra_oracle_sql():
                               WHERE o.o_custkey = c.c_custkey)
             GROUP BY c_mktsegment
         """,
-        "olap_range_join": """
-            WITH iv AS (
-              SELECT user_id, MIN(ts) AS win_start, MAX(ts) AS win_end
-              FROM events WHERE event_type = 'view'
-              GROUP BY user_id, date_trunc('day', ts)
-            ), p AS (
-              SELECT event_id, user_id, ts FROM events
-              WHERE event_type = 'purchase'
-            )
-            SELECT p.event_id, p.user_id, iv.win_start, iv.win_end
-            FROM p JOIN iv ON p.user_id = iv.user_id
-                          AND p.ts BETWEEN iv.win_start AND iv.win_end
-        """,
-        "olap_rollup_daily": """
-            SELECT date_trunc('day', ts) AS day, event_type,
-                   COUNT(*) AS n,
-                   ROUND(SUM(value), 4) AS sum_value,
-                   MIN(value) AS min_value,
-                   MAX(value) AS max_value
-            FROM events GROUP BY 1, 2
-        """,
         "olap_value_percentiles": """
             SELECT event_type,
                    quantile_cont(value, 0.5) AS p50,
@@ -3938,38 +3549,6 @@ def extra_oracle_sql():
                    TRUE AS approx_within_band,
                    COUNT(*) AS n
             FROM events GROUP BY 1
-        """,
-        "olap_asof_join": """
-            WITH clicks AS (
-              SELECT event_id, user_id, ts, value FROM events
-              WHERE event_type = 'click'
-            ), purchases AS (
-              SELECT user_id, ts, MAX(value) AS value FROM events
-              WHERE event_type = 'purchase' GROUP BY 1, 2
-            )
-            SELECT c.event_id, c.user_id, p.ts AS asof_ts,
-                   p.value AS asof_value
-            FROM clicks c ASOF LEFT JOIN purchases p
-              ON c.user_id = p.user_id AND c.ts >= p.ts
-        """,
-        "olap_sessionization": """
-            WITH s AS (
-              SELECT user_id, ts,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                            OR epoch(ts) - epoch(lag(ts) OVER w) > 1800.0
-                          THEN 1 ELSE 0 END AS ns
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-            ), t AS (
-              SELECT user_id, ts,
-                     SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
-                                   ROWS UNBOUNDED PRECEDING) AS session_id
-              FROM s
-            )
-            SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-                   COUNT(*) AS n_events,
-                   ROUND(MAX(epoch(ts)) - MIN(epoch(ts)), 4) AS duration_s
-            FROM t GROUP BY 1, 2
         """,
         "profile_documents": """
             SELECT 'doc_id' AS column,
@@ -4083,29 +3662,6 @@ def extra_oracle_sql():
                          * 10000) / 10000 AS hi,
                    h.n
             FROM h, b
-        """,
-        # gap-and-islands with > (events exactly gap apart MERGE in
-        # Spark's session_window — empirically verified); session end =
-        # last event + gap, matching the native operator
-        "olap_session_window_native": """
-            WITH s AS (
-              SELECT user_id, ts,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                            OR epoch(ts) - epoch(lag(ts) OVER w) > 1800.0
-                          THEN 1 ELSE 0 END AS ns
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-            ), t AS (
-              SELECT user_id, ts,
-                     SUM(ns) OVER (PARTITION BY user_id ORDER BY ts
-                                   ROWS UNBOUNDED PRECEDING) AS sid
-              FROM s
-            )
-            SELECT user_id,
-                   MIN(ts) AS s_start,
-                   MAX(ts) + INTERVAL '30 minutes' AS s_end,
-                   COUNT(*) AS n_events
-            FROM t GROUP BY user_id, sid
         """,
         "olap_events_windowed": """
             SELECT time_bucket(INTERVAL '6 hours', ts) AS ws, event_type,
@@ -4228,16 +3784,6 @@ def extra_oracle_sql():
             ) WHERE rn = 1
         """,
         "ann_topk_arrow": f"""
-            SELECT vec_id,
-                   ROUND(list_cosine_similarity(
-                       CAST(embedding AS DOUBLE[]),
-                       (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-                        WHERE vec_id = {_QUERY_VEC_ID})), 4) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id LIMIT 10
-        """,
-        # int8 candidates + exact rescore -> must equal brute force
-        "ann_quantized_topk": f"""
             SELECT vec_id,
                    ROUND(list_cosine_similarity(
                        CAST(embedding AS DOUBLE[]),
@@ -4441,49 +3987,6 @@ def extra_oracle_sql():
         # 8-word wrap); 'first occurrence' = ROW_NUMBER over
         # (doc_id, line_no), the SQL spelling of the skew-safe
         # min(struct) winner election
-        # substring dedup: winner = lexicographic min (doc_id, pos) over
-        # each duplicated 10-word gram; a word is removed iff covered by
-        # a non-winner occurrence.  Composite BIGINT doc_id*2^20+pos
-        # mirrors Spark's min(struct(key,pos)) — valid while pos < 2^20
-        # (documents cap out far below).  COALESCE(text,'') makes NULL
-        # docs tokenize to [] (n_words 0), matching the kernel.
-        "text_substr_dedup": f"""
-            WITH toks AS (
-              SELECT doc_id,
-                     {_WSTOKS_SQL} AS w
-              FROM documents
-            ), g AS (
-              -- scalar generate_series returns a LIST; parallel unnests
-              -- zip (the lateral table-function form rejects column
-              -- bounds in this DuckDB build)
-              SELECT doc_id,
-                     unnest(list_transform(
-                       generate_series(1, len(w) - 9), i -> i - 1)) AS pos,
-                     unnest(list_transform(
-                       generate_series(1, len(w) - 9),
-                       i -> array_to_string(w[i:i+9], ' '))) AS gram
-              FROM toks WHERE len(w) >= 10
-            ), win AS (
-              SELECT gram, MIN(doc_id * 1048576 + pos) AS wk,
-                     COUNT(*) AS n
-              FROM g GROUP BY gram
-            ), dup AS (
-              SELECT g.doc_id, g.pos
-              FROM g JOIN win ON g.gram = win.gram
-              WHERE win.n >= 2 AND g.doc_id * 1048576 + g.pos <> win.wk
-            ), cov AS (
-              SELECT DISTINCT doc_id,
-                     unnest(generate_series(pos, pos + 9)) AS wp
-              FROM dup
-            ), ncov AS (
-              SELECT doc_id, COUNT(*) AS nc FROM cov GROUP BY doc_id
-            )
-            SELECT toks.doc_id,
-                   CAST(len(toks.w) AS INTEGER) AS n_words,
-                   CAST(len(toks.w) - COALESCE(ncov.nc, 0) AS INTEGER)
-                     AS n_words_kept
-            FROM toks LEFT JOIN ncov ON toks.doc_id = ncov.doc_id
-        """,
         "text_line_dedup": rf"""
             WITH src AS (
               SELECT doc_id,
@@ -4782,20 +4285,6 @@ def extra_oracle_sql():
                     FROM canon
                 ) GROUP BY c
             )
-        """,
-        # independent mechanism: ROW_NUMBER window per language vs
-        # Spark's range-shuffle + offsets-join rank; bucket math is
-        # pure integer division on both sides (no float thresholds)
-        "bucket_split_by_lang": """
-            WITH r AS (
-                SELECT doc_id, lang,
-                       ROW_NUMBER() OVER (PARTITION BY lang
-                           ORDER BY length(text), doc_id) - 1 AS rk,
-                       COUNT(*) OVER (PARTITION BY lang) AS n
-                FROM documents
-            )
-            SELECT doc_id, lang, CAST((3 * rk) // n AS BIGINT) AS bucket
-            FROM r
         """,
         # independent extraction mechanism: regexp_extract_all + unnest
         # vs the Arrow href kernel (urljoin/entity handling exercised

@@ -34,10 +34,9 @@ rounds carried two spellings (an ASCII one for the DuckDB oracles, a
 family dissolved that split because it is BOTH DuckDB-expressible
 (``wordhash.fold_tokens_sql``) and Unicode-whitespace-complete (NBSP
 included), so train-time vocabularies, score-time lookups
-(``textmodels.perplexity``/``kn_perplexity``), BPE pre-words, heavy
-hitters, and the SQL oracles now agree by construction.  CJK text
-trains per-codepoint grams (the CCNet fallback) instead of one giant
-"word" per unbroken run.
+(``textmodels.perplexity``/``kn_perplexity``) and the SQL oracles now
+agree by construction.  CJK text trains per-codepoint grams (the CCNet
+fallback) instead of one giant "word" per unbroken run.
 
 Reference parity: the reference (data_quality_checker) has no model
 training; this is §2.5 training-data surface per the web-corpus north
@@ -67,15 +66,8 @@ __all__ = [
     "lm_from_df",
 ]
 
-# one shared spelling (see module docstring); the old dual names are
-# kept as aliases because heavyhitters/bpe parameterize on them
-_scorer_tokens = fold_tokens
-_oracle_tokens = fold_tokens
-
-
 def _count_rows(
     df: DataFrame, text_col: str, n: int, vocab: frozenset | None = None,
-    tokenizer=_oracle_tokens,
 ) -> DataFrame:
     """Per-batch pre-aggregated (gram, cnt) partials from one Arrow
     kernel.  ``n=1`` emits words, ``n=2`` space-joined bigrams; with
@@ -100,7 +92,7 @@ def _count_rows(
         for pdf in batches:
             c: Counter = Counter()
             for text in pdf[text_col]:
-                toks = tokenizer(text)
+                toks = fold_tokens(text)
                 if n == 1:
                     c.update(toks)
                 elif voc is None:
@@ -119,12 +111,9 @@ def _count_rows(
 
 def cap_top_words(items, cap: int | None) -> dict:
     """THE (count desc, key asc) cap tie-break, as one python function:
-    LOAD-BEARING for exact Spark-vs-python parity, shared by
-    ``_prune``'s vocab cap, ``bpe._cap_words`` and
-    ``unigramlm.train_unigram_py`` — a drifting copy silently breaks a
-    pinned trainer-parity test in only one consumer.  The Spark twin is
-    ``capped_word_freqs``' orderBy below (the one spelling that cannot
-    share code)."""
+    LOAD-BEARING for exact Spark-vs-python parity of ``_prune``'s vocab
+    cap.  The Spark twin is ``capped_word_freqs``' orderBy below (the
+    one spelling that cannot share code)."""
     items = list(items)
     if cap is None or len(items) <= cap:
         return dict(items)
@@ -136,17 +125,15 @@ def capped_word_freqs(
     df: DataFrame,
     text_col: str = "text",
     max_words: int | None = None,
-    tokenizer=_oracle_tokens,
 ) -> Counter:
     """Distributed word counts, capped to the ``max_words`` most
-    frequent, collected to a driver Counter — the shared
-    bounded-model-input block for LM training (here) and BPE training
-    (bpe.py).  The cap tie-break (count desc, word asc) is LOAD-BEARING
-    for exact Spark-vs-python parity in both consumers: one source of
-    truth (the python spelling is ``cap_top_words`` above).
+    frequent, collected to a driver Counter — the bounded vocabulary
+    input of LM training.  The cap tie-break (count desc, word asc) is
+    LOAD-BEARING for exact Spark-vs-python parity: one source of truth
+    (the python spelling is ``cap_top_words`` above).
     TakeOrderedAndProject — per-partition heaps, no global sort."""
     wc = (
-        _count_rows(df, text_col, 1, tokenizer=tokenizer)
+        _count_rows(df, text_col, 1)
         .groupBy(F.col("gram").alias("word"))
         .agg(F.sum("cnt").alias("n"))
     )
@@ -167,12 +154,11 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 def bigram_counts(
     df: DataFrame, text_col: str = "text",
     vocab: frozenset | None = None,
-    tokenizer=_oracle_tokens,
 ) -> DataFrame:
     """(gram, n_occurrences) with ``gram`` the space-joined word pair;
     bigrams never cross document boundaries."""
     return (
-        _count_rows(df, text_col, 2, vocab, tokenizer=tokenizer)
+        _count_rows(df, text_col, 2, vocab)
         .groupBy("gram")
         .agg(F.sum("cnt").alias("n_occurrences"))
     )
@@ -218,7 +204,7 @@ def train_lm_py(
     uni: Counter = Counter()
     bi: Counter = Counter()
     for t in texts:
-        toks = _scorer_tokens(t)
+        toks = fold_tokens(t)
         uni.update(toks)
         bi.update(zip(toks, toks[1:]))
     return _prune(uni, bi, max_vocab, min_count, max_bigrams, k)
@@ -245,11 +231,9 @@ def train_bigram_lm(
     Tokenization is the shared ``wordhash.fold_tokens`` — identical to
     what ``textmodels.perplexity`` sees at scoring time (see the module
     docstring)."""
-    uni = capped_word_freqs(df, text_col, max_vocab,
-                            tokenizer=_scorer_tokens)
+    uni = capped_word_freqs(df, text_col, max_vocab)
     vocab = frozenset(uni)
-    bc = bigram_counts(df, text_col, vocab=vocab,
-                       tokenizer=_scorer_tokens).filter(
+    bc = bigram_counts(df, text_col, vocab=vocab).filter(
         F.col("n_occurrences") >= min_count)
     if max_bigrams is not None:
         # tiebreak on the (a, b) WORD PAIR, exactly like _prune's tuple

@@ -154,8 +154,8 @@ def epoch_mix_plan(
     tiny source (capped sources emit exactly ``max_epochs`` full passes
     and no partial).  A NULL source is a source (own plan row).
 
-    Units are documents by default; pass ``weight_col`` (e.g. a token
-    count from ``bpe_token_counts``) to budget in TOKENS — the unit
+    Units are documents by default; pass ``weight_col`` (e.g. a
+    per-document token count) to budget in TOKENS — the unit
     production mixes are actually specified in.  ``budget_docs`` is
     then a unit budget; shares, quota and epochs are computed over the
     per-source weight sums, and the partial pass realizes its unit

@@ -62,8 +62,8 @@ def pack_sequences(
     the document touches.  Zero-token documents (possible only with
     ``eos_tokens=0``) occupy no window: NULL seq range, ``n_seqs`` 0.
 
-    Pass ``tokens_col`` to pack by a real tokenizer's counts (e.g.
-    ``bpe.bpe_token_counts`` output) instead of the whitespace rule.
+    Pass ``tokens_col`` to pack by a real tokenizer's per-document
+    counts instead of the whitespace rule.
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be positive")

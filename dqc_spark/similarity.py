@@ -179,7 +179,7 @@ def _stack_or_salvage(vals, dim: int) -> np.ndarray:
 def stack_embeddings(vals) -> np.ndarray:
     """``_stack_or_salvage`` with the dim inferred from the batch's
     first non-NULL row — for the vector kernels that take no dim
-    argument (ivf/vecquant/semdedup).  An all-NULL batch stacks to a
+    argument (ivf/semdedup).  An all-NULL batch stacks to a
     (n, 1) zero matrix (zero norms; every caller already guards
     zero-norm rows)."""
     dim = next((len(v) for v in vals if v is not None), 0)

@@ -88,7 +88,7 @@ def stream_dedup_first_seen(
     NULL-content rows (md5(text) IS NULL) BYPASS the stateful operator
     and are always emitted: NULL is the absence of content, not shared
     content, so two NULL-text docs are not duplicates of each other —
-    the same null-digest convention snapshot.new_docs and CDX dedup pin
+    the same null-digest convention snapshot.new_docs pins
     (grouping them would silently drop every NULL-text doc after the
     first, forever, across the whole stream).
     """

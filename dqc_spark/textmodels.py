@@ -203,7 +203,7 @@ def build_kn(lm: dict, discount: float = 0.75) -> dict:
     literal NUL (stripped upstream by the normalizer/scrubber) would
     mis-attribute its continuation counts.  Returns a dict with
     ``kind='kn'`` — ``perplexity`` dispatches on it, so every consumer
-    (scoring UDFs, DSIR, CCNet buckets) accepts a KN model unchanged.
+    (the scoring UDFs) accepts a KN model unchanged.
     """
     if not 0.0 < discount <= 1.0:
         # D=0 makes an unseen bigram under a seen context p=0 (log

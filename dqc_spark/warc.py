@@ -241,8 +241,8 @@ def read_warc(spark: SparkSession, path: str,
     truncated members, bad lengths; see ``parse_warc_records``) to each
     row, so corruption rates are auditable per file from the output
     itself.  A file so broken it yields ZERO rows carries no rows to
-    ride on — reconcile against the crawl index (``cdx.fetch_plan``)
-    when complete file-level accounting matters.
+    ride on — reconcile against the crawl's own file listing when
+    complete file-level accounting matters.
     """
     schema = PAGES_SCHEMA if not with_errors else T.StructType(
         list(PAGES_SCHEMA) + [T.StructField("warc_path", T.StringType()),
@@ -329,66 +329,6 @@ def wet_to_pages(spark: SparkSession, path: str) -> DataFrame:
 
     pages = with_langid(read_wet(spark, path), "text")
     return pages.withColumnRenamed("lang_pred", "lang").drop("lang_conf")
-
-
-def warc_bytes_with_index(rows) -> tuple[bytes, list[tuple[int, int]]]:
-    """warc_bytes(gzip_members=True) plus each record's (offset, length)
-    inside the file — what a CDX index stores.  Fixture/test authoring
-    side of the selective-fetch path."""
-    out = io.BytesIO()
-    index: list[tuple[int, int]] = []
-    for url, ts_iso, body in rows:
-        member = gzip.compress(warc_record_bytes(url, ts_iso, body), mtime=0)
-        index.append((out.tell(), len(member)))
-        out.write(member)
-    return out.getvalue(), index
-
-
-def read_warc_ranges(spark: SparkSession, selected: DataFrame,
-                     base_dir: str) -> DataFrame:
-    """Selective fetch: read ONLY the byte ranges an index selected
-    (cdx.select_captures output or any (filename, offset, length)
-    frame) — each range is one gzip member holding one record, per the
-    .warc.gz convention, so a capture costs one seek + one bounded
-    read instead of a whole-file scan.  Ranges are repartitioned and
-    sorted by filename so each task opens a file once and reads it
-    forward; on object storage the same kernel becomes range GETs."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
-
-        for pdf in batches:
-            pdf = pdf.sort_values(["filename", "offset"])
-            urls, tss, bodies = [], [], []
-            cur_name, fh = None, None
-            try:
-                for fname, off, length in zip(
-                        pdf["filename"], pdf["offset"], pdf["length"]):
-                    if fname != cur_name:
-                        if fh is not None:
-                            fh.close()
-                        fh = open(os.path.join(base_dir, fname), "rb")
-                        cur_name = fname
-                    fh.seek(int(off))
-                    blob = fh.read(int(length))
-                    for url, ts, body in parse_warc_records(blob):
-                        urls.append(url)
-                        tss.append(ts)
-                        bodies.append(body)
-            finally:
-                if fh is not None:
-                    fh.close()
-            yield pd.DataFrame({
-                "url": urls,
-                "warc_ts": pd.to_datetime(
-                    pd.Series(tss, dtype="object"), utc=True,
-                    errors="coerce").dt.tz_localize(None),
-                "html": bodies,
-            })
-
-    sel = selected.select("filename", "offset", "length") \
-        .repartition("filename")
-    return sel.mapInPandas(kernel, schema=PAGES_SCHEMA)
 
 
 def warc_to_pages(

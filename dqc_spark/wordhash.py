@@ -1,10 +1,10 @@
 """Shared Unicode-portable tokenizer family + md5 word-hash identity.
 
-The substring-dedup shingles, decontam grams, LM/heavy-hitter gram
-tables, anchor terms, hashed-TF-IDF buckets, and BM25 posting stream —
-plus their DuckDB differential oracles — depend on EXACTLY this
-tokenization and word identity; a drifting per-module copy would
-silently break an oracle, so they all import from here.
+The decontam grams, LM gram tables, anchor terms, hashed-TF-IDF
+buckets, and BM25 posting stream — plus their DuckDB differential
+oracles — depend on EXACTLY this tokenization and word identity; a
+drifting per-module copy would silently break an oracle, so they all
+import from here.
 
 Three-engine discipline (the ``htmlextract`` rule): every class below
 is ONE literal string that parses identically as a Java regex
@@ -85,7 +85,6 @@ __all__ = [
     "fold_case_col",
     "fold_case_sql",
     "fold_tokens",
-    "join_tokens",
     "fold_tokens_col",
     "fold_tokens_sql",
     "unicode_tokens",
@@ -122,16 +121,16 @@ CJK_GROUP = f"([{CJK_CLASS}])"
 # python parse time, so every leg interpolates identical characters.
 #
 # Only the GRAM-IDENTITY families segment this way (``fold_tokens`` —
-# LM/TF-IDF/decontam/heavy-hitters/DSIR — and ``unicode_alnum_tokens``
-# — BM25): none of their consumers ever rebuilds output text, so the
-# segmentation is free.  ``unicode_tokens`` (the REBUILD family:
-# substr-dedup's token stream that ``join_tokens`` re-joins) stays
-# UN-segmented for these scripts: a no-separator rejoin — correct for
-# CJK, whose running text has no spaces — would here delete the real
-# phrase-boundary spaces of every untouched Thai/Lao/Khmer/Myanmar
-# document (the CLAUDE.md CJK-rebuild failure mode, one script family
-# over).  Consequence, documented: ExactSubstr sees an unbroken SEA
-# phrase as one token; LM/BM25/decontam see clusters.
+# LM/TF-IDF/decontam — and ``unicode_alnum_tokens`` — BM25): none of
+# their consumers ever rebuilds output text, so the segmentation is
+# free.  ``unicode_tokens`` (the whitespace family) stays UN-segmented
+# for these scripts: rebuilding text from clusters with a no-separator
+# rejoin — correct for CJK, whose running text has no spaces — would
+# delete the real phrase-boundary spaces of every untouched
+# Thai/Lao/Khmer/Myanmar document (the CJK-rebuild failure mode, one
+# script family over).  Consequence, documented: the
+# whitespace family sees an unbroken SEA phrase as one token;
+# LM/BM25/decontam see clusters.
 SEA_MARK_CLASS = (
     "\u0e31\u0e33-\u0e3a\u0e47-\u0e4e"    # Thai dependent vowels/tones
     "\u0eb1\u0eb3-\u0ebc\u0ec8-\u0ecd"    # Lao dependent vowels/tones
@@ -235,32 +234,6 @@ def unicode_tokens(text: str | None) -> list[str]:
     return [x for x in _UWS_RE.split(cjk_isolate(t)) if x]
 
 
-def join_tokens(tokens: list[str]) -> str:
-    """Inverse-ish of ``unicode_tokens`` for rebuilt token streams:
-    single space between tokens EXCEPT between two CJK-ending/CJK-
-    starting neighbors.  ``unicode_tokens`` isolates every CJK
-    codepoint into its own token, so a plain ``' '.join`` would inject
-    a space between every character of CJK text — rewriting documents
-    that were never touched by dedup.  Joining CJK neighbors without a
-    separator restores the space-free script (the same convention
-    CCNet uses when un-doing character tokenization); original
-    whitespace elsewhere is still collapsed to single spaces, per the
-    C4-style token-stream contract.  On pure-ASCII tokens this is
-    exactly ``' '.join``."""
-    if not tokens:
-        return ""
-    parts = [tokens[0]]
-    cjk = _CJK_RE
-    prev_cjk = bool(cjk.fullmatch(tokens[0][-1]))
-    for t in tokens[1:]:
-        cur_cjk = bool(cjk.fullmatch(t[0]))
-        if not (prev_cjk and cur_cjk):
-            parts.append(" ")
-        parts.append(t)
-        prev_cjk = bool(cjk.fullmatch(t[-1]))
-    return "".join(parts)
-
-
 def unicode_alnum_tokens(text: str | None) -> list[str]:
     """BM25-family tokens: fold case, isolate CJK codepoints and SEA
     clusters, split on not-(letter|digit).  Matches the Catalyst plan
@@ -272,8 +245,8 @@ def unicode_alnum_tokens(text: str | None) -> list[str]:
 
 def fold_tokens(text: str | None) -> list[str]:
     """Case-folded gram-identity tokens — the LM-family tokenizer
-    (LM gram tables, perplexity scoring, BPE pre-words, DSIR features,
-    heavy hitters, decontam grams, anchor terms, TF-IDF buckets).
+    (LM gram tables, perplexity scoring, decontam grams, anchor terms,
+    TF-IDF buckets).
     Whitespace family plus SEA cluster isolation (no consumer of this
     family rebuilds output text — see the SEA_* note).  Train-time and
     score-time vocabularies agree BY CONSTRUCTION: every one of those

@@ -56,3 +56,18 @@ def test_oracle_check_rejects_unknown_query_name():
     )
     assert proc.returncode != 0
     assert "no_such_query" in proc.stdout + proc.stderr
+
+
+def test_heavy_list_names_registered_queries():
+    # `oracle_check.py --heavy` exits 2 on any unregistered name, so a
+    # query deleted from the registry must leave HEAVY too
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "oracle_check.py")
+    spec = importlib.util.spec_from_file_location("oracle_check", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    stale = set(mod.HEAVY) - set(E.queries())
+    assert not stale, f"HEAVY names unregistered queries: {stale}"

@@ -326,23 +326,6 @@ def test_repetition_signals_plan_has_no_shuffle(docs):
     assert "MapInPandas" in plan
 
 
-def test_score_buckets_no_single_partition_window(docs):
-    """Ranks come from the range-shuffled per-partition window
-    (ordering.py plan) — never row_number over an empty partitionBy."""
-    from dqc_spark.bucketsplit import score_buckets
-
-    out = score_buckets(
-        docs.select("doc_id", "lang", F.length("text").alias("s")),
-        "lang", "s", "doc_id", validate=False)
-    plan = plan_str(out)
-    # every Window node must be keyed by the range-partition id
-    for frag in plan.split("Window ")[1:]:
-        assert "__pid" in frag.split("\n")[0]
-    from dqc_spark.cache import release_all
-
-    release_all()
-
-
 def test_domain_edges_single_exchange(docs):
     """Kernel -> explode -> ONE groupBy exchange of domain pairs."""
     from dqc_spark.linkgraph import domain_edges

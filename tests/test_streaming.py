@@ -65,24 +65,6 @@ def test_windowed_counts_stream_matches_batch(spark, tmp_path):
     assert batch.exceptAll(got).count() == 0
 
 
-def test_streaming_session_window(spark, tmp_path):
-    from dqc_spark.sessions import streaming_session_counts
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = str(tmp_path / "ev2")
-    ev.write.parquet(src)
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 2).parquet(src))
-    q = (streaming_session_counts(stream, gap="30 minutes")
-         .writeStream.outputMode("complete")
-         .format("memory").queryName("sessout")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM sessout")
-    total = got.agg(F.sum("n_events")).first()[0]
-    assert total == ev.count()  # every event lands in exactly one session
-
-
 def test_stateful_first_seen_dedup_across_runs(spark, tmp_path):
     """applyInPandasWithState dedup: the seen-set survives micro-batches
     AND query restarts (state store in the checkpoint)."""
@@ -226,7 +208,7 @@ def test_watermark_drops_late_events_in_append_mode(spark, tmp_path):
 def test_stateful_dedup_null_text_passthrough(spark, tmp_path):
     """NULL-text docs carry no content evidence: they bypass the
     stateful seen-set (never collapse into one phantom group) and are
-    ALL emitted — the snapshot/CDX null-digest convention."""
+    ALL emitted — the snapshot null-digest convention."""
     import datetime as dt
 
     from dqc_spark.pagesgen import PAGES_SCHEMA

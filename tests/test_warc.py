@@ -190,63 +190,6 @@ def test_cli_ingest_warc_raw(capsys, spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# selective range fetch (the CDX -> WARC path)
-# ---------------------------------------------------------------------------
-
-
-def test_read_warc_ranges(spark, tmp_path):
-    from dqc_spark.warc import read_warc_ranges, warc_bytes_with_index
-
-    all_rows, sel_rows = [], []
-    for f in range(3):
-        rows = [(f"http://r.test/f{f}/p{i}", f"2025-02-0{1+f}T00:00:0{i}Z",
-                 f"<html>body {f}-{i}</html>".encode()) for i in range(5)]
-        data, index = warc_bytes_with_index(rows)
-        (tmp_path / f"chunk-{f}.warc.gz").write_bytes(data)
-        for i, (off, length) in enumerate(index):
-            all_rows.append((f"chunk-{f}.warc.gz", off, length, rows[i][0]))
-    # select every other capture, across all files
-    sel_rows = all_rows[::2]
-    sel = spark.createDataFrame(
-        [(f, o, l) for f, o, l, _ in sel_rows],
-        "filename string, offset long, length long")
-    out = read_warc_ranges(spark, sel, str(tmp_path)).collect()
-    assert sorted(r.url for r in out) == sorted(u for _, _, _, u in sel_rows)
-    by_url = {r.url: r for r in out}
-    assert bytes(by_url["http://r.test/f0/p0"].html) == b"<html>body 0-0</html>"
-    assert by_url["http://r.test/f1/p1"].warc_ts == datetime.datetime(
-        2025, 2, 2, 0, 0, 1)
-
-
-def test_cdx_to_warc_end_to_end(spark, tmp_path):
-    """The full index-directed path: author warc + cdxj together, prune
-    on the index, range-fetch only the selected captures."""
-    from dqc_spark.cdx import cdxj_line, read_cdxj, select_captures
-    from dqc_spark.warc import read_warc_ranges, warc_bytes_with_index
-
-    rows = [(f"http://e2e.test/p{i}", f"2025-03-01T00:00:{i:02d}Z",
-             f"<html>doc {i}</html>".encode()) for i in range(10)]
-    data, index = warc_bytes_with_index(rows)
-    (tmp_path / "seg.warc.gz").write_bytes(data)
-    lines = [cdxj_line(f"test,e2e)/p{i}", f"2025030100000{i}", {
-        "url": rows[i][0],
-        "mime": "text/html" if i % 2 else "application/pdf",
-        "status": "200",
-        "digest": f"D{i}",
-        "length": str(index[i][1]),
-        "offset": str(index[i][0]),
-        "filename": "seg.warc.gz",
-    }) for i in range(10)]
-    (tmp_path / "seg.cdxj").write_text("\n".join(lines))
-
-    idx = read_cdxj(spark, str(tmp_path / "seg.cdxj"))
-    picked = select_captures(idx, dedup_digest=False)
-    pages = read_warc_ranges(spark, picked, str(tmp_path)).collect()
-    assert sorted(r.url for r in pages) == [
-        rows[i][0] for i in range(10) if i % 2]
-
-
-# ---------------------------------------------------------------------------
 # WET (conversion records)
 # ---------------------------------------------------------------------------
 

@@ -51,7 +51,7 @@ def value_hash(pdf: pd.DataFrame) -> str:
 # the most expensive SQL-oracled entries — heaviest Python kernels,
 # widest shuffles, or float expressions with known SF-sensitivity
 HEAVY = [
-    "text_substr_dedup", "text_line_dedup", "text_boilerplate_removal",
+    "text_line_dedup", "text_boilerplate_removal",
     "text_bm25_topk", "text_bm25_batch", "text_decontaminate",
     "pack_fixed_sequences", "order_shard_assign", "mix_epoch_expand",
     "snaptable_diff", "corpus_report_by_lang", "html_main_content",
