@@ -321,10 +321,6 @@ def unique_violations(
     return out if with_counts else out.select(column)
 
 
-def filter_violations(df: DataFrame, pred: Column) -> DataFrame:
-    return df.filter(pred)
-
-
 def referential_violations(
     left: DataFrame, right: DataFrame, keys: Sequence[str], broadcast: bool = True
 ) -> DataFrame:

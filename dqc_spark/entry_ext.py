@@ -1,16 +1,20 @@
 """Extended driver-contract queries: training-data operators (dedup,
-similarity, text stats, relational/window coverage) over the driver
-testdata tables.  Split from __spark_entry__ so the entry file stays the
+similarity, text stats, curation, ingest) over the TPC-H-style test
+tables.  Split from __spark_entry__ so the entry file stays the
 thin contract; see queries()/oracle_sql() there."""
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
+import shutil
+import tempfile
+import uuid
 
 import numpy as np
 
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
 from dqc_spark.gates import ALL_STOPWORDS
 from dqc_spark.wordhash import unicode_alnum_tokens_sql, unicode_tokens_sql
@@ -48,35 +52,6 @@ def q_dedup_exact(spark, sf):
     from dqc_spark.dedup import exact_dup_groups
 
     return exact_dup_groups(_t(spark, sf, "documents"), "text")
-
-
-def q_dedup_distinct_count(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.agg(
-        F.count_distinct(F.md5("text")).alias("n_distinct"),
-        F.count(F.lit(1)).alias("n_total"),
-    )
-
-
-def q_approx_distinct(spark, sf):
-    # HLL++ sketch at 10^12-row scale replaces exact COUNT(DISTINCT).
-    # The sketch value itself is engine-specific, so the differential
-    # checks the PROPERTY: the exact count (oracle-matched) plus a
-    # boolean asserting the sketch landed within its configured rsd —
-    # the oracle hardcodes TRUE, so a drifting sketch hash-mismatches.
-    docs = _t(spark, sf, "documents")
-    agg = docs.agg(
-        F.count_distinct(F.md5("text")).alias("n_exact"),
-        F.approx_count_distinct(F.md5("text"), 0.02).alias("n_approx"),
-    )
-    return agg.select(
-        "n_exact",
-        (
-            F.abs(F.col("n_approx") - F.col("n_exact"))
-            / F.col("n_exact")
-            < 0.06  # 3x the configured rsd=0.02
-        ).alias("within_tolerance"),
-    )
 
 
 def q_minhash_near_dups(spark, sf):
@@ -278,122 +253,8 @@ def q_fingerprints(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# relational / window coverage
+# event windows
 # ---------------------------------------------------------------------------
-
-
-def q_pricing_summary(spark, sf):
-    # TPC-H Q1-shaped: the engine's bread-and-butter groupBy-agg
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            # floor-truncation, not ROUND: avg = sum/count is an integer
-            # ratio that can land exactly on a half-way decimal where the
-            # engines' rounding modes diverge (see _trunc4)
-            _trunc4(F.avg("l_quantity")).alias("avg_qty"),
-            # l_discount is an inexact double (0.01 steps), so AVG sums in
-            # engine-specific order -> different doubles -> FLOOR would flip
-            # at bucket boundaries.  Recover the exact ratio: round each
-            # value to integer cents (exact both engines), sum as BIGINT,
-            # divide once — both engines then floor the IDENTICAL double.
-            _trunc4(
-                F.sum(F.round(F.col("l_discount") * 100, 0).cast("bigint"))
-                / 100.0
-                / F.count(F.lit(1))
-            ).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_local_supplier_revenue(spark, sf):
-    # TPC-H Q5 shape: 6-table join chain with small-dim broadcasts.
-    # Join order/physical strategy is Catalyst's call: region+nation are
-    # broadcast (constant-folded filter first), customer/supplier hash-
-    # join against the orders-lineitem fact spine.
-    r = _t(spark, sf, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf, "nation")
-    c = _t(spark, sf, "customer")
-    s = _t(spark, sf, "supplier")
-    o = _t(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01")
-    )
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(
-            F.broadcast(s),
-            (li["l_suppkey"] == s["s_suppkey"])
-            & (c["c_nationkey"] == s["s_nationkey"]),
-        )
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
-
-
-def q_shipping_priority(spark, sf):
-    # TPC-H Q3 shape: join + agg + deterministic top-k
-    c = _t(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf, "orders").filter(F.col("o_orderdate") < "1996-06-30")
-    li = _t(spark, sf, "lineitem").filter(F.col("l_shipdate") > "1996-06-30")
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy("l_orderkey", F.col("o_orderdate").cast("timestamp_ntz").alias("o_orderdate"))
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_late_shipment_priority(spark, sf):
-    # TPC-H Q4 shape: correlated EXISTS — orders (one quarter) having at
-    # least one lineitem shipped >90 days after the order date, counted
-    # per priority.  The EXISTS compiles to a left-semi join with a
-    # non-equi residual; no correlated re-execution per row.
-    o = _t(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-04-01")
-    )
-    li = _t(spark, sf, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (o["o_orderkey"] == li["l_orderkey"])
-        & (li["l_shipdate"] > F.date_add(o["o_orderdate"], 90)),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
-
-
-def q_events_hourly(spark, sf):
-    ev = _t(spark, sf, "events")
-    return ev.groupBy(
-        F.date_trunc("hour", "ts").alias("hour"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
 
 
 def q_events_windowed(spark, sf):
@@ -410,218 +271,6 @@ def q_events_windowed(spark, sf):
         "event_type",
         "n",
         F.round("sum_value", 4).alias("sum_value"),
-    )
-
-
-def q_moving_avg(spark, sf):
-    # RANGE-frame window (interval preceding): per event_type, the
-    # trailing-6-hour moving average of value at each event time.
-    # Distinct machinery from the ROWS frames used elsewhere (packing):
-    # the frame is value-based on the ORDER BY column,
-    # so ties and gaps resolve by timestamp arithmetic, not row counts.
-    ev = _t(spark, sf, "events")
-    # ts is TIMESTAMP_NTZ: route through TIMESTAMP (session tz is UTC)
-    # to get the same epoch seconds DuckDB's epoch(ts) produces
-    w = (
-        W.partitionBy("event_type")
-        .orderBy(F.col("ts").cast("timestamp").cast("long"))
-        .rangeBetween(-6 * 3600, 0)
-    )
-    # exact-ratio trick (see avg_disc): values are stored 2-decimal, so
-    # sum integer cents — frame sums become BIGINT and both engines
-    # divide the IDENTICAL double.  A float SUM OVER the frame summed in
-    # engine-specific order flipped ROUND at ~0.2% of rows.
-    cents = F.round(F.col("value") * 100, 0).cast("bigint")
-    return (
-        ev.select(
-            "event_id",
-            "event_type",
-            F.col("ts").cast("timestamp_ntz").alias("ts"),
-            # FLOOR-trunc, not ROUND: cent-sum / count ratios land
-            # EXACTLY on x.xxxx5 half-way points where the engines'
-            # rounding modes diverge (the _trunc4 rule — both engines
-            # floor the identical double)
-            _trunc4(
-                F.sum(cents).over(w) / 100.0 / F.count(F.lit(1)).over(w)
-            ).alias("avg_6h"),
-            F.count(F.lit(1)).over(w).alias("n_6h"),
-        )
-    )
-
-
-def q_value_percentiles_approx(spark, sf):
-    # the SCALE path for #13-style quantile checks: percentile_approx
-    # keeps the aggregation on the codegen fast path (exact percentile
-    # forces ObjectHashAggregate).  The sketch value is engine-specific,
-    # so the differential checks the CONTRACT: exact quantiles
-    # (oracle-matched) plus booleans asserting the sketch landed within
-    # the configured accuracy's rank tolerance — the oracle hardcodes
-    # TRUE, so a drifting sketch hash-mismatches.
-    ev = _t(spark, sf, "events")
-    agg = ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50_exact"),
-        F.expr("percentile_approx(value, 0.5, 1000)").alias("p50_approx"),
-        F.expr("percentile(value, 0.05)").alias("p05"),
-        F.expr("percentile(value, 0.95)").alias("p95"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    # rank-accuracy contract: with accuracy=1000 the approx p50 sits
-    # within the central 5%..95% value band on any non-degenerate
-    # distribution (far looser than the true 1/1000 rank bound)
-    return agg.select(
-        "event_type",
-        "p50_exact",
-        (
-            (F.col("p50_approx") >= F.col("p05"))
-            & (F.col("p50_approx") <= F.col("p95"))
-        ).alias("approx_within_band"),
-        "n",
-    )
-
-
-def q_value_percentiles(spark, sf):
-    # grouped exact interpolated percentiles, emitted UNROUNDED:
-    # verified bit-identical to DuckDB quantile_cont on this data at
-    # sf0.01 and sf0.1 (both interpolate linearly over the same sorted
-    # doubles), so any future hash mismatch flags a real semantic
-    # change rather than a rounding artifact.  Exact percentile drags
-    # the agg onto ObjectHashAggregate — at 10^12 rows use
-    # percentile_approx (Check.median_between(approx=True) pattern)
-    ev = _t(spark, sf, "events")
-    return ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50"),
-        F.expr("percentile(value, 0.95)").alias("p95"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def q_lang_source_cube(spark, sf):
-    # grouping sets: per-lang x source audit rollup (SURVEY §2.3 — free
-    # with Catalyst; the NULL super-aggregate rows match ANSI semantics)
-    docs = _t(spark, sf, "documents")
-    return docs.cube("lang", "source").agg(
-        F.count(F.lit(1)).alias("n"),
-        _trunc4(F.avg("n_chars")).alias("avg_chars"),
-    )
-
-
-def q_customers_with_orders(spark, sf):
-    # left-semi join (the inverse of the referential anti-join): keep
-    # customers that DO have orders — the keep-side shape the pipeline
-    # uses for allowlists
-    cust = _t(spark, sf, "customer")
-    ords = _t(spark, sf, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return cust.join(ords, on="c_custkey", how="left_semi").select(
-        "c_custkey"
-    )
-
-
-def q_rich_idle_customers(spark, sf):
-    # TPC-H Q22 shape: scalar subquery (global AVG) + NOT EXISTS —
-    # above-average-balance customers who never ordered, per segment.
-    # The scalar aggregate broadcasts as a 1-row literal; the NOT EXISTS
-    # is a left-anti join.
-    cust = _t(spark, sf, "customer")
-    ords = _t(spark, sf, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    avg_bal = cust.agg(F.avg("c_acctbal")).first()[0]
-    return (
-        cust.filter(F.col("c_acctbal") > avg_bal)
-        .join(ords, on="c_custkey", how="left_anti")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_custs"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-        )
-    )
-
-
-def q_lang_source_pivot(spark, sf):
-    # pivot/cross-tab: per-lang doc counts across a fixed source list
-    # (explicit pivot values keep the schema deterministic and skip the
-    # extra distinct-values job Spark otherwise runs)
-    docs = _t(spark, sf, "documents")
-    srcs = ["src0", "src1", "src2", "src3"]
-    return (
-        docs.groupBy("lang")
-        .pivot("source", srcs)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, srcs)
-    )
-
-
-def q_customers_without_orders(spark, sf):
-    # set-op coverage: EXCEPT (anti-semantics at the set level)
-    cust = _t(spark, sf, "customer").select(F.col("c_custkey").alias("k"))
-    ords = _t(spark, sf, "orders").select(F.col("o_custkey").alias("k"))
-    return cust.exceptAll(ords.intersect(cust)).distinct()
-
-
-def q_big_order_customers(spark, sf):
-    # TPC-H Q18 shape: IN-subquery with HAVING — customers whose orders
-    # total more than 180 units of lineitem quantity.  The IN compiles
-    # to a left-semi join against the HAVING-filtered aggregate; the
-    # agg is map-side partial on l_orderkey before its single shuffle.
-    li = _t(spark, sf, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("tot_qty"))
-        .filter(F.col("tot_qty") > 180)
-    )
-    o = _t(spark, sf, "orders")
-    c = _t(spark, sf, "customer")
-    return (
-        o.join(big, o["o_orderkey"] == big["l_orderkey"])
-        .join(c, o["o_custkey"] == c["c_custkey"])
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            F.col("o_orderdate").cast("timestamp_ntz").alias("o_orderdate"),
-            # l_quantity is integer-valued, so the SUM is exact in both
-            # engines regardless of order — emit unrounded (raw-column
-            # rule: identical bits match directly, rounding only risks
-            # divergence)
-            "tot_qty",
-        )
-    )
-
-
-def q_cheapest_part_per_brand(spark, sf):
-    # TPC-H Q2 shape (adapted to the available tables): correlated
-    # scalar subquery — parts priced at their brand's minimum retail
-    # price.  Spark decorrelates this to a broadcast join against the
-    # per-brand MIN aggregate; no per-row re-execution.
-    p = _t(spark, sf, "part")
-    mins = p.groupBy(F.col("p_brand").alias("b")).agg(
-        F.min("p_retailprice").alias("min_price")
-    )
-    return (
-        p.join(
-            F.broadcast(mins),
-            (p["p_brand"] == mins["b"])
-            & (p["p_retailprice"] == mins["min_price"]),
-        )
-        .select(
-            "p_partkey", "p_brand",
-            # raw stored column: emit unrounded (see rounding rules)
-            F.col("p_retailprice").alias("retailprice"),
-        )
-    )
-
-
-def q_top_customers_per_nation(spark, sf):
-    cust = _t(spark, sf, "customer")
-    w = W.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        cust.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select(
-            "c_nationkey",
-            "c_custkey",
-            F.round("c_acctbal", 2).alias("acctbal"),
-            "rk",
-        )
     )
 
 
@@ -765,24 +414,15 @@ def q_text_chunks(spark, sf):
     )
 
 
-def q_events_json_kv(spark, sf):
-    # semi-structured extraction: JSON props field -> typed aggregate
-    ev = _t(spark, sf, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        _trunc4(
-            F.avg(F.get_json_object("props", "$.k").cast("double"))
-        ).alias("avg_k"),
-    )
-
-
 def q_column_exists(spark, sf):
     # reference check #5 (checker.go:224-262): catalog probe, no scan
+    from dqc_spark.checks import column_exists
+
     docs = _t(spark, sf, "documents")
-    cols = set(docs.columns)
     probes = ["text", "lang", "nope_col"]
     return spark.createDataFrame(
-        [(c, c in cols) for c in probes], "col string, present boolean"
+        [(c, column_exists(docs, c)) for c in probes],
+        "col string, present boolean"
     )
 
 
@@ -1938,45 +1578,78 @@ def q_langid_train_profile(spark, sf):
     return _cap_per_lang(trigram_counts(docs), 10)
 
 
+def _cached_fixture(name, rows, build, *code) -> str:
+    """The temp-dir path of a fixture that ``build(path)`` writes from
+    ``rows``, built once per key.  The key is the rows plus the source
+    of ``code`` (the fixture function and the writer module it calls),
+    so a change to either writes a fresh fixture instead of reusing a
+    stale one.  Built under a scratch name and renamed into place, so a
+    crashed half-build is never mistaken for done."""
+    h = hashlib.md5()
+    for r in rows:
+        h.update(repr(tuple(r)).encode())
+    for obj in code:
+        h.update(inspect.getsource(obj).encode())
+    root = os.path.join(tempfile.gettempdir(),
+                        f"dqc_{name}_fixture_{h.hexdigest()[:12]}")
+    if os.path.isdir(root):
+        return root
+    scratch = f"{root}.build-{uuid.uuid4().hex[:8]}"
+    build(scratch)
+    try:
+        os.rename(scratch, root)
+    except OSError:
+        # lost a concurrent-build race: the winner's fixture is complete
+        shutil.rmtree(scratch, ignore_errors=True)
+    return root
+
+
+def _doc_slice_rows(spark, sf):
+    docs = _t(spark, sf, "documents").filter(
+        (F.col("doc_id") < 128) & F.col("text").isNotNull())
+    return sorted(docs.select("doc_id", "text").collect(),
+                  key=lambda r: r.doc_id)
+
+
+def _write_shards(path, rows, url_prefix, body, write, suffix):
+    """Write ``rows`` as 4 shards (by doc_id % 4) of (url, ISO ts,
+    body(text)) records through ``write``; url and ts are deterministic
+    functions of doc_id."""
+    import datetime
+
+    os.makedirs(path)
+    base = datetime.datetime(2025, 1, 1)
+    shards: list[list] = [[] for _ in range(4)]
+    for r in rows:
+        ts = base + datetime.timedelta(seconds=int(r.doc_id))
+        shards[int(r.doc_id) % 4].append((
+            f"{url_prefix}{int(r.doc_id)}",
+            ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
+            body(r.text),
+        ))
+    for i, shard in enumerate(shards):
+        with open(os.path.join(path, f"part-{i}{suffix}"), "wb") as f:
+            f.write(write(shard))
+
+
 def _warc_fixture_dir(spark, sf) -> str:
     """Author a small WARC archive set from the documents table itself
     (url/ts/body all deterministic functions of doc_id/text), so the
     DuckDB oracle can recompute the expected rows straight from the
     parquet — a real cross-engine differential of the author->parse
-    loop.  Content-addressed /tmp cache keyed on the slice's bytes;
-    4 gzip-member shards so the read parallelizes like real CC dumps."""
-    import datetime
-    import hashlib
+    loop.  4 gzip-member shards so the read parallelizes like real CC
+    dumps."""
+    from dqc_spark import warc
 
-    from dqc_spark.warc import warc_bytes
-
-    docs = _t(spark, sf, "documents").filter(
-        (F.col("doc_id") < 128) & F.col("text").isNotNull())
-    rows = sorted(docs.select("doc_id", "text").collect(),
-                  key=lambda r: r.doc_id)
-    h = hashlib.md5()
-    for r in rows:
-        h.update(str(r.doc_id).encode())
-        h.update(r.text.encode())
-    path = f"/tmp/dqc_warc_fixture_v2_{h.hexdigest()[:12]}"
-    done = os.path.join(path, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(path, exist_ok=True)
-        base = datetime.datetime(2025, 1, 1)
-        shards: list[list] = [[] for _ in range(4)]
-        for r in rows:
-            ts = base + datetime.timedelta(seconds=int(r.doc_id))
-            shards[int(r.doc_id) % 4].append((
-                f"http://warc.test/doc/{int(r.doc_id)}",
-                ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
-                r.text.encode("utf-8"),
-            ))
-        for i, shard in enumerate(shards):
-            with open(os.path.join(path, f"part-{i}.warc.gz"), "wb") as f:
-                f.write(warc_bytes(shard, gzip_members=True))
-        with open(done, "w"):
-            pass
-    return path
+    rows = _doc_slice_rows(spark, sf)
+    return _cached_fixture(
+        "warc", rows,
+        lambda path: _write_shards(
+            path, rows, "http://warc.test/doc/",
+            lambda text: text.encode("utf-8"),
+            lambda shard: warc.warc_bytes(shard, gzip_members=True),
+            ".warc.gz"),
+        _warc_fixture_dir, _write_shards, warc)
 
 
 # stand-in 'toxic' terms for the synthetic corpus (real deployments
@@ -2272,41 +1945,17 @@ def _robots_oracle_sql() -> str:
 
 def _wet_fixture_dir(spark, sf):
     """Author a WET shard set (WARC ``conversion`` records) from the
-    documents table — same content-addressed caching and 4-shard layout
-    as ``_warc_fixture_dir``, but the payload is the text itself."""
-    import datetime
-    import hashlib
+    documents table — same caching and 4-shard layout as
+    ``_warc_fixture_dir``, but the payload is the text itself."""
+    from dqc_spark import warc
 
-    from dqc_spark.warc import wet_bytes
-
-    docs = _t(spark, sf, "documents").filter(
-        (F.col("doc_id") < 128) & F.col("text").isNotNull())
-    rows = sorted(docs.select("doc_id", "text").collect(),
-                  key=lambda r: r.doc_id)
-    h = hashlib.md5(b"wet_v1")
-    for r in rows:
-        h.update(str(r.doc_id).encode())
-        h.update(r.text.encode())
-    path = f"/tmp/dqc_wet_fixture_{h.hexdigest()[:12]}"
-    done = os.path.join(path, "_DONE")
-    if not os.path.exists(done):
-        os.makedirs(path, exist_ok=True)
-        base = datetime.datetime(2025, 1, 1)
-        shards: list[list] = [[] for _ in range(4)]
-        for r in rows:
-            ts = base + datetime.timedelta(seconds=int(r.doc_id))
-            shards[int(r.doc_id) % 4].append((
-                f"http://wet.test/doc/{int(r.doc_id)}",
-                ts.strftime("%Y-%m-%dT%H:%M:%SZ"),
-                r.text,
-            ))
-        for i, shard in enumerate(shards):
-            with open(os.path.join(path,
-                                   f"part-{i}.warc.wet.gz"), "wb") as f:
-                f.write(wet_bytes(shard))
-        with open(done, "w"):
-            pass
-    return path
+    rows = _doc_slice_rows(spark, sf)
+    return _cached_fixture(
+        "wet", rows,
+        lambda path: _write_shards(
+            path, rows, "http://wet.test/doc/", lambda text: text,
+            warc.wet_bytes, ".warc.wet.gz"),
+        _wet_fixture_dir, _write_shards, warc)
 
 
 def q_wet_ingest(spark, sf):
@@ -2411,53 +2060,33 @@ def _snaptable_fixture_root(spark, sf) -> str:
     the diff entry exercises REAL commits (create -> copy-on-write
     delete -> merge upsert), while the DuckDB oracle recomputes the
     expected diff rows straight from the parquet via the same
-    deterministic mutation rules.  Content-addressed /tmp cache like
-    the WARC fixture; built under a scratch name and renamed into
-    place so a crashed half-build is never mistaken for done."""
-    import hashlib
-    import shutil
-    import uuid as _uuid
-
+    deterministic mutation rules (the cache key covers those rules, since
+    they are in this function's source)."""
     from dqc_spark import snaptable
 
     docs = _t(spark, sf, "documents").select("doc_id", "text", "lang")
+
+    def build(path):
+        t = snaptable.create(spark, path, docs.orderBy("doc_id"))
+        # v2: takedown-style delete of every doc_id % 10 == 3
+        t.delete_where("doc_id % 10 = 3")
+        # v3: re-crawl upsert — revise every doc_id % 10 == 4 (disjoint
+        # from the deleted set) and add fresh docs keyed doc_id + 100000
+        revised = docs.filter(F.col("doc_id") % 10 == 4).select(
+            "doc_id",
+            F.concat(F.coalesce(F.col("text"), F.lit("")),
+                     F.lit(" [rev2]")).alias("text"),
+            "lang")
+        added = docs.filter(F.col("doc_id") < 25).select(
+            (F.col("doc_id") + 100000).alias("doc_id"),
+            F.concat(F.lit("added doc "),
+                     F.col("doc_id").cast("string")).alias("text"),
+            F.lit("en").alias("lang"))
+        t.merge_upsert(revised.union(added), ["doc_id"])
+
     rows = sorted(docs.collect(), key=lambda r: r.doc_id)
-    h = hashlib.md5()
-    for r in rows:
-        h.update(str(r.doc_id).encode())
-        h.update((r.text or "\x00").encode())
-        h.update((r.lang or "\x00").encode())
-    # the _v1_ tag versions the MUTATION RULES (delete %10=3, revise
-    # %10=4, add +100000 for <25): the content hash only covers the
-    # input rows, so a future rule edit must bump the tag or a stale
-    # cached table silently fails the differential (the WARC fixture's
-    # _v2_ lesson)
-    root = f"/tmp/dqc_snaptable_fixture_v1_{h.hexdigest()[:12]}"
-    if os.path.exists(os.path.join(root, "meta", "_current")):
-        return root
-    build = f"{root}.build-{_uuid.uuid4().hex[:8]}"
-    t = snaptable.create(spark, build, docs.orderBy("doc_id"))
-    # v2: takedown-style delete of every doc_id % 10 == 3
-    t.delete_where("doc_id % 10 = 3")
-    # v3: re-crawl upsert — revise every doc_id % 10 == 4 (disjoint
-    # from the deleted set) and add fresh docs keyed doc_id + 100000
-    revised = docs.filter(F.col("doc_id") % 10 == 4).select(
-        "doc_id",
-        F.concat(F.coalesce(F.col("text"), F.lit("")),
-                 F.lit(" [rev2]")).alias("text"),
-        "lang")
-    added = docs.filter(F.col("doc_id") < 25).select(
-        (F.col("doc_id") + 100000).alias("doc_id"),
-        F.concat(F.lit("added doc "),
-                 F.col("doc_id").cast("string")).alias("text"),
-        F.lit("en").alias("lang"))
-    t.merge_upsert(revised.union(added), ["doc_id"])
-    try:
-        os.rename(build, root)
-    except OSError:
-        # lost a concurrent-build race: the winner's table is complete
-        shutil.rmtree(build, ignore_errors=True)
-    return root
+    return _cached_fixture("snaptable", rows, build,
+                           _snaptable_fixture_root, snaptable)
 
 
 def q_snaptable_diff(spark, sf):
@@ -2479,42 +2108,27 @@ def q_snaptable_diff(spark, sf):
 
 def q_dedup_incremental_near(spark, sf):
     """Cross-run incremental near-dup (bandindex.py): the documents
-    slice split into a 'prior crawl' (even doc_id, persisted as a
-    MinHash band-index artifact — content-addressed /tmp cache, built
-    under a scratch name and renamed into place) and a 'new snapshot'
+    slice split into a 'prior crawl' (even doc_id, persisted once as a
+    cached MinHash band-index artifact) and a 'new snapshot'
     (odd doc_id) band-joined against it.  The prior half's text is
     never re-read by the query (plan-pinned in test_bandindex).
     Rows-only: minhash signatures are engine-specific; the
     prior-pairs ∪ incremental == whole-corpus parity contract is
     pytest-pinned (test_bandindex.py)."""
-    import hashlib
-    import shutil
-    import uuid as _uuid
-
-    from dqc_spark.bandindex import (
-        create_band_index, incremental_near_dups, load_band_index)
+    from dqc_spark import bandindex
 
     docs = _t(spark, sf, "documents")
     prior = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    h = hashlib.md5()
-    for did, txt in sorted(
-            (r["doc_id"], r["text"] or "\x00")
-            for r in prior.select("doc_id", "text").collect()):
-        h.update(str(did).encode())
-        h.update(txt.encode())
-    root = f"/tmp/dqc_bandindex_fixture_v1_{h.hexdigest()[:12]}"
-    try:
-        idx = load_band_index(spark, root)
-    except FileNotFoundError:
-        build = f"{root}.build-{_uuid.uuid4().hex[:8]}"
-        create_band_index(prior, "doc_id", build)
-        try:
-            os.rename(build, root)
-        except OSError:
-            shutil.rmtree(build, ignore_errors=True)  # lost the race
-        idx = load_band_index(spark, root)
-    pairs = incremental_near_dups(idx, new, "doc_id", threshold=0.5)
+    rows = sorted(prior.select("doc_id", "text").collect(),
+                  key=lambda r: r.doc_id)
+    root = _cached_fixture(
+        "bandindex", rows,
+        lambda path: bandindex.create_band_index(prior, "doc_id", path),
+        q_dedup_incremental_near, bandindex)
+    idx = bandindex.load_band_index(spark, root)
+    pairs = bandindex.incremental_near_dups(idx, new, "doc_id",
+                                            threshold=0.5)
     return pairs.select(
         "key_a", "key_b",
         F.round("est_jaccard", 6).alias("est_j_6dp"),
@@ -2599,8 +2213,6 @@ def extra_queries():
         "langid_train_profile": q_langid_train_profile,
         "attr_tag_regate": q_attr_tag_regate,
         "dedup_exact_groups": q_dedup_exact,
-        "dedup_distinct_count": q_dedup_distinct_count,
-        "dedup_approx_distinct": q_approx_distinct,
         "dedup_minhash_near_dups": q_minhash_near_dups,
         "dedup_simhash_near_dups": q_simhash_near_dups,
         "ann_bruteforce_topk": q_ann_bruteforce_topk,
@@ -2614,28 +2226,11 @@ def extra_queries():
         "text_top_ngrams": q_top_ngrams,
         "lm_word_counts": q_lm_word_counts,
         "lm_bigram_counts": q_lm_bigram_counts,
-        "olap_pricing_summary": q_pricing_summary,
-        "olap_events_hourly": q_events_hourly,
-        "olap_local_supplier_revenue": q_local_supplier_revenue,
-        "olap_late_shipment_priority": q_late_shipment_priority,
-        "olap_shipping_priority": q_shipping_priority,
-        "olap_top_customers_per_nation": q_top_customers_per_nation,
-        "olap_big_order_customers": q_big_order_customers,
-        "olap_cheapest_part_per_brand": q_cheapest_part_per_brand,
-        "olap_lang_source_cube": q_lang_source_cube,
-        "setop_customers_without_orders": q_customers_without_orders,
-        "olap_lang_source_pivot": q_lang_source_pivot,
-        "setop_customers_with_orders": q_customers_with_orders,
-        "olap_rich_idle_customers": q_rich_idle_customers,
-        "olap_value_percentiles": q_value_percentiles,
-        "olap_moving_avg": q_moving_avg,
-        "olap_value_percentiles_approx": q_value_percentiles_approx,
         "olap_events_windowed": q_events_windowed,
         "sample_hash_10pct": q_sample_hash,
         "sample_stratified_quota": q_sample_stratified,
         "pack_token_budget": q_pack_token_budget,
         "text_chunks": q_text_chunks,
-        "events_json_extract": q_events_json_kv,
         "check_column_exists": q_column_exists,
         "dedup_components": q_components_exact,
         "dedup_keep_canonical": q_keep_canonical,
@@ -3202,16 +2797,6 @@ def extra_oracle_sql():
             SELECT md5(text) AS text_hash, COUNT(*) AS n FROM documents
             GROUP BY 1 HAVING COUNT(*) > 1
         """,
-        "dedup_distinct_count": """
-            SELECT COUNT(DISTINCT md5(text)) AS n_distinct,
-                   COUNT(*) AS n_total
-            FROM documents
-        """,
-        "dedup_approx_distinct": """
-            SELECT COUNT(DISTINCT md5(text)) AS n_exact,
-                   TRUE AS within_tolerance
-            FROM documents
-        """,
         "ann_bruteforce_topk": f"""
             SELECT vec_id,
                    ROUND(list_cosine_similarity(
@@ -3417,139 +3002,6 @@ def extra_oracle_sql():
             SELECT ngram, COUNT(*) AS n_occurrences FROM g GROUP BY 1
             ORDER BY n_occurrences DESC, ngram LIMIT 20
         """,
-        "olap_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   ROUND(SUM(l_quantity), 2) AS sum_qty,
-                   ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   FLOOR(AVG(l_quantity) * 10000) / 10000 AS avg_qty,
-                   FLOOR(SUM(CAST(ROUND(l_discount * 100, 0) AS BIGINT))
-                         / 100.0 / COUNT(*) * 10000) / 10000 AS avg_disc,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "olap_events_hourly": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   COUNT(*) AS n, ROUND(SUM(value), 4) AS sum_value
-            FROM events GROUP BY 1, 2
-        """,
-        "olap_late_shipment_priority": """
-            SELECT o_orderpriority, COUNT(*) AS order_count
-            FROM orders o
-            WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-              AND EXISTS (
-                SELECT 1 FROM lineitem l
-                WHERE l.l_orderkey = o.o_orderkey
-                  AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY
-              )
-            GROUP BY o_orderpriority
-        """,
-        "olap_local_supplier_revenue": """
-            SELECT n_name,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM customer, orders, lineitem, supplier, nation, region
-            WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-              AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-              AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-              AND r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-              AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-            GROUP BY n_name
-        """,
-        "olap_shipping_priority": """
-            SELECT l_orderkey, o_orderdate,
-                   ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
-            FROM customer, orders, lineitem
-            WHERE c_mktsegment = 'BUILDING'
-              AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-              AND o_orderdate < TIMESTAMP '1996-06-30 00:00:00'
-              AND l_shipdate > TIMESTAMP '1996-06-30 00:00:00'
-            GROUP BY 1, 2
-            ORDER BY revenue DESC, l_orderkey LIMIT 10
-        """,
-        "olap_top_customers_per_nation": """
-            SELECT c_nationkey, c_custkey, ROUND(c_acctbal, 2) AS acctbal, rk
-            FROM (
-              SELECT c_nationkey, c_custkey, c_acctbal,
-                     ROW_NUMBER() OVER (PARTITION BY c_nationkey
-                                        ORDER BY c_acctbal DESC, c_custkey) AS rk
-              FROM customer
-            ) WHERE rk <= 3
-        """,
-        "olap_big_order_customers": """
-            SELECT c_custkey, o_orderkey, o_orderdate, tot_qty
-            FROM orders
-            JOIN (SELECT l_orderkey, SUM(l_quantity) AS tot_qty
-                  FROM lineitem GROUP BY 1 HAVING SUM(l_quantity) > 180) b
-              ON o_orderkey = b.l_orderkey
-            JOIN customer ON o_custkey = c_custkey
-        """,
-        "olap_cheapest_part_per_brand": """
-            SELECT p_partkey, p_brand, p_retailprice AS retailprice
-            FROM part p
-            WHERE p_retailprice = (SELECT MIN(p2.p_retailprice) FROM part p2
-                                   WHERE p2.p_brand = p.p_brand)
-        """,
-        "olap_lang_source_cube": """
-            SELECT lang, source, COUNT(*) AS n,
-                   FLOOR(AVG(n_chars) * 10000) / 10000 AS avg_chars
-            FROM documents GROUP BY CUBE (lang, source)
-        """,
-        "setop_customers_without_orders": """
-            SELECT DISTINCT c_custkey AS k FROM customer
-            WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        """,
-        "olap_lang_source_pivot": """
-            SELECT lang,
-                   COUNT(*) FILTER (source = 'src0') AS src0,
-                   COUNT(*) FILTER (source = 'src1') AS src1,
-                   COUNT(*) FILTER (source = 'src2') AS src2,
-                   COUNT(*) FILTER (source = 'src3') AS src3
-            FROM documents GROUP BY lang
-        """,
-        "setop_customers_with_orders": """
-            SELECT c_custkey FROM customer
-            WHERE c_custkey IN (SELECT o_custkey FROM orders)
-        """,
-        "olap_rich_idle_customers": """
-            SELECT c_mktsegment, COUNT(*) AS n_custs,
-                   ROUND(SUM(c_acctbal), 2) AS total_bal
-            FROM customer c
-            WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer)
-              AND NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_custkey = c.c_custkey)
-            GROUP BY c_mktsegment
-        """,
-        "olap_value_percentiles": """
-            SELECT event_type,
-                   quantile_cont(value, 0.5) AS p50,
-                   quantile_cont(value, 0.95) AS p95,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1
-        """,
-        "olap_moving_avg": """
-            SELECT event_id, event_type, ts,
-                   FLOOR(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) OVER w
-                         / 100.0 / COUNT(*) OVER w * 10000) / 10000 AS avg_6h,
-                   COUNT(*) OVER w AS n_6h
-            FROM events
-            -- FLOOR(epoch): Spark's timestamp->long cast truncates to
-            -- whole seconds, DuckDB's epoch() keeps fractions — frame
-            -- membership at the 6h boundary must use the same integer
-            WINDOW w AS (PARTITION BY event_type
-                         ORDER BY CAST(FLOOR(epoch(ts)) AS BIGINT)
-                         RANGE BETWEEN 21600 PRECEDING AND CURRENT ROW)
-        """,
-        "olap_value_percentiles_approx": """
-            SELECT event_type,
-                   quantile_cont(value, 0.5) AS p50_exact,
-                   TRUE AS approx_within_band,
-                   COUNT(*) AS n
-            FROM events GROUP BY 1
-        """,
         "profile_documents": """
             SELECT 'doc_id' AS column,
                    COUNT(*) - COUNT(doc_id) AS n_nulls,
@@ -3706,12 +3158,6 @@ def extra_oracle_sql():
             FROM documents d, LATERAL (
               SELECT unnest(generate_series(0,
                      CAST(ceil(length(d.text) / 500.0) AS INT) - 1)) AS ix) g
-        """,
-        "events_json_extract": """
-            SELECT event_type, COUNT(*) AS n,
-                   FLOOR(AVG(CAST(json_extract_string(props, '$.k') AS DOUBLE))
-                         * 10000) / 10000 AS avg_k
-            FROM events GROUP BY 1
         """,
         "check_column_exists": """
             SELECT c.col, d.column_name IS NOT NULL AS present

@@ -95,11 +95,12 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     failures = []
-    ran = 0
+    ran = rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         ran += 1
+        rows_only += name not in oracles
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:
@@ -143,6 +144,7 @@ def main() -> int:
             print(f"ok   {name}: {len(sdf)} rows match")
     spark.stop()
     print(f"\n{ran - len(failures)}/{ran} matched"
+          f" ({ran - rows_only} SQL, {rows_only} rows-only)"
           + ("" if not only else f" (of {len(qs)} registered)"))
     return 1 if failures or not ran else 0
 
