@@ -289,9 +289,9 @@ DRIVER_ORDER = [
     "url_dedup_canonical",
     "text_repetition",
     "text_repetition_ngrams",
-    "graph_domain_edges",
-    "graph_pagerank",
-    "quality_model_fit",
+    "text_quality_scores",
+    "text_langid_heuristic",
+    "text_c4_line_filter",
     "text_hashed_tfidf",
     "text_tokens_unicode",
     "url_domain_blocklist",
@@ -305,7 +305,7 @@ DRIVER_ORDER = [
     "order_shard_assign",
     "text_toxicity_scores",
     "pack_fixed_sequences",
-    "text_boilerplate_removal",
+    "check_between",
     "html_main_content",
     "wet_ingest",
     "dedup_priority_keep",
@@ -331,7 +331,6 @@ TAIL_ORDER = [
     "check_distinct_in_set",
     "check_not_in_set",
     "check_date_parseable",
-    "check_between",
     "eval_split_leakage",
     "dedup_ngram_jaccard",
     "text_cdc_chunks",
@@ -340,13 +339,8 @@ TAIL_ORDER = [
     "html_extract_text",
     "lm_word_counts",
     "lm_bigram_counts",
-    "graph_anchor_terms",
-    "text_c4_line_filter",
-    "html_noindex",
-    "graph_trustrank",
     "snapshot_drift_by_source",
     "pack_first_fit_bins",
-    "eval_threshold_choice",
     "text_bm25_topk",
     "dedup_soft_weights",
     "snapshot_source_overlap",
@@ -362,7 +356,6 @@ TAIL_ORDER = [
     "dedup_components",
     "text_fingerprints",
     "text_top_ngrams",
-    "text_langid_heuristic",
     "olap_events_windowed",
     "ann_ivf_fullprobe",
     "text_decontaminate",
@@ -380,12 +373,10 @@ TAIL_ORDER = [
     "mix_temperature_sample",
     "profile_documents",
     "profile_histogram_nchars",
-    "eval_pr_curve",
     "dedup_exact_groups",
     "dedup_minhash_near_dups",
     "embedding_near_dups_lsh",
     "text_token_counts",
-    "text_quality_scores",
 ]
 
 

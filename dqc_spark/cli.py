@@ -193,12 +193,6 @@ def build_parser() -> argparse.ArgumentParser:
                         "other text stage")
     p.add_argument("--line-dedup-min-len", type=int, default=0,
                    help="corpus line dedup for lines >= N chars (0 = off)")
-    p.add_argument("--boilerplate-frac", type=float, default=-1.0,
-                   help="per-domain template stripping: remove lines on "
-                        ">= this fraction of a domain's pages (<0 = off)")
-    p.add_argument("--boilerplate-min-pages", type=int, default=0,
-                   help="domain page floor for --boilerplate-frac "
-                        "(0 = default 4)")
     p.add_argument("--line-dedup-unit", default="line",
                    choices=["line", "paragraph"],
                    help="hash unit for --line-dedup-min-len: C4-style "
@@ -215,20 +209,10 @@ def build_parser() -> argparse.ArgumentParser:
                    help="Gopher repetition drop rules as "
                         "'signal=thr,...', e.g. "
                         "'dup_5gram_char_frac=0.15,dup_para_frac=0.3'")
-    p.add_argument("--min-domain-rank", type=float, default=-1.0,
-                   help="drop pages whose domain PageRank is below this "
-                        "(<0 = off); ranks come from --domain-ranks or, "
-                        "absent that, the corpus's own link graph")
-    p.add_argument("--domain-ranks", default=None,
-                   help="parquet with (node, rank): a precomputed "
-                        "link-graph prior for --min-domain-rank")
     p.add_argument("--c4-lines", action="store_true",
                    help="C4-style line cleaning + page gate before "
                         "scoring (terminal-punct >=5-word lines; drop "
                         "lorem-ipsum/curly pages, <3 sentences)")
-    p.add_argument("--drop-noindex", action="store_true",
-                   help="respect robots-meta opt-outs: drop pages whose "
-                        "html carries a noindex/none directive")
     p.add_argument("--robots", default=None,
                    help="(host, robots_txt) parquet: drop pages their "
                         "host's robots.txt disallows (RFC 9309)")
@@ -252,29 +236,11 @@ def build_parser() -> argparse.ArgumentParser:
                    help="print the per-language data card of the "
                         "curated output (report.py, one extra "
                         "aggregation over the written corpus)")
-    p.add_argument("--trust-seeds", default=None,
-                   help="comma-separated vetted domains: the self-built "
-                        "--min-domain-rank prior becomes TrustRank "
-                        "(teleport restricted to these seeds) instead "
-                        "of PageRank; incompatible with --domain-ranks")
     p.add_argument("--split", default=None,
                    help="emit a deterministic 'split' column, e.g. "
                         "'train=0.8,val=0.1,test=0.1' (pure function "
                         "of the key: docs keep their slice across "
                         "re-curations)")
-    p.add_argument("--quality-labels", default=None,
-                   help="parquet with (url, label) rows, label 1.0 = "
-                        "keep: train a logistic quality classifier on "
-                        "the gate features of the labeled pages and "
-                        "gate the corpus with its sigmoid score")
-    p.add_argument("--quality-threshold", type=float, default=-1.0,
-                   help="score cutoff for --quality-labels "
-                        "(default 0.5; mutually exclusive with "
-                        "--quality-min-precision)")
-    p.add_argument("--quality-min-precision", type=float, default=-1.0,
-                   help="pick the cutoff from the labeled sample's PR "
-                        "curve instead: loosest threshold whose "
-                        "precision meets this bound (max recall)")
     p.add_argument("--langid-model", default=None,
                    help="(lang, gram, weight) model parquet from "
                         "train-langid: swap the language-ID profile "
@@ -690,7 +656,7 @@ def _config_to_flags(path: str) -> list:
     Keys are the curate flag names (dashes or underscores); values:
     ``true`` emits the bare flag, ``false``/``null`` omit it, dicts
     render as the ``k=v,...`` form (--split / --repetition-gates),
-    lists join with commas (--blocked-domains / --trust-seeds), and
+    lists join with commas (--blocked-domains), and
     scalars stringify.  Unknown keys are an error, not a warning — a
     typo'd stage name must not silently skip the stage."""
     import json
@@ -936,44 +902,7 @@ def main(argv=None) -> int:
         from dqc_spark.pipeline import curate
         from dqc_spark.toxicity import load_wordlist
 
-        if args.domain_ranks and args.min_domain_rank < 0:
-            # silently ignoring a supplied rank table would look like
-            # the reputation gate ran when it did not (review finding)
-            print("error: --domain-ranks requires --min-domain-rank",
-                  file=sys.stderr)
-            return 2
-        if args.trust_seeds and args.domain_ranks:
-            print("error: --trust-seeds is incompatible with "
-                  "--domain-ranks (the seeds parameterize the "
-                  "self-built prior)", file=sys.stderr)
-            return 2
-        if args.trust_seeds and args.min_domain_rank < 0:
-            print("error: --trust-seeds requires --min-domain-rank",
-                  file=sys.stderr)
-            return 2
-        trust_seeds = None
-        if args.trust_seeds:
-            # strip + drop empties: 'a.com, b.com' must not yield the
-            # unmatched seed ' b.com' (half the trust mass vanishing
-            # silently), and a trailing comma must not inject ''
-            trust_seeds = [s.strip() for s in args.trust_seeds.split(",")
-                           if s.strip()]
-            if not trust_seeds:
-                print("error: --trust-seeds contains no domains",
-                      file=sys.stderr)
-                return 2
-        if (args.quality_threshold >= 0 or args.quality_min_precision >= 0) \
-                and not args.quality_labels:
-            print("error: --quality-threshold/--quality-min-precision "
-                  "require --quality-labels", file=sys.stderr)
-            return 2
-        if args.quality_threshold >= 0 and args.quality_min_precision >= 0:
-            print("error: --quality-threshold and "
-                  "--quality-min-precision are mutually exclusive",
-                  file=sys.stderr)
-            return 2
-        # static flag checks BEFORE any Spark work: a --audit mistake
-        # must not cost a full classifier training run first
+        # static flag checks BEFORE any Spark work
         if args.near_index and not args.incremental:
             print("error: --near-index requires --incremental "
                   "(the band index is cross-RUN state; a one-shot "
@@ -984,48 +913,6 @@ def main(argv=None) -> int:
                   file=sys.stderr)
             return 2
         pages = spark.read.parquet(args.input)
-        quality_model = None
-        quality_thr = None
-        if args.quality_labels:
-            from pyspark.sql import functions as F
-
-            from dqc_spark.features import FEATURE_NAMES
-            from dqc_spark.pipeline import annotate
-            from dqc_spark.qualitymodel import score_col, train_logreg
-
-            labels = spark.read.parquet(args.quality_labels)
-            if "label" not in labels.columns or "url" not in labels.columns:
-                print("error: --quality-labels parquet needs "
-                      "(url, label) columns", file=sys.stderr)
-                return 2
-            # features of the LABELED slice only (inner join first so
-            # the annotate kernel scores thousands of rows, not the
-            # corpus); persisted — it feeds the IRLS passes + PR curve
-            feats = annotate(
-                pages.join(labels.select("url", "label"), on="url")
-            ).persist()
-            quality_model = train_logreg(feats, FEATURE_NAMES, "label")
-            if args.quality_min_precision >= 0:
-                from dqc_spark.evalmetrics import choose_threshold, pr_curve
-
-                curve = pr_curve(
-                    feats.select(score_col(quality_model).alias("score"),
-                                 F.col("label")),
-                    "score", "label")
-                row = choose_threshold(
-                    curve, args.quality_min_precision).first()
-                if row is None:
-                    print("error: no threshold reaches precision "
-                          f"{args.quality_min_precision} on the "
-                          "labeled sample", file=sys.stderr)
-                    return 2
-                quality_thr = float(row["threshold"])
-                print(f"quality gate: threshold {quality_thr:.4f} "
-                      f"(precision {row['precision']:.3f}, "
-                      f"recall {row['recall']:.3f})")
-            elif args.quality_threshold >= 0:
-                quality_thr = args.quality_threshold
-            feats.unpersist()
         try:
             # curate()'s own validation (bad split weights, thresholds)
             # surfaces as the parser's clean error, not a traceback
@@ -1063,10 +950,6 @@ def main(argv=None) -> int:
                 max_toxicity=args.max_toxicity,
                 line_dedup_min_len=args.line_dedup_min_len or None,
                 line_dedup_unit=args.line_dedup_unit,
-                boilerplate_max_frac=(args.boilerplate_frac
-                                      if args.boilerplate_frac >= 0
-                                      else None),
-                boilerplate_min_pages=(args.boilerplate_min_pages or None),
                 benchmark=(spark.read.parquet(args.benchmark)
                        if args.benchmark else None),
                 mix_alpha=(args.mix_alpha if args.mix_alpha >= 0 else None),
@@ -1075,19 +958,11 @@ def main(argv=None) -> int:
                 _parse_kv_floats(args.repetition_gates)
                 if args.repetition_gates else None
                 ),
-                domain_ranks=(spark.read.parquet(args.domain_ranks)
-                          if args.domain_ranks else None),
-                min_domain_rank=(args.min_domain_rank
-                             if args.min_domain_rank >= 0 else None),
                 c4_line_clean=args.c4_lines,
-                drop_noindex=args.drop_noindex,
-                trust_seeds=trust_seeds,
                 stage_metrics=(stage_metrics := {}
                            if args.stage_metrics else None),
                 split_weights=(_parse_kv_floats(args.split)
                                if args.split else None),
-                quality_model=quality_model,
-                quality_model_threshold=quality_thr,
                 langid_model=(
                     model_from_df(spark.read.parquet(args.langid_model))
                     if args.langid_model else None),

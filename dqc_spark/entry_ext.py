@@ -5,14 +5,13 @@ thin contract; see queries()/oracle_sql() there."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import inspect
 import os
 import shutil
 import tempfile
 import uuid
-
-import numpy as np
 
 from pyspark.sql import functions as F
 
@@ -27,16 +26,12 @@ _ALTOKS_SQL = unicode_alnum_tokens_sql("coalesce(text, '')")
 _WSTOKS_SQL = unicode_tokens_sql("coalesce(text, '')")
 _FTOKS_SQL = fold_tokens_sql("coalesce(text, '')")
 
-# python str.split()'s EXACT whitespace set as an RE2 class: the UWS
-# class plus the four ASCII information separators (the full-codepoint
-# sweep in test_unicode_tokens pins UWS == python-whitespace minus
-# exactly those four).  Oracles mirroring a kernel that tokenizes with
-# bare str.split() must split on THIS, not '\s+' — RE2 \s is
-# ASCII-only, so NBSP/NEL/U+2000-200A/ideographic-space text would
-# silently diverge (review finding on text_structure_signals).
-from dqc_spark.wordhash import UWS_CLASS as _UWS
-
-_PYWS_SPLIT = f"[{_UWS}\x1c-\x1f]+"
+# python str.split()'s EXACT whitespace set as an RE2 class.  Oracles
+# mirroring a kernel that tokenizes with bare str.split(), or a Spark
+# side built on gates.words_col, must split on THIS, not '\s+' — RE2
+# \s is ASCII-only, so NBSP/NEL/U+2000-200A/ideographic-space text
+# would silently diverge (review finding on text_structure_signals).
+from dqc_spark.wordhash import PYWS_SPLIT as _PYWS_SPLIT
 
 
 def _t(spark, sf_dir, name):
@@ -553,51 +548,6 @@ def q_hashed_tfidf(spark, sf):
     )
 
 
-# fixed reference coefficients for the SQL-comparable scoring leg of
-# q_quality_model: the sigmoid/feature plumbing is verified against
-# DuckDB at these constants, independent of whatever beta the IRLS fit
-# converges to (the fit itself is iterative and stays pytest-pinned)
-_QM_REF_BETA = {"intercept": -2.0, "n_words": 0.01, "alpha_ratio": 1.5,
-                "punct_ratio": -2.0, "stopword_ratio": 1.0}
-
-
-def q_quality_model(spark, sf):
-    # distributed IRLS quality-classifier fit + SQL-comparable scoring:
-    # the fit (learn P(n_chars >= 300) from the text-quality features)
-    # is iterative/engine-specific, so its convergence/accuracy
-    # contract is pinned by test_qualitymodel — but the entry now ALSO
-    # surfaces its result for the driver: the returned frame carries
-    # `converged` (the real fit's flag; a broken fit flips every row
-    # vs the oracle's TRUE) plus per-doc sigmoid scores at the FIXED
-    # reference beta above, which the DuckDB oracle reproduces exactly
-    # (ROUND 6: exp is transcendental, so the engines' libms differ in
-    # the last ULP even on bit-identical z — CLAUDE.md rule).
-    from dqc_spark.qualitymodel import LogRegModel, score_col, train_logreg
-    from dqc_spark.textstats import quality_scores
-
-    docs = _t(spark, sf, "documents")
-    feats = quality_scores(docs, "doc_id").join(
-        docs.select("doc_id", "n_chars"), on="doc_id"
-    ).withColumn("y", (F.col("n_chars") >= 300).cast("double"))
-    fcols = ["n_words", "alpha_ratio", "punct_ratio", "stopword_ratio"]
-    feats = feats.persist()
-    model = train_logreg(feats, fcols, "y")
-    ref = LogRegModel(
-        feature_cols=fcols,
-        weights=np.array([_QM_REF_BETA[c] for c in fcols]),
-        intercept=_QM_REF_BETA["intercept"],
-        n_iters=0, converged=True, final_loss=0.0,
-    )
-    out = feats.select(
-        "doc_id",
-        F.round(score_col(ref), 6).alias("score_6dp"),
-        F.lit(bool(model.converged)).alias("converged"),
-    )
-    out = out.localCheckpoint()  # materialize before the unpersist
-    feats.unpersist()
-    return out
-
-
 def q_pack_first_fit(spark, sf):
     # first-fit-decreasing packing (rows-only: FFD is sequential
     # per-group and not SQL-expressible; exact python parity + the
@@ -633,38 +583,6 @@ def q_snapshot_drift(spark, sf):
     docs = _t(spark, sf, "documents")
     prev = docs.filter(F.col("doc_id") % 3 != 0)
     return snapshot_drift(docs, prev, group_col="source")
-
-
-def q_html_noindex(spark, sf):
-    # robots-meta noindex gate (htmlextract.noindex_pred): synthetic
-    # head plants one directive variant per doc_id % 7 — quoted /
-    # reversed-attr / unquoted / uppercase noindex|none (drops),
-    # nofollow-only / commented-out / absent (keeps).  The oracle
-    # builds the identical html and matches with the SAME pattern
-    # strings under DuckDB's RE2 — three engines, one source of truth.
-    from dqc_spark.htmlextract import noindex_pred
-
-    docs = _t(spark, sf, "documents")
-    meta = (
-        F.when(F.col("doc_id") % 7 == 0,
-               F.lit('<meta name="robots" content="noindex, nofollow">'))
-        .when(F.col("doc_id") % 7 == 1,
-              F.lit("<meta content='NONE' name='ROBOTS'>"))
-        .when(F.col("doc_id") % 7 == 2,
-              F.lit('<meta name="robots" content="nofollow">'))
-        .when(F.col("doc_id") % 7 == 3,
-              F.lit('<!--<meta name="robots" content="noindex">-->'))
-        .when(F.col("doc_id") % 7 == 4,
-              F.lit("<META NAME=ROBOTS CONTENT=NOINDEX />"))
-        .otherwise(F.lit(""))
-    )
-    html = F.concat(
-        F.lit("<html><head>"), meta, F.lit("</head><body><p>"),
-        F.col("text"), F.lit("</p></body></html>"),
-    )
-    return docs.select(
-        "doc_id", noindex_pred(html).alias("noindex")
-    )
 
 
 def q_c4_line_filter(spark, sf):
@@ -723,57 +641,6 @@ def q_histogram_nchars(spark, sf):
     h = numeric_histogram(_t(spark, sf, "documents"), "n_chars", buckets=20)
     return h.select(
         "bucket", _trunc4("lo").alias("lo"), _trunc4("hi").alias("hi"), "n"
-    )
-
-
-def q_pr_curve(spark, sf):
-    # threshold calibration: PR curve of "keep docs scoring >= t" where
-    # score = n_chars/1000 (clipped) and label = (lang == 'en').  Both
-    # engines bucket identical doubles from exact ints, and every
-    # precision/recall is an integer-count ratio -> fully oracled.
-    from dqc_spark.evalmetrics import pr_curve
-
-    docs = _t(spark, sf, "documents")
-    c = pr_curve(
-        docs,
-        F.col("n_chars") / F.lit(1000.0),
-        F.when(F.col("lang") == "en", 1).otherwise(0),
-        buckets=20,
-    )
-    return c.select(
-        "bucket",
-        _trunc4("threshold").alias("threshold"),
-        "n",
-        "n_pos",
-        "cum_n",
-        "cum_pos",
-        _trunc4("precision").alias("prec"),
-        _trunc4("recall").alias("rec"),
-    )
-
-
-def q_threshold_choice(spark, sf):
-    # calibration decision over the PR curve: max-recall threshold with
-    # precision >= 0.45 (above the corpus base rate ~0.44, so a real
-    # cut must be chosen).  Cross-engine float safety: precision and
-    # recall are IDENTICAL doubles on both sides (ratios of the same
-    # exact ints), so the filter and the ordering agree bit-for-bit;
-    # FLOOR-4 only on output (CLAUDE.md rounding rule).
-    from dqc_spark.evalmetrics import choose_threshold, pr_curve
-
-    docs = _t(spark, sf, "documents")
-    c = pr_curve(
-        docs,
-        F.col("n_chars") / F.lit(1000.0),
-        F.when(F.col("lang") == "en", 1).otherwise(0),
-        buckets=20,
-    )
-    pick = choose_threshold(c, min_precision=0.45)
-    return pick.select(
-        _trunc4("threshold").alias("threshold"),
-        _trunc4("precision").alias("prec"),
-        _trunc4("recall").alias("rec"),
-        "cum_n",
     )
 
 
@@ -1067,179 +934,6 @@ def q_text_repetition_ngrams(spark, sf):
             + [f"dup_{n}gram_char_frac" for n in REP_NGRAM_DUP])
     return repetition_signals(docs, "doc_id").select(
         "doc_id", *[_trunc4(c).alias(c) for c in cols])
-
-
-# planted link structure for the graph entries: every doc anchors to
-# one of 9 .example.net hubs; every third doc also links to its OWN
-# host (self-loop, must be dropped), the rest to one of 4 .org peers
-def _linked_html_col():
-    hub = F.concat(F.lit('<a href="http://hub'),
-                   (F.col("doc_id") % 9).cast("string"),
-                   F.lit('.example.net/x">h</a>'))
-    own = F.concat(F.lit('<a href="'), _synthetic_url_col().cast("string"),
-                   F.lit('">self</a>'))
-    peer = F.concat(F.lit('<a href="https://peer'),
-                    (F.col("doc_id") % 4).cast("string"),
-                    F.lit('.example.org/y">p</a>'))
-    second = F.when(F.col("doc_id") % 3 == 0, own).otherwise(peer)
-    return F.encode(
-        F.concat(F.lit("<html><body>"), hub, second,
-                 F.lit("<p>t</p></body></html>")),
-        "utf-8",
-    ).alias("html")
-
-
-# the anchor-text twin of _linked_html_col: same deterministic link
-# topology, but MULTI-WORD anchor texts so term aggregation has
-# something to count ("news hub K" toward the hub, "peer review site"
-# toward the peer; the self-link's "my own page" must be excluded by
-# drop_self)
-def _anchored_html_col():
-    k = (F.col("doc_id") % 9).cast("string")
-    hub = F.concat(F.lit('<a href="http://hub'), k,
-                   F.lit('.example.net/x">news hub '), k, F.lit("</a>"))
-    own = F.concat(F.lit('<a href="'), _synthetic_url_col().cast("string"),
-                   F.lit('">my own page</a>'))
-    peer = F.concat(F.lit('<a href="https://peer'),
-                    (F.col("doc_id") % 4).cast("string"),
-                    F.lit('.example.org/y">peer review site</a>'))
-    second = F.when(F.col("doc_id") % 3 == 0, own).otherwise(peer)
-    return F.encode(
-        F.concat(F.lit("<html><body>"), hub, second,
-                 F.lit("<p>t</p></body></html>")),
-        "utf-8",
-    ).alias("html")
-
-
-def q_graph_anchor_terms(spark, sf):
-    # anchor-text aggregation: the Spark side genuinely PARSES the
-    # synthetic html (kernel -> tokens -> combiner groupBy); the oracle
-    # states the generation rule directly — extraction itself is pinned
-    # by graph_domain_edges' regex-extracting oracle and the pytest pins
-    from dqc_spark.linkgraph import anchor_term_counts
-
-    docs = _t(spark, sf, "documents").select(
-        _synthetic_url_col(), _anchored_html_col())
-    return anchor_term_counts(docs)
-
-
-def q_graph_domain_edges(spark, sf):
-    from dqc_spark.linkgraph import domain_edges
-
-    docs = _t(spark, sf, "documents").select(
-        _synthetic_url_col(), _linked_html_col())
-    return domain_edges(docs)
-
-
-# deterministic 7-node graph straight from doc_id math (no html layer:
-# this entry pins the ITERATION, the edges entry pins extraction)
-def _pr_edges_df(spark, sf):
-    docs = _t(spark, sf, "documents")
-    return docs.groupBy(
-        F.concat(F.lit("d"), (F.col("doc_id") % 7).cast("string"))
-        .alias("src_domain"),
-        F.concat(F.lit("d"), ((F.col("doc_id") * 3 + 1) % 7).cast("string"))
-        .alias("dst_domain"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("weight"))
-
-
-_PR_ITER = 8
-_PR_DAMP = 0.85
-
-
-def q_graph_pagerank(spark, sf):
-    from dqc_spark.linkgraph import pagerank
-
-    pr = pagerank(_pr_edges_df(spark, sf), n_iter=_PR_ITER,
-                  damping=_PR_DAMP)
-    # ROUND (not trunc): the engines sum contributions in different
-    # orders, so the doubles differ at ~1e-15 — ROUND absorbs that,
-    # FLOOR would flip at every boundary (CLAUDE.md rounding rule)
-    return pr.select("node", F.round("rank", 6).alias("rank"))
-
-
-def _pagerank_unrolled_sql(
-    n_iter: int, damping: float, seeds: tuple[str, ...] | None = None,
-) -> str:
-    """The oracle is the textbook spelling, mechanically unrolled: one
-    (dangling, contribution, rank) CTE triple per iteration — no
-    recursion (aggregates are not allowed in a recursive CTE term).
-    With ``seeds``, teleport AND dangling mass flow to the seed set
-    only (TrustRank), matching linkgraph.pagerank(teleport=...)."""
-    ctes = [f"""
-        e AS (
-            SELECT 'd' || CAST(doc_id % 7 AS VARCHAR) AS src,
-                   'd' || CAST((doc_id * 3 + 1) % 7 AS VARCHAR) AS dst,
-                   CAST(COUNT(*) AS DOUBLE) AS w
-            FROM documents GROUP BY 1, 2
-        ),
-        nodes AS (
-            SELECT src AS node FROM e UNION SELECT dst FROM e
-        ),
-        nn AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM nodes),
-        outw AS (SELECT src, SUM(w) AS ow FROM e GROUP BY src),
-        norm AS (
-            SELECT e.src, e.dst, e.w / outw.ow AS p
-            FROM e JOIN outw ON e.src = outw.src
-        ),
-        r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""]
-    if seeds is not None:
-        sl = ", ".join(f"'{s}'" for s in seeds)
-        # swap the uniform r0 for the trust-vector start (the base
-        # block string ends with the r0 definition)
-        uniform_r0 = "r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"
-        assert ctes[0].endswith(uniform_r0)
-        ctes[0] = ctes[0][: -len(uniform_r0)] + f"""tv AS (
-            SELECT node,
-                   CASE WHEN node IN ({sl})
-                        THEN 1.0 / (SELECT CAST(COUNT(*) AS DOUBLE)
-                                    FROM nodes WHERE node IN ({sl}))
-                        ELSE 0.0 END AS t
-            FROM nodes
-        ),
-        r0 AS (SELECT node, t AS rank FROM tv)"""
-    for k in range(1, n_iter + 1):
-        if seeds is None:
-            tele = f"(1 - {damping}) / (SELECT n FROM nn)"
-            dang = f"(SELECT dm FROM d{k}) / (SELECT n FROM nn)"
-            tv_join = ""
-        else:
-            tele = f"(1 - {damping}) * tv.t"
-            dang = f"(SELECT dm FROM d{k}) * tv.t"
-            tv_join = " JOIN tv ON tv.node = nodes.node"
-        ctes.append(f"""
-        d{k} AS (
-            SELECT COALESCE(SUM(rank), 0) AS dm FROM r{k - 1}
-            WHERE node NOT IN (SELECT src FROM norm)
-        ),
-        c{k} AS (
-            SELECT norm.dst, SUM(r.rank * norm.p) AS c
-            FROM r{k - 1} r JOIN norm ON r.node = norm.src
-            GROUP BY norm.dst
-        ),
-        r{k} AS (
-            SELECT nodes.node,
-                   {tele}
-                   + {damping} * (COALESCE(c.c, 0)
-                                  + {dang}) AS rank
-            FROM nodes LEFT JOIN c{k} c ON nodes.node = c.dst{tv_join}
-        )""")
-    return ("WITH " + ",".join(ctes)
-            + f" SELECT node, ROUND(rank, 6) AS rank FROM r{n_iter}")
-
-
-_TR_SEEDS = ("d0", "d3")
-
-
-def q_graph_trustrank(spark, sf):
-    # TrustRank over the same 7-node graph: teleport restricted to the
-    # seed domains (linkgraph.trustrank); oracle = the unrolled CTE
-    # chain with the seed-restricted teleport/dangling terms
-    from dqc_spark.linkgraph import trustrank
-
-    tr = trustrank(_pr_edges_df(spark, sf), list(_TR_SEEDS),
-                   n_iter=_PR_ITER, damping=_PR_DAMP)
-    return tr.select("node", F.round("rank", 6).alias("rank"))
 
 
 def q_url_domain_stats(spark, sf):
@@ -1584,14 +1278,18 @@ def _cached_fixture(name, rows, build, *code) -> str:
     of ``code`` (the fixture function and the writer module it calls),
     so a change to either writes a fresh fixture instead of reusing a
     stale one.  Built under a scratch name and renamed into place, so a
-    crashed half-build is never mistaken for done."""
-    h = hashlib.md5()
+    crashed half-build is never mistaken for done.  A fresh build
+    removes the fixtures it supersedes: same name and rows, older code.
+    Fixtures of other rows (another scale factor) stay, and so do
+    ``.build-`` scratch dirs, which a concurrent builder may own."""
+    rows_h, code_h = hashlib.md5(), hashlib.md5()
     for r in rows:
-        h.update(repr(tuple(r)).encode())
+        rows_h.update(repr(tuple(r)).encode())
     for obj in code:
-        h.update(inspect.getsource(obj).encode())
-    root = os.path.join(tempfile.gettempdir(),
-                        f"dqc_{name}_fixture_{h.hexdigest()[:12]}")
+        code_h.update(inspect.getsource(obj).encode())
+    prefix = os.path.join(tempfile.gettempdir(),
+                          f"dqc_{name}_fixture_{rows_h.hexdigest()[:12]}_")
+    root = prefix + code_h.hexdigest()[:12]
     if os.path.isdir(root):
         return root
     scratch = f"{root}.build-{uuid.uuid4().hex[:8]}"
@@ -1601,6 +1299,10 @@ def _cached_fixture(name, rows, build, *code) -> str:
     except OSError:
         # lost a concurrent-build race: the winner's fixture is complete
         shutil.rmtree(scratch, ignore_errors=True)
+        return root
+    for old in glob.glob(glob.escape(prefix) + "*"):
+        if old != root and ".build-" not in old:
+            shutil.rmtree(old, ignore_errors=True)
     return root
 
 
@@ -1713,47 +1415,6 @@ def q_pack_sequences(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return sequence_manifest(docs, seq_len=512)
-
-
-def q_boilerplate(spark, sf):
-    """Per-source boilerplate line removal (boilerplate.py): a planted
-    navigation banner appears on 50% of each source's pages (removed at
-    max_frac=0.4 from EVERY page of that source), a rare promo line on
-    ~2.7% (kept).  Full SQL oracle: the DuckDB side recomputes group
-    page counts, per-(source, line) distinct-page counts and the
-    integer cross-multiplied threshold over raw line strings — the
-    Spark side's md5-digest equality is identical up to collisions."""
-    from dqc_spark.boilerplate import remove_boilerplate
-    from dqc_spark.gates import words_col
-
-    docs = _t(spark, sf, "documents")
-    w = words_col(F.col("text"))
-    n_segs = F.greatest(F.ceil(F.size(w) / F.lit(8)), F.lit(1)).cast("int")
-    segs = F.transform(
-        F.sequence(F.lit(0), n_segs - 1),
-        lambda i: F.concat_ws(" ", F.slice(w, i * 8 + 1, 8)),
-    )
-    nav = F.when(
-        F.col("doc_id") % 2 == 0,
-        F.concat(F.lit("NAVIGATION MENU "), F.col("source"),
-                 F.lit(" HOME\n")),
-    ).otherwise(F.lit(""))
-    promo = F.when(
-        F.col("doc_id") % 37 == 0,
-        F.concat(F.lit("RARE PROMO "), F.col("source"), F.lit("\n")),
-    ).otherwise(F.lit(""))
-    lined = F.concat(nav, promo, F.concat_ws("\n", segs))
-    src = docs.select("doc_id", "source", lined.alias("text"))
-    out = remove_boilerplate(
-        src, "doc_id", "source", max_frac=0.4, min_pages=4, min_len=4
-    )
-    return out.select(
-        "doc_id",
-        "source",
-        F.md5("text_clean").alias("clean_md5"),
-        "n_lines",
-        "n_lines_kept",
-    )
 
 
 # literal-char class, identical bytes in Java regex and DuckDB RE2:
@@ -2248,11 +1909,7 @@ def extra_queries():
         "mix_temperature_sample": q_mix_temperature,
         "profile_documents": q_profile_documents,
         "profile_histogram_nchars": q_histogram_nchars,
-        "eval_pr_curve": q_pr_curve,
-        "eval_threshold_choice": q_threshold_choice,
-        "quality_model_fit": q_quality_model,
         "text_c4_line_filter": q_c4_line_filter,
-        "html_noindex": q_html_noindex,
         "snapshot_drift_by_source": q_snapshot_drift,
         "pack_first_fit_bins": q_pack_first_fit,
         "text_hashed_tfidf": q_hashed_tfidf,
@@ -2263,10 +1920,6 @@ def extra_queries():
         "url_dedup_canonical": q_url_dedup_canonical,
         "text_repetition": q_text_repetition,
         "text_repetition_ngrams": q_text_repetition_ngrams,
-        "graph_domain_edges": q_graph_domain_edges,
-        "graph_anchor_terms": q_graph_anchor_terms,
-        "graph_pagerank": q_graph_pagerank,
-        "graph_trustrank": q_graph_trustrank,
         "text_bm25_topk": q_bm25_topk,
         "dedup_soft_weights": q_dedup_soft_weights,
         "semantic_dedup_keep": q_semantic_dedup,
@@ -2288,7 +1941,6 @@ def extra_queries():
         "order_shard_assign": q_shard_assign,
         "pack_fixed_sequences": q_pack_sequences,
         "text_toxicity_scores": q_toxicity_scores,
-        "text_boilerplate_removal": q_boilerplate,
         "html_main_content": q_main_content,
         "mix_epoch_expand": q_mix_epoch_expand,
         "text_pii_spans": q_pii_spans,
@@ -2395,40 +2047,6 @@ def _rep_ngram_oracle_sql() -> str:
     """
 
 
-def _noindex_oracle_sql() -> str:
-    """Same html construction as q_html_noindex; matching uses the
-    VERBATIM pattern strings from htmlextract (single source of truth
-    across Catalyst rlike, the python twin and DuckDB RE2)."""
-    from dqc_spark.htmlextract import NOINDEX_PATTERNS
-
-    p1, p2 = (p.replace("'", "''") for p in NOINDEX_PATTERNS)
-    return f"""
-        WITH built AS (
-          SELECT doc_id,
-                 '<html><head>' ||
-                 CASE doc_id % 7
-                   WHEN 0 THEN
-                     '<meta name="robots" content="noindex, nofollow">'
-                   WHEN 1 THEN '<meta content=''NONE'' name=''ROBOTS''>'
-                   WHEN 2 THEN '<meta name="robots" content="nofollow">'
-                   WHEN 3 THEN '<!--<meta name="robots" content="noindex">-->'
-                   WHEN 4 THEN '<META NAME=ROBOTS CONTENT=NOINDEX />'
-                   ELSE ''
-                 END || '</head><body><p>' || text || '</p></body></html>'
-                 AS html
-          FROM documents
-        ), stripped AS (
-          SELECT doc_id,
-                 regexp_replace(html, '(?s)<!--.*?-->', '', 'g') AS s
-          FROM built
-        )
-        SELECT doc_id,
-               (regexp_matches(s, '{p1}') OR regexp_matches(s, '{p2}'))
-                 AS noindex
-        FROM stripped
-    """
-
-
 def extra_oracle_sql():
     return {
         # WARC differential: the Spark leg authors + parses real WARC
@@ -2468,16 +2086,16 @@ def extra_oracle_sql():
         "attr_refilter": rf"""
             WITH f AS (
               SELECT doc_id,
-                     length(list_filter(regexp_split_to_array(text, '\s+'),
+                     length(list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                         x -> x <> '')) AS nw,
                      CASE WHEN length(text) > 0 THEN
                        CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
                        / length(text) ELSE 0.0 END AS alpha_r,
-                     CASE WHEN length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                     CASE WHEN length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                                   x -> x <> '')) > 0 THEN
-                       CAST(length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       CAST(length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                    x -> list_contains({_STOPLIST_SQL}, x))) AS DOUBLE)
-                       / length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       / length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                 x -> x <> '')) ELSE 0.0 END AS sw_r
               FROM documents
             ),
@@ -2718,7 +2336,6 @@ def extra_oracle_sql():
               ON a.h = b.h AND a.src < b.src
             GROUP BY 1, 2
         """,
-        "html_noindex": _noindex_oracle_sql(),
         "snapshot_drift_by_source": """
             WITH cur AS (
               SELECT COALESCE(CAST(source AS VARCHAR), '<null>') AS source,
@@ -2748,10 +2365,10 @@ def extra_oracle_sql():
         # rules on the trim()-stripped line (explicit charset = the
         # kernel's _STRIP_SET), survivors rejoined stripped; page gate
         # checks the ORIGINAL lined text for lorem/curly markers
-        "text_c4_line_filter": r"""
+        "text_c4_line_filter": rf"""
             WITH src AS (
               SELECT doc_id,
-                     list_filter(regexp_split_to_array(text, '\s+'),
+                     list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                  x -> x <> '') AS w
               FROM documents
             ), lined AS (
@@ -2765,7 +2382,7 @@ def extra_oracle_sql():
                        array_to_string(w[1:6], ' ') || '!'
                      ], chr(10))
                      || CASE WHEN doc_id % 11 = 0
-                        THEN chr(10) || 'if (x) { return; }' ELSE '' END
+                        THEN chr(10) || 'if (x) {{ return; }}' ELSE '' END
                      || CASE WHEN doc_id % 13 = 0
                         THEN chr(10) || 'Lorem ipsum dolor sit amet.'
                         ELSE '' END AS text
@@ -2779,7 +2396,7 @@ def extra_oracle_sql():
                            l -> trim(l, ' ' || chr(9) || chr(13)
                                      || chr(11) || chr(12))),
                          s -> s <> ''
-                           AND len(regexp_split_to_array(s, '\s+')) >= 5
+                           AND len(regexp_split_to_array(s, '{_PYWS_SPLIT}')) >= 5
                            AND regexp_matches(s, '[.!?"]$')
                            AND NOT contains(lower(s), 'javascript')),
                        chr(10)) AS clean_text
@@ -2790,7 +2407,7 @@ def extra_oracle_sql():
                         AS BIGINT) AS n_sentences,
                    (len(regexp_extract_all(clean_text, '[.!?]')) >= 3
                     AND NOT contains(lower(orig), 'lorem ipsum')
-                    AND NOT contains(orig, '{')) AS keep
+                    AND NOT contains(orig, '{{')) AS keep
             FROM cleaned
         """,
         "dedup_exact_groups": """
@@ -2816,9 +2433,9 @@ def extra_oracle_sql():
                                                CAST(b.embedding AS DOUBLE[])),
                         4) >= 0.4
         """,
-        "text_token_counts": r"""
+        "text_token_counts": rf"""
             SELECT doc_id,
-                   length(list_filter(regexp_split_to_array(text, '\s+'),
+                   length(list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                       x -> x <> '')) AS ws_tokens,
                    length(regexp_extract_all(text,
                           '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpeish_tokens,
@@ -2828,7 +2445,7 @@ def extra_oracle_sql():
         "text_quality_scores": rf"""
             WITH f AS (
               SELECT doc_id,
-                     length(list_filter(regexp_split_to_array(text, '\s+'),
+                     length(list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                         x -> x <> '')) AS nw,
                      CASE WHEN length(text) > 0 THEN
                        CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
@@ -2836,11 +2453,11 @@ def extra_oracle_sql():
                      CASE WHEN length(text) > 0 THEN
                        CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
                        / length(text) ELSE 0.0 END AS punct_r,
-                     CASE WHEN length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                     CASE WHEN length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                                   x -> x <> '')) > 0 THEN
-                       CAST(length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       CAST(length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                    x -> list_contains({_STOPLIST_SQL}, x))) AS DOUBLE)
-                       / length(list_filter(regexp_split_to_array(lower(text), '\s+'),
+                       / length(list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                 x -> x <> '')) ELSE 0.0 END AS sw_r
               FROM documents
             )
@@ -2851,42 +2468,6 @@ def extra_oracle_sql():
                    FLOOR((LEAST(nw / 100.0, 1.0) * 0.4
                           + LEAST(sw_r * 4, 1.0) * 0.3
                           + alpha_r * 0.3) * 10000) / 10000 AS quality_score
-            FROM f
-        """,
-        # fixed-beta logistic scoring over the quality features: z is
-        # built from int-ratio doubles (bit-identical across engines)
-        # with literals CAST to DOUBLE and the same left-to-right
-        # association as score_col; sigmoid contains exp, so ROUND 6 on
-        # both sides (transcendental rule).  `converged` mirrors the
-        # real IRLS fit's flag — the oracle pins it TRUE, so a broken
-        # fit flips every row.
-        "quality_model_fit": rf"""
-            WITH f AS (
-              SELECT doc_id,
-                     length(list_filter(regexp_split_to_array(text, '\s+'),
-                                        x -> x <> '')) AS nw,
-                     CASE WHEN length(text) > 0 THEN
-                       CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE)
-                       / length(text) ELSE 0.0 END AS alpha_r,
-                     CASE WHEN length(text) > 0 THEN
-                       CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS DOUBLE)
-                       / length(text) ELSE 0.0 END AS punct_r,
-                     CASE WHEN length(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                                  x -> x <> '')) > 0 THEN
-                       CAST(length(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                   x -> list_contains({_STOPLIST_SQL}, x))) AS DOUBLE)
-                       / length(list_filter(regexp_split_to_array(lower(text), '\s+'),
-                                x -> x <> '')) ELSE 0.0 END AS sw_r
-              FROM documents
-            )
-            SELECT doc_id,
-                   ROUND(1.0 / (1.0 + exp(-(CAST(-2.0 AS DOUBLE)
-                     + COALESCE(CAST(nw AS DOUBLE), CAST(0.0 AS DOUBLE))
-                       * CAST(0.01 AS DOUBLE)
-                     + alpha_r * CAST(1.5 AS DOUBLE)
-                     + punct_r * CAST(-2.0 AS DOUBLE)
-                     + sw_r * CAST(1.0 AS DOUBLE)))), 6) AS score_6dp,
-                   TRUE AS converged
             FROM f
         """,
         # sparse hashed TF-IDF frame.  bucket = (little-endian md5
@@ -2935,10 +2516,10 @@ def extra_oracle_sql():
             FROM widf JOIN nrm USING (doc_id)
             WHERE widf.wgt <> 0
         """,
-        "text_langid_heuristic": r"""
+        "text_langid_heuristic": rf"""
             WITH f AS (
               SELECT doc_id,
-                     list_filter(regexp_split_to_array(lower(text), '\s+'),
+                     list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                  x -> x <> '') AS w,
                      length(regexp_replace(text, '[^一-鿿]', '', 'g')) AS cjk
               FROM documents
@@ -2988,9 +2569,9 @@ def extra_oracle_sql():
             SELECT gram, COUNT(*) AS n_occurrences FROM g GROUP BY 1
             ORDER BY n_occurrences DESC, gram LIMIT 100
         """,
-        "text_top_ngrams": r"""
+        "text_top_ngrams": rf"""
             WITH w AS (
-              SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
+              SELECT list_filter(regexp_split_to_array(lower(text), '{_PYWS_SPLIT}'),
                                  x -> x <> '') AS toks
               FROM documents
             ), g AS (
@@ -3026,70 +2607,6 @@ def extra_oracle_sql():
                    COUNT(DISTINCT n_chars),
                    CAST(MIN(n_chars) AS VARCHAR), CAST(MAX(n_chars) AS VARCHAR)
             FROM documents
-        """,
-        # per-bucket counts, triangular cumulative, int-ratio PR; SUM of
-        # BIGINT is HUGEINT in DuckDB -> CAST back (round-1 lesson)
-        "eval_pr_curve": """
-            WITH s AS (
-              SELECT CAST(LEAST(19, GREATEST(0,
-                       FLOOR((n_chars / 1000.0) * 20 / 1.0))) AS INTEGER)
-                       AS bucket,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-              FROM documents
-            ), per AS (
-              SELECT bucket, COUNT(*) AS n,
-                     CAST(SUM(y) AS BIGINT) AS n_pos
-              FROM s GROUP BY 1
-            ), cum AS (
-              SELECT p.bucket, p.n, p.n_pos,
-                     CAST(SUM(u.n) AS BIGINT) AS cum_n,
-                     CAST(SUM(u.n_pos) AS BIGINT) AS cum_pos
-              FROM per p JOIN per u ON u.bucket >= p.bucket
-              GROUP BY 1, 2, 3
-            ), tot AS (SELECT CAST(SUM(n_pos) AS BIGINT) AS tp FROM per)
-            SELECT c.bucket,
-                   FLOOR((c.bucket * (1.0 / 20)) * 10000) / 10000
-                     AS threshold,
-                   c.n, c.n_pos, c.cum_n, c.cum_pos,
-                   FLOOR(CAST(c.cum_pos AS DOUBLE) / c.cum_n * 10000)
-                     / 10000 AS prec,
-                   FLOOR(CAST(c.cum_pos AS DOUBLE) / tot.tp * 10000)
-                     / 10000 AS rec
-            FROM cum c, tot
-        """,
-        # same CTE chain as eval_pr_curve + the selection rule: among
-        # precision >= 0.45 rows, max recall, tie to the LOWER threshold
-        "eval_threshold_choice": """
-            WITH s AS (
-              SELECT CAST(LEAST(19, GREATEST(0,
-                       FLOOR((n_chars / 1000.0) * 20 / 1.0))) AS INTEGER)
-                       AS bucket,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-              FROM documents
-            ), per AS (
-              SELECT bucket, COUNT(*) AS n,
-                     CAST(SUM(y) AS BIGINT) AS n_pos
-              FROM s GROUP BY 1
-            ), cum AS (
-              SELECT p.bucket,
-                     CAST(SUM(u.n) AS BIGINT) AS cum_n,
-                     CAST(SUM(u.n_pos) AS BIGINT) AS cum_pos
-              FROM per p JOIN per u ON u.bucket >= p.bucket
-              GROUP BY 1
-            ), tot AS (SELECT CAST(SUM(n_pos) AS BIGINT) AS tp FROM per),
-            sel AS (
-              SELECT c.bucket * (1.0 / 20) AS threshold,
-                     CAST(c.cum_pos AS DOUBLE) / c.cum_n AS precision,
-                     CAST(c.cum_pos AS DOUBLE) / tot.tp AS recall,
-                     c.cum_n
-              FROM cum c, tot
-            )
-            SELECT FLOOR(threshold * 10000) / 10000 AS threshold,
-                   FLOOR(precision * 10000) / 10000 AS prec,
-                   FLOOR(recall * 10000) / 10000 AS rec,
-                   cum_n
-            FROM sel WHERE precision >= 0.45
-            ORDER BY recall DESC, threshold ASC LIMIT 1
         """,
         # identical bucket arithmetic: (x-lo)*20/(hi-lo) floored, width
         # = (hi-lo)/20 — all from exact integer bounds
@@ -3436,7 +2953,7 @@ def extra_oracle_sql():
         "text_line_dedup": rf"""
             WITH src AS (
               SELECT doc_id,
-                     list_filter(regexp_split_to_array(text, '\s+'),
+                     list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                  x -> x <> '') AS w
               FROM documents
             ), lined AS (
@@ -3477,75 +2994,6 @@ def extra_oracle_sql():
                    COALESCE(r.n_kept, 0) AS n_lines_kept
             FROM totals t LEFT JOIN rebuilt r USING (doc_id)
         """,
-        # per-source boilerplate: page counts + distinct-page line
-        # frequencies over RAW line strings (Spark uses md5 digests —
-        # identical up to collisions); threshold is integer
-        # cross-multiplied parts-per-million, no float ratio anywhere
-        "text_boilerplate_removal": r"""
-            WITH src AS (
-              SELECT doc_id, source,
-                     list_filter(regexp_split_to_array(text, '\s+'),
-                                 x -> x <> '') AS w
-              FROM documents
-            ), lined AS (
-              SELECT doc_id, source,
-                     CASE WHEN doc_id % 2 = 0
-                          THEN 'NAVIGATION MENU ' || source || ' HOME'
-                               || chr(10)
-                          ELSE '' END ||
-                     CASE WHEN doc_id % 37 = 0
-                          THEN 'RARE PROMO ' || source || chr(10)
-                          ELSE '' END ||
-                     array_to_string(
-                       list_transform(
-                         generate_series(0,
-                           GREATEST(CAST(ceil(len(w) / 8.0) AS INT), 1) - 1),
-                         i -> array_to_string(w[i*8+1:i*8+8], ' ')),
-                       chr(10)) AS text
-              FROM src
-            ), ls AS (
-              SELECT doc_id, source, string_split(text, chr(10)) AS arr
-              FROM lined
-            ), lines AS (
-              SELECT doc_id, source, i - 1 AS line_no, arr[i] AS line
-              FROM ls, LATERAL (SELECT unnest(generate_series(1, len(arr)))
-                                AS i) t
-            ), gp AS (
-              SELECT source, COUNT(*) AS gp FROM lined
-              WHERE source IS NOT NULL
-              GROUP BY source HAVING COUNT(*) >= 4
-            ), lp AS (
-              SELECT source, line, COUNT(DISTINCT doc_id) AS np
-              FROM lines
-              WHERE length(line) >= 4 AND source IS NOT NULL
-              GROUP BY source, line
-            ), boiler AS (
-              SELECT lp.source, lp.line
-              FROM lp JOIN gp USING (source)
-              WHERE lp.np * 1000000 >= 400000 * gp.gp
-            ), kept AS (
-              SELECT l.doc_id, l.line_no, l.line
-              FROM lines l
-              WHERE length(l.line) < 4 OR NOT EXISTS (
-                SELECT 1 FROM boiler b
-                WHERE b.source = l.source AND b.line = l.line)
-            ), totals AS (
-              SELECT doc_id, COUNT(*) AS n_lines FROM lines
-              GROUP BY doc_id
-            ), rebuilt AS (
-              SELECT doc_id,
-                     string_agg(line, chr(10) ORDER BY line_no) AS txt,
-                     COUNT(*) AS nk
-              FROM kept GROUP BY doc_id
-            )
-            SELECT t.doc_id, l.source,
-                   md5(COALESCE(r.txt, '')) AS clean_md5,
-                   t.n_lines,
-                   COALESCE(r.nk, 0) AS n_lines_kept
-            FROM totals t
-            JOIN lined l USING (doc_id)
-            LEFT JOIN rebuilt r USING (doc_id)
-        """,
         # main-content extraction: planted-spec oracle — DuckDB builds
         # the expected ARTICLE (heading + p1 + conditional teaser + p2)
         # directly from the same word slices; boilerplate (title, nav,
@@ -3558,7 +3006,7 @@ def extra_oracle_sql():
               SELECT doc_id,
                      list_filter(regexp_split_to_array(
                        regexp_replace(text, '{_MC_SANITIZE}', ' ', 'g'),
-                       '\s+'), x -> x <> '') AS w
+                       '{_PYWS_SPLIT}'), x -> x <> '') AS w
               FROM documents
             ), built AS (
               -- COALESCE: DuckDB's array_to_string is NULL on the empty
@@ -3602,10 +3050,10 @@ def extra_oracle_sql():
                    CAST(position // 100 AS BIGINT) AS shard
             FROM pos
         """,
-        "pack_fixed_sequences": r"""
+        "pack_fixed_sequences": rf"""
             WITH toks AS (
               SELECT doc_id, md5(text) AS okey,
-                     CAST(length(list_filter(regexp_split_to_array(text, '\s+'),
+                     CAST(length(list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
                                              x -> x <> '')) + 1 AS BIGINT)
                        AS n_total
               FROM documents
@@ -3732,67 +3180,6 @@ def extra_oracle_sql():
                 ) GROUP BY c
             )
         """,
-        # independent extraction mechanism: regexp_extract_all + unnest
-        # vs the Arrow href kernel (urljoin/entity handling exercised
-        # by pytest; the planted anchors here are plain absolutes)
-        "graph_anchor_terms": """
-            WITH contrib AS (
-                SELECT 'hub' || CAST(doc_id % 9 AS VARCHAR)
-                       || '.example.net' AS domain, t.term
-                FROM documents,
-                     LATERAL (SELECT unnest(
-                         ['news', 'hub', CAST(doc_id % 9 AS VARCHAR)])
-                         AS term) t
-                UNION ALL
-                SELECT 'peer' || CAST(doc_id % 4 AS VARCHAR)
-                       || '.example.org' AS domain, t.term
-                FROM documents,
-                     LATERAL (SELECT unnest(['peer', 'review', 'site'])
-                              AS term) t
-                WHERE doc_id % 3 <> 0
-            )
-            SELECT domain, term, COUNT(*) AS n_mentions
-            FROM contrib GROUP BY 1, 2
-        """,
-        "graph_domain_edges": f"""
-            WITH docs AS (
-                SELECT doc_id, {_synthetic_url_sql()} AS url,
-                       '<html><body><a href="http://hub'
-                       || CAST(doc_id % 9 AS VARCHAR)
-                       || '.example.net/x">h</a>'
-                       || CASE WHEN doc_id % 3 = 0
-                               THEN '<a href="' || {_synthetic_url_sql()}
-                                    || '">self</a>'
-                               ELSE '<a href="https://peer'
-                                    || CAST(doc_id % 4 AS VARCHAR)
-                                    || '.example.org/y">p</a>' END
-                       || '<p>t</p></body></html>' AS html
-                FROM documents
-            ),
-            links AS (
-                SELECT url,
-                       unnest(regexp_extract_all(
-                           html, '<a href="([^"]*)"', 1)) AS l
-                FROM docs
-            ),
-            doms AS (
-                SELECT lower(regexp_extract(url,
-                           '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]*)', 1))
-                           AS src_domain,
-                       lower(regexp_extract(l,
-                           '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]*)', 1))
-                           AS dst_domain
-                FROM links
-            )
-            SELECT src_domain, dst_domain, COUNT(*) AS weight
-            FROM doms
-            WHERE src_domain <> dst_domain AND dst_domain <> ''
-              AND src_domain <> ''
-            GROUP BY 1, 2
-        """,
-        "graph_pagerank": _pagerank_unrolled_sql(_PR_ITER, _PR_DAMP),
-        "graph_trustrank": _pagerank_unrolled_sql(
-            _PR_ITER, _PR_DAMP, seeds=_TR_SEEDS),
         # independent mechanism: unnest + groupBy per line/paragraph
         # (the corpus-shuffling spelling the Arrow kernel avoids);
         # ratios are int-derived identical doubles -> FLOOR (_trunc4)

@@ -20,8 +20,10 @@ Gate set (public heuristics from the Gopher and C4 papers):
 
 ``words_col`` / ``stopword_ratio`` stay as Column forms for the
 text-statistics queries (textstats.py, entry_ext.py).  They split on
-Java regex ``\\s``, which is ASCII-only, so they are NOT the gate
-features on text with non-ASCII whitespace (NBSP, U+3000).
+``wordhash.PYWS_SPLIT``, python ``str.split()``'s whitespace set, so
+``words_col`` counts the same words as the kernels' ``n_words`` on
+text with non-ASCII whitespace (NBSP, U+3000) — Java regex ``\\s`` is
+ASCII-only.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dqc_spark.textmodels import STOPWORDS
+from dqc_spark.wordhash import PYWS_SPLIT
 
 # union of per-language stopword lists; small → constant-folded IN set
 ALL_STOPWORDS = sorted(set().union(*STOPWORDS.values()))
@@ -38,7 +41,7 @@ ALL_STOPWORDS = sorted(set().union(*STOPWORDS.values()))
 def words_col(text: Column) -> Column:
     """Whitespace tokenization; empty text -> empty array (split of ''
     yields [''] which we filter)."""
-    return F.filter(F.split(text, r"\s+"), lambda w: w != F.lit(""))
+    return F.filter(F.split(text, PYWS_SPLIT), lambda w: w != F.lit(""))
 
 
 def stopword_ratio(text: Column) -> Column:

@@ -57,9 +57,6 @@ __all__ = [
     "extract_text_py",
     "extract_text_col",
     "extract_text",
-    "NOINDEX_PATTERNS",
-    "noindex_py",
-    "noindex_pred",
 ]
 
 _COMMENT = re.compile(r"<!--.*?-->", re.S)
@@ -136,51 +133,3 @@ def extract_text(
         new = extract_text_col(html_col)
     return df.withColumn(text_col, new)
 
-
-# --- robots-meta noindex gate -------------------------------------------
-#
-# Crawl pipelines must respect <meta name="robots" content="noindex">
-# (and the "none" shorthand = noindex,nofollow): publishing such a page
-# in a training corpus ignores an explicit opt-out.  One pattern per
-# attribute order, each handling double-/single-/un-quoted values; kept
-# in the Java ∩ python-re ∩ RE2 subset (no lookaround, no backrefs) so
-# the SAME strings drive Catalyst ``rlike``, the python twin, and the
-# DuckDB oracle — a single source of truth instead of three dialects.
-# HTML comments are stripped first (a commented-out meta is not a
-# directive); matching is on the raw tag text, deliberately NOT a full
-# attribute parser (regex-visible directives are the crawl-pipeline
-# convention, and a parser would fork the oracle).
-_NOINDEX_CORE = (
-    r'(?:"[^"]*\b(?:noindex|none)\b[^"]*"'
-    r"|'[^']*\b(?:noindex|none)\b[^']*'"
-    r"|[^\"'\s>]*\b(?:noindex|none)\b)"
-)
-_NAME_ROBOTS = r"name\s*=\s*(?:\"\s*robots\s*\"|'\s*robots\s*'|robots[\s/>])"
-_CONTENT_NOIDX = r"content\s*=\s*" + _NOINDEX_CORE
-NOINDEX_PATTERNS = (
-    rf"(?is)<meta\b[^>]*{_NAME_ROBOTS}[^>]*{_CONTENT_NOIDX}",
-    rf"(?is)<meta\b[^>]*{_CONTENT_NOIDX}[^>]*{_NAME_ROBOTS}",
-)
-_NOINDEX_COMPILED = tuple(re.compile(p) for p in NOINDEX_PATTERNS)
-
-
-def noindex_py(html_bytes: bytes | str | None) -> bool | None:
-    """True iff the page carries a robots noindex/none directive —
-    shared semantics with ``noindex_pred`` via the same pattern
-    strings.  None input stays None (unknown, not indexable)."""
-    if html_bytes is None:
-        return None
-    s = (html_bytes.decode("utf-8", errors="replace")
-         if isinstance(html_bytes, bytes) else html_bytes)
-    s = _COMMENT.sub("", s)
-    return any(rx.search(s) is not None for rx in _NOINDEX_COMPILED)
-
-
-def noindex_pred(html: Column | str) -> Column:
-    """The gate as a pure-Catalyst predicate (codegen regexps, zero
-    python).  Accepts the binary ``html`` column (cast does lossy UTF-8
-    like the twin's errors="replace"; they differ only on invalid
-    bytes) or an already-decoded string column.  NULL html -> NULL."""
-    h = F.col(html) if isinstance(html, str) else html
-    s = F.regexp_replace(h.cast("string"), r"(?s)<!--.*?-->", "")
-    return s.rlike(NOINDEX_PATTERNS[0]) | s.rlike(NOINDEX_PATTERNS[1])

@@ -42,18 +42,13 @@ def explode_lines(
     key_col: str,
     text_col: str = "text",
     sep: str = "\n",
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(key, *carry, line_no, line) — one row per line, position
-    preserved.  NULL text is treated as the empty document (one empty
-    line) so the key still round-trips through the rebuild; ``sep`` is
-    a Java regex (the default matches literal newlines).  ``carry``
-    names extra per-document columns to replicate onto every line —
-    part of the same map-side explode, NOT a join (a join-back would
-    shuffle the line text the digest designs exist to keep local)."""
+    """(key, line_no, line) — one row per line, position preserved.
+    NULL text is treated as the empty document (one empty line) so the
+    key still round-trips through the rebuild; ``sep`` is a Java regex
+    (the default matches literal newlines)."""
     return df.select(
         F.col(key_col).alias("key"),
-        *[F.col(c) for c in carry],
         F.posexplode(
             F.split(F.coalesce(F.col(text_col), F.lit("")), sep)
         ).alias("line_no", "line"),
@@ -61,8 +56,7 @@ def explode_lines(
 
 
 def resolve_join_sep(sep: str, join_sep: str | None) -> str:
-    """The split/rebuild separator contract shared by every line
-    operator (``dedup_lines``, ``boilerplate.remove_boilerplate``):
+    """The split/rebuild separator contract of ``dedup_lines``:
     ``sep`` is a Java REGEX for splitting, ``join_sep`` the LITERAL
     rejoin string.  ``join_sep=None`` defaults to ``sep`` only when
     ``sep`` is literal-safe — regex-mode callers (``sep=r'\\n{2,}'``)
@@ -81,9 +75,7 @@ def resolve_join_sep(sep: str, join_sep: str | None) -> str:
 def rebuild_docs(kept: DataFrame, join_sep: str, out_col: str) -> DataFrame:
     """(key, n_lines_kept, <out_col>) from a kept-lines frame — one
     groupBy over the document key: collect surviving (line_no, line)
-    structs, array_sort, concat_ws, all JVM-side.  Shared by
-    ``dedup_lines`` and ``boilerplate.remove_boilerplate`` so the
-    rebuild semantics can never drift between them."""
+    structs, array_sort, concat_ws, all JVM-side."""
     return kept.groupBy("key").agg(
         F.count(F.lit(1)).alias("n_lines_kept"),
         F.concat_ws(

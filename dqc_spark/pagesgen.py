@@ -147,10 +147,9 @@ def make_page(doc_id: int, allow_dup_url: bool = True) -> dict:
     # outlink block (v2): 1-3 anchors to other site domains, zipf-mixed
     # like the url domains, EMPTY visible text — extraction drops them
     # entirely, so the text column (and every text-derived golden) is
-    # byte-unchanged while the corpus carries a real link graph for the
-    # linkgraph/pagerank/curate-prior operators.  Drawn AFTER every
-    # other field's randomness so the v1 values of url/text/lang/ts are
-    # preserved per doc_id.
+    # byte-unchanged while the corpus carries a real link graph.  Drawn
+    # AFTER every other field's randomness so the v1 values of
+    # url/text/lang/ts are preserved per doc_id.
     n_links = 1 + int(r.integers(0, 3))
     anchors = []
     for _ in range(n_links):

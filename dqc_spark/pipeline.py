@@ -180,9 +180,9 @@ def run_pipeline(
 
 def _content_key(key_col: str, text_col: str) -> Column:
     """128-bit-per-part injective content key for the text-rewrite
-    stages (boilerplate strip, corpus line dedup): at the 1e9–1e12-doc
-    scale this module targets, 64-bit birthday collisions (~n^2/2^65)
-    are expected, and a collision silently drops a distinct document.
+    stage (corpus line dedup): at the 1e9–1e12-doc scale this module
+    targets, 64-bit birthday collisions (~n^2/2^65) are expected, and
+    a collision silently drops a distinct document.
     ``md5(key)||md5(text)`` is INJECTIVE over the pair up to md5
     collisions — a separator-joined md5 is not (concat_ws SKIPS NULL
     args and the separator can occur inside crawl text, so
@@ -216,112 +216,81 @@ def curate(
     mix_alpha: float | None = None,
     blocked_domains=None,
     repetition_thresholds: dict | None = None,
-    domain_ranks: DataFrame | None = None,
-    min_domain_rank: float | None = None,
     lm: dict | None = None,
     c4_line_clean: bool = False,
-    drop_noindex: bool = False,
-    trust_seeds: list | None = None,
     line_dedup_unit: str = "line",
     stage_metrics: dict | None = None,
     split_weights: dict | None = None,
-    quality_model=None,
-    quality_model_threshold: float | None = None,
     langid_model: dict | None = None,
     fix_encoding: bool = False,
     robots: DataFrame | None = None,
     robots_user_agent: str = "*",
     toxic_words=None,
     max_toxicity: float = 0.0,
-    boilerplate_max_frac: float | None = None,
-    boilerplate_min_pages: int | None = None,
     max_ppl: float | None = None,
 ) -> DataFrame:
-    """Full corpus curation: (snapshot filter) -> (normalize) ->
-    (line dedup) -> quality filter -> dedup -> (decontaminate) ->
-    quota -> (mix) -> pack -> (split).
+    """Full corpus curation: (blocklist) -> (robots.txt gate) ->
+    (snapshot filter) -> (normalize) -> (line dedup) -> quality
+    filter -> dedup -> (decontaminate) -> quota -> (mix) -> pack ->
+    (split).
 
-    ``split_weights`` (optional, LAST stage): emit a deterministic
-    ``split`` column via ``sampling.split_corpus`` — assigned after
-    every filter so slice composition matches hashing the final corpus,
-    and a doc that survives a re-curation keeps its slice.
+    The composition a training-data run actually executes, in execution
+    order, each stage an operator tested on its own (parenthesized
+    stages default OFF):
 
-    The composition a training-data run actually executes, each stage an
-    operator tested on its own (parenthesized stages default OFF):
-
-      0a. ``blocked_domains`` — UT1-style domain blocklist
+      1. (``blocked_domains``) — UT1-style domain blocklist
          (urlops.domain_filter, suffix semantics); runs before
          everything: a shuffle-free codegen filter is the cheapest
          possible row reduction
-      0a''. ``drop_noindex`` — respect robots-meta opt-outs: drop pages
-         whose html carries ``<meta name="robots" content="noindex">``
-         (or "none"); pages without html / without a directive are
-         KEPT.  Pure-Catalyst regexps (htmlextract.noindex_pred),
-         shuffle-free, right behind the blocklist.
-      0b'. ``min_domain_rank`` — link-graph reputation gate: drop pages
-         whose domain's PageRank (linkgraph.py) falls below the
-         threshold.  ``domain_ranks`` is a (node, rank) frame — pass
-         the output of ``pagerank(domain_edges(...))``; when omitted
-         and the pages carry an ``html`` column, the prior is computed
-         from the corpus's OWN link structure.  Domains absent from
-         the rank table are KEPT (unknown is not evidence of spam).
-      0. ``prior`` — incremental snapshot filter: drop pages whose text
-         was already ingested (snapshot.py digest anti-join)
-      1a''. ``toxic_words`` — word-list toxicity gate (toxicity.py):
-         drop pages whose blocked-token fraction exceeds
-         ``max_toxicity`` (default 0.0: one listed token drops the
-         page, the C4 bad-words rule); runs after the heuristic gates
-      0a'''. ``robots`` — RFC 9309 compliance gate (robots.py): drop
+      2. (``robots``) — RFC 9309 compliance gate (robots.py): drop
          pages their host's robots.txt disallows for
          ``robots_user_agent``; hosts without a policy row are kept
-      0a'. ``fix_encoding`` — mojibake repair (encodingfix.py): undo
+      3. (``prior``) — incremental snapshot filter: drop pages whose
+         text was already ingested (snapshot.py digest anti-join)
+      4. (``fix_encoding``) — mojibake repair (encodingfix.py): undo
          UTF-8-read-as-cp1252 damage BEFORE normalize strips the C1
          control chars the repair needs as evidence
-      0b. ``normalize_text`` — NFC/control/whitespace canonicalization
+      5. (``normalize_text``) — NFC/control/whitespace canonicalization
          (normalize.py) so every later hash sees canonical bytes
-      0b'. ``boilerplate_max_frac`` — per-DOMAIN template stripping
-         (boilerplate.py): a line on >= that fraction of a domain's
-         pages (``boilerplate_min_pages`` floor, default 4) is removed
-         from EVERY page of that domain.  Before corpus line dedup:
-         templates are what keep-first dedup would otherwise preserve
-         once per site
-      0c. ``line_dedup_min_len`` — corpus-level boilerplate line dedup
+      6. (``line_dedup_min_len``) — corpus-level boilerplate line dedup
          (linededup.py), BEFORE gating: de-boilerplated text is what
          the quality gates should score.  ``line_dedup_unit`` picks the
          hash unit: "line" (C4) or "paragraph" (CCNet — blank-line
          separated blocks, rebuilt with "\\n\\n")
-      0d. ``c4_line_clean`` — C4-style line cleaning (c4clean.py):
+      7. (``c4_line_clean``) — C4-style line cleaning (c4clean.py):
          drop short / unterminated / javascript lines inside each page,
          then drop pages under 3 surviving sentences or carrying
          lorem-ipsum / curly-bracket markers.  After line dedup (the
          dedup should see the raw boilerplate), before scoring (gates
          should score the cleaned text).  Shuffle-free.
-      1. ``annotate`` + keep-filter (gates/langid/ppl/scrub; 0 shuffles)
-      1a'. ``quality_model`` — trained-classifier gate
-         (qualitymodel.LogRegModel, e.g. from ``train_logreg`` on a
-         labeled sample + ``evalmetrics.choose_threshold``): drop docs
-         whose sigmoid score over the annotated feature columns falls
-         below ``quality_model_threshold`` (default 0.5).  Pure-
-         Catalyst sigmoid — shuffle-free, codegen, composes with the
-         heuristic gates the same way ``min_domain_rank`` composes
-         with the blocklist (model refines, never replaces)
-      1b. ``repetition_thresholds`` — Gopher A1.1 repetition gates
+      8. ``annotate`` + keep-filter (gates/langid/ppl/scrub; 0 shuffles)
+      9. (``toxic_words``) — word-list toxicity gate (toxicity.py):
+         drop pages whose blocked-token fraction exceeds
+         ``max_toxicity`` (default 0.0: one listed token drops the
+         page, the C4 bad-words rule); runs after the heuristic gates
+      10. url dedup — one row per ``key_col``, winner by min md5 of the
+         scrubbed text
+      11. (``repetition_thresholds``) — Gopher A1.1 repetition gates
          (textstats.repetition_signals) on the kept scrubbed text;
          e.g. ``{"dup_5gram_char_frac": 0.15}``; drop on ANY exceed
-      2. exact dedup — min-key canonical per identical ``scrubbed_text``
-         (one digest groupBy; dedup.py)
-      3. near-dup dedup — MinHash-LSH pairs -> connected components ->
+      12. exact dedup — min-key canonical per identical
+         ``scrubbed_text`` (one digest groupBy; dedup.py)
+      13. near-dup dedup — MinHash-LSH pairs -> connected components ->
          canonical survivor per cluster (components.py); skipped when
          ``near_dup_threshold`` is None
-      3b. ``benchmark`` — eval-set decontamination on the scrubbed text
-         (decontam.py broadcast gram probe)
-      4. per-domain quota — portable-hash stratified cap of
+      14. (``benchmark``) — eval-set decontamination on the scrubbed
+         text (decontam.py broadcast gram probe)
+      15. per-domain quota — portable-hash stratified cap of
          ``domain_quota`` docs per registrable host (sampling.py);
          the hot-domain bound, skipped when None
-      4b. ``mix_alpha`` — temperature-weighted source mixing by domain
+      16. (``mix_alpha``) — temperature-weighted source mixing by domain
          (mixing.py); flattens what the hard quota left skewed
-      5. token-budget packing — ``bin_id`` per (lang, budget) context
+      17. token-budget packing — ``bin_id`` per (lang, budget) context
          window over the surviving docs (sampling.py); skipped when None
+      18. (``split_weights``) — emit a deterministic ``split`` column
+         via ``sampling.split_corpus``, LAST: assigned after every
+         filter so slice composition matches hashing the final corpus,
+         and a doc that survives a re-curation keeps its slice
 
     Returns the curated frame with ``doc_key``, ``domain`` and (if
     packing) ``n_tokens``/``bin_id`` columns appended.  Stage order
@@ -351,20 +320,11 @@ def curate(
             f"line_dedup_unit must be 'line' or 'paragraph', "
             f"got {line_dedup_unit!r}")
     if line_dedup_unit != "line" and line_dedup_min_len is None:
-        # same guard as trust_seeds: a non-default unit with the stage
-        # disabled would LOOK like paragraph dedup ran when it did not
+        # a non-default unit with the stage disabled would LOOK like
+        # paragraph dedup ran when it did not
         raise ValueError(
             "line_dedup_unit='paragraph' has no effect without "
             "line_dedup_min_len (the stage is disabled)")
-    if boilerplate_min_pages is not None and boilerplate_max_frac is None:
-        # no-silent-noop guard, same shape as the unit/threshold guards
-        raise ValueError(
-            "boilerplate_min_pages requires boilerplate_max_frac")
-    if quality_model_threshold is not None and quality_model is None:
-        # same no-silent-noop guard: a threshold with no model would
-        # look like the classifier gate ran when it did not
-        raise ValueError(
-            "quality_model_threshold requires quality_model")
 
     def _mark(stage: str, df: DataFrame) -> DataFrame:
         if stage_metrics is not None:
@@ -381,14 +341,6 @@ def curate(
         # anti-join
         pages = _mark("blocked_domains",
             domain_filter(pages, blocked_domains, url_col=key_col))
-    if drop_noindex:
-        from dqc_spark.htmlextract import noindex_pred
-
-        if "html" not in pages.columns:
-            raise ValueError("drop_noindex needs an 'html' column")
-        # NULL html / no directive -> keep (absence is not an opt-out)
-        pages = _mark("drop_noindex", pages.filter(
-            ~F.coalesce(noindex_pred("html"), F.lit(False))))
     if robots is not None:
         from dqc_spark.robots import robots_gate
 
@@ -396,50 +348,6 @@ def curate(
         # carries only url + the host's tiny rule arrays
         pages = _mark("robots", robots_gate(
             pages, robots, user_agent=robots_user_agent, url_col=key_col))
-    if trust_seeds and min_domain_rank is None:
-        # silently ignoring the seeds would look like the reputation
-        # gate ran when it did not (same guard as the CLI's)
-        raise ValueError("trust_seeds requires min_domain_rank")
-    if min_domain_rank is not None:
-        from dqc_spark.linkgraph import domain_edges, pagerank, trustrank
-        from dqc_spark.urlops import domain_of
-
-        if domain_ranks is None:
-            # self-prior: rank the corpus's own domain graph.  Requires
-            # the raw html column (link extraction needs anchors).
-            # ``trust_seeds`` switches the prior to TrustRank (teleport
-            # restricted to the vetted domains — interlinked spam farms
-            # score zero unless a trusted domain links toward them).
-            if "html" not in pages.columns:
-                raise ValueError(
-                    "min_domain_rank without domain_ranks needs an "
-                    "'html' column to build the link graph from")
-            edges = domain_edges(pages, url_col=key_col)
-            domain_ranks = (trustrank(edges, trust_seeds)
-                            if trust_seeds else pagerank(edges))
-        elif trust_seeds:
-            raise ValueError(
-                "trust_seeds only applies when curate computes the "
-                "prior itself; drop domain_ranks or pass "
-                "linkgraph.trustrank(...) output as domain_ranks")
-        # left join + null-keep: the rank table covers linked domains
-        # only; a never-linked domain is unknown, not spam.  The join
-        # key is the registrable host — domain cardinality is ~5 orders
-        # below page cardinality, so AQE picks a broadcast build side
-        # at any realistic scale.
-        ranks = domain_ranks.select(
-            F.col("node").alias("__rank_domain"),
-            F.col("rank").alias("__domain_rank"))
-        pages = (
-            pages.withColumn("__pr_domain", domain_of(key_col))
-            .join(ranks,
-                  F.col("__pr_domain") == F.col("__rank_domain"), "left")
-            .filter(F.col("__domain_rank").isNull()
-                    | (F.col("__domain_rank") >= F.lit(
-                        float(min_domain_rank))))
-            .drop("__pr_domain", "__rank_domain", "__domain_rank")
-        )
-        pages = _mark("domain_rank_gate", pages)
     if prior is not None:
         from dqc_spark.snapshot import new_docs
 
@@ -455,34 +363,6 @@ def curate(
         from dqc_spark.normalize import normalized_col
 
         pages = pages.withColumn(text_col, normalized_col(F.col(text_col)))
-    if boilerplate_max_frac is not None:
-        from dqc_spark.boilerplate import remove_boilerplate
-        from dqc_spark.cache import track as _track
-        from dqc_spark.urlops import domain_of
-
-        # nullif: domain_of returns '' (not NULL) for unparseable /
-        # host-less keys — left as '', every such page would pool into
-        # ONE fake domain and share "templates" across unrelated sites;
-        # NULL routes them to boilerplate.py's no-group exemption
-        # (review finding, r4)
-        keyed = _track(
-            pages.withColumn(
-                "__bp_domain", F.nullif(domain_of(key_col), F.lit("")))
-            .withColumn("__bpk", _content_key(key_col, text_col))
-            .dropDuplicates(["__bpk"])
-        )
-        stripped = remove_boilerplate(
-            keyed, "__bpk", "__bp_domain", text_col,
-            max_frac=boilerplate_max_frac,
-            min_pages=(4 if boilerplate_min_pages is None
-                       else boilerplate_min_pages),
-        )
-        pages = (
-            keyed.join(stripped.select("__bpk", "text_clean"), on="__bpk")
-            .withColumn(text_col, F.col("text_clean"))
-            .drop("text_clean", "__bpk", "__bp_domain")
-        )
-        pages = _mark("boilerplate_strip", pages)
     if line_dedup_min_len is not None:
         from dqc_spark.cache import track as _track
         from dqc_spark.linededup import dedup_lines
@@ -554,24 +434,6 @@ def curate(
         # list broadcasts, scoring is one Arrow kernel, no shuffle
         kept = _mark("toxicity", toxicity_gate(
             kept, toxic_words, max_toxicity, text_col=text_col))
-    if quality_model is not None:
-        from dqc_spark.qualitymodel import score_col
-
-        missing = [c for c in quality_model.feature_cols
-                   if c not in kept.columns]
-        if missing:
-            raise ValueError(
-                f"quality_model needs feature column(s) {missing} — "
-                "train on the gate feature set annotate() emits "
-                "(features.FEATURE_NAMES) so scoring stays a pure "
-                "Column expression over the annotated frame")
-        thr = (0.5 if quality_model_threshold is None
-               else float(quality_model_threshold))
-        # pure-Catalyst sigmoid gate on the annotated survivors —
-        # shuffle-free; runs before the url-dedup window so the window
-        # shuffles only model-kept rows
-        kept = _mark("quality_model_gate",
-                     kept.filter(score_col(quality_model) >= F.lit(thr)))
     # URL uniqueness (north-rule check, applied as a curation step): a
     # re-crawled url appears with several texts — keep ONE row per key,
     # deterministic winner by content digest (min md5).  Partitioned by
@@ -643,7 +505,7 @@ def curate(
             bench_text_col=text_col,
         ))
     # domain via urlops.domain_of — the SAME host notion the blocklist
-    # gate (stage 0a) and domain stats use: lowercased, userinfo and
+    # gate (stage 1) and domain stats use: lowercased, userinfo and
     # port stripped.  The previous raw regex kept `user@host:port`
     # intact, so userinfo-salted re-crawl urls fragmented the quota
     # strata and evaded the hot-domain cap — the exact evasion the r4

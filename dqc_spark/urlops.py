@@ -131,9 +131,10 @@ _DOMAIN_RE = re.compile(_DOMAIN_PATTERN)
 
 def domain_of_py(url: str | None) -> str | None:
     """Python twin of ``domain_of`` — same regex, same lowercasing,
-    same NULL-in/NULL-out — for kernels that need the host INSIDE an
-    Arrow batch (linkgraph anchor aggregation).  Dual-implementation
-    pair: change both or none (pinned by tests/test_urlops.py)."""
+    same NULL-in/NULL-out — the host notion a pure-Python reference
+    (e.g. the robots.txt gate's twin in tests/test_robots.py) keys on.
+    Dual-implementation pair: change both or none (pinned by
+    tests/test_urlops.py)."""
     if url is None:
         return None
     m = _DOMAIN_RE.match(url)

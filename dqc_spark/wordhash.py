@@ -78,6 +78,7 @@ __all__ = [
     "sea_isolate",
     "UWS_CLASS",
     "UWS_SPLIT",
+    "PYWS_SPLIT",
     "NONALNUM_JAVA",
     "NONALNUM_PY",
     "cjk_isolate",
@@ -154,6 +155,13 @@ UWS_CLASS = (
     " -     　"
 )
 UWS_SPLIT = f"[{UWS_CLASS}]+"
+#: python str.split()'s EXACT whitespace set: UWS plus the four ASCII
+#: information separators \x1c-\x1f (test_unicode_tokens pins UWS ==
+#: python whitespace minus exactly those four).  The split of the gate
+#: family — ``gates.words_col`` and the DuckDB oracles of kernels that
+#: tokenize with bare str.split() — so its word counts equal
+#: ``features_py``'s ``n_words``.
+PYWS_SPLIT = f"[{UWS_CLASS}\x1c-\x1f]+"
 NONALNUM_JAVA = r"[^\p{L}\p{N}]+"  # also the RE2/DuckDB spelling
 NONALNUM_PY = re.compile(r"[\W_]+", re.UNICODE)
 

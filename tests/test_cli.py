@@ -236,49 +236,6 @@ def test_cli_completeness_and_freshness(capsys, spark, db_path, tmp_path):
     assert "is_column_null_fraction_max" in out and "is_column_fresh" in out
 
 
-def test_cli_curate_quality_model(capsys, spark, db_path, tmp_path):
-    # planted good/mediocre corpus (same shapes as the pipeline test:
-    # everything passes the heuristic gates, only the trained model
-    # separates), labels parquet, min-precision threshold choice
-    from dqc_spark.textmodels import WORDS
-
-    en = WORDS["en"]
-    good = " ".join(en[:28])
-    mediocre = " ".join(en[44:68] + ["the", "of"])
-    rows, labels = [], []
-    for i in range(10):
-        rows.append((f"http://good.example.com/{i}", good + f" tag{i}", "en"))
-        rows.append((f"http://soso.example.com/{i}",
-                     mediocre + f" tag{i}", "en"))
-        labels.append((f"http://good.example.com/{i}", 1.0))
-        labels.append((f"http://soso.example.com/{i}", 0.0))
-    src = str(tmp_path / "pages.parquet")
-    lab = str(tmp_path / "labels.parquet")
-    out = str(tmp_path / "curated.parquet")
-    spark.createDataFrame(rows, "url string, text string, lang string") \
-        .write.parquet(src)
-    spark.createDataFrame(labels, "url string, label double") \
-        .write.parquet(lab)
-
-    rc, txt = _run(capsys, [
-        "--db-path", db_path, "curate", "--input", src, "--output", out,
-        "--near-dup-threshold", "-1",
-        "--quality-labels", lab, "--quality-min-precision", "0.9",
-        "--stage-metrics",
-    ])
-    assert rc == 0 and "quality gate: threshold" in txt
-    assert "stage quality_model_gate: 10 docs" in txt
-    kept = {r["url"] for r in spark.read.parquet(out).select("url").collect()}
-    assert kept == {u for u, _, _ in rows if "good" in u}
-
-    # flag validation: threshold flags without labels
-    rc2, _ = _run(capsys, [
-        "--db-path", db_path, "curate", "--input", src, "--output", out,
-        "--quality-threshold", "0.5",
-    ])
-    assert rc2 == 2
-
-
 def test_cli_induce_blocklist_and_reuse(capsys, spark, db_path, tmp_path):
     src = str(tmp_path / "labeled.parquet")
     rows = ([(f"http://farm.net/{i}", i % 10 == 0) for i in range(20)]
@@ -445,6 +402,18 @@ def test_cli_curate_config_rejects_bad_keys(capsys, tmp_path):
     assert rc == 2
     err = capsys.readouterr().err
     assert "unknown config key" in err and "near_dup_treshold" in err
+
+    # a saved spec naming a deleted stage (domain-rank gate, trained
+    # quality classifier) fails the same way instead of skipping it
+    for key, val in (("min_domain_rank", 0.1),
+                     ("quality_labels", "labels.parquet")):
+        with open(cfg, "w") as f:
+            json.dump({key: val}, f)
+        rc = cli.main(["curate", "--config", cfg,
+                       "--input", "x", "--output", "y"])
+        assert rc == 2
+        err = capsys.readouterr().err
+        assert "unknown config key" in err and key in err
 
     with open(cfg, "w") as f:
         json.dump({"normalize": 0.5}, f)          # switch needs bool

@@ -120,16 +120,22 @@ def test_fixture_cache_keys_on_the_writer_code(monkeypatch, tmp_path):
             writer(path)
         return _cached_fixture("t", rows, build, writer)
 
-    a, b = cached(_writer_a), cached(_writer_b)
-    assert a != b
+    a = cached(_writer_a)
     assert cached(_writer_a) == a
-    assert len(builds) == 2  # the second _writer_a call reused the dir
-    for path, body in ((a, "a"), (b, "b")):
-        with open(os.path.join(path, "part-0")) as f:
-            assert f.read() == body
+    assert len(builds) == 1  # the second _writer_a call reused the dir
+    other = _cached_fixture("t", rows[:1], _writer_a, _writer_a)
+    assert other != a
+    # a concurrent builder's scratch dir must survive the pruning
+    busy = a + ".build-0000"
+    os.makedirs(busy)
+    b = cached(_writer_b)
+    assert b != a and len(builds) == 2
+    with open(os.path.join(b, "part-0")) as f:
+        assert f.read() == "b"
+    # b supersedes a (same rows, newer writer code): a is gone; the
+    # fixture of other rows and the scratch dir stay
     assert sorted(os.listdir(tmp_path)) == sorted(
-        os.path.basename(p) for p in (a, b))  # no scratch dirs left
-    assert _cached_fixture("t", rows[:1], _writer_a, _writer_a) not in (a, b)
+        os.path.basename(p) for p in (b, other, busy))
 
 
 def _dqc_import(node) -> bool:

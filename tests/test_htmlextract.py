@@ -2,7 +2,6 @@
 pages table (the north-rule invariant), messy-markup zoo, NULL paths,
 and the conditional only-missing repair mode."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from dqc_spark.htmlextract import extract_text, extract_text_col, extract_text_py
@@ -107,101 +106,3 @@ def test_missing_text_column(spark):
     out = extract_text(df)
     assert out.collect()[0]["text"] == "x"
 
-
-# --- robots-meta noindex gate -------------------------------------------
-
-NOINDEX_ZOO = [
-    ('<meta name="robots" content="noindex, nofollow">', True),
-    ("<meta content='NONE' name='ROBOTS'>", True),          # reversed attrs
-    ("<meta name=robots content=noindex>", True),           # unquoted
-    ("<META NAME=ROBOTS CONTENT=NOINDEX />", True),         # case + self-close
-    ('<meta name="robots" content="index, follow">', False),
-    ('<meta name="robots" content="nofollow">', False),     # nofollow only
-    ('<!--<meta name="robots" content="noindex">-->', False),  # commented out
-    ('<meta name="description" content="noindex tips">', False),  # wrong name
-    ('<meta name="robots" content="noindexing">', False),   # word boundary
-    ("no meta at all", False),
-    ("", False),
-]
-
-
-def test_noindex_python_twin():
-    from dqc_spark.htmlextract import noindex_py
-
-    for frag, want in NOINDEX_ZOO:
-        html = f"<html><head>{frag}</head><body>x</body></html>".encode()
-        assert noindex_py(html) is want, frag
-    assert noindex_py(None) is None
-
-
-def test_noindex_spark_matches_python(spark):
-    # Java rlike vs python re over the same pattern strings
-    from dqc_spark.htmlextract import noindex_pred
-
-    rows = [
-        (i, f"<html><head>{frag}</head><body>x</body></html>".encode())
-        for i, (frag, _) in enumerate(NOINDEX_ZOO)
-    ] + [(len(NOINDEX_ZOO), None)]
-    df = spark.createDataFrame(rows, "i long, html binary")
-    got = {r["i"]: r["noindex"]
-           for r in df.select("i", noindex_pred("html").alias("noindex"))
-           .collect()}
-    for i, (frag, want) in enumerate(NOINDEX_ZOO):
-        assert got[i] is want, frag
-    assert got[len(NOINDEX_ZOO)] is None  # NULL html -> NULL
-
-
-def test_curate_drop_noindex(spark):
-    from dqc_spark.pipeline import curate
-
-    pages = generate_pages(spark, 80, n_partitions=2)
-    # plant the directive into the html of 10 pages; curate must drop
-    # exactly those and keep the rest (html content is otherwise unused
-    # by the default stages)
-    tagged = pages.withColumn(
-        "html",
-        F.when(
-            F.xxhash64("url") % 8 == 0,
-            F.concat(
-                F.lit(b'<meta name="robots" content="noindex">'),
-                F.col("html")),
-        ).otherwise(F.col("html")),
-    )
-    off = curate(tagged, near_dup_threshold=None)
-    on = curate(tagged, near_dup_threshold=None, drop_noindex=True)
-    n_tagged_kept_off = off.filter(
-        F.xxhash64("url") % 8 == 0).count()
-    assert n_tagged_kept_off > 0  # the gate-off run keeps some tagged docs
-    assert on.filter(F.xxhash64("url") % 8 == 0).count() == 0
-    assert on.count() == off.count() - n_tagged_kept_off
-
-    with pytest.raises(ValueError, match="html"):
-        curate(pages.drop("html"), near_dup_threshold=None,
-               drop_noindex=True)
-
-
-def test_noindex_cross_dialect_fuzz(spark):
-    """The noindex gate's whole design is ONE set of pattern strings
-    evaluated by three regex engines; fuzz Java-rlike vs python-re over
-    adversarial fragments built from the tokens the patterns care
-    about."""
-    import random
-
-    from dqc_spark.htmlextract import noindex_py, noindex_pred
-
-    rng = random.Random(0)
-    tokens = [
-        "<meta ", ">", "/>", "name", "content", "robots", "ROBOTS",
-        "noindex", "NOINDEX", "none", "nofollow", "index", "=", " ",
-        '"', "'", ",", "<!--", "-->", "<p>", "descr", "x",
-    ]
-    frags = ["".join(rng.choice(tokens) for _ in range(rng.randint(1, 12)))
-             for _ in range(300)]
-    df = spark.createDataFrame(
-        [(i, f.encode()) for i, f in enumerate(frags)],
-        "i long, html binary")
-    got = {r["i"]: r["noindex"]
-           for r in df.select("i", noindex_pred("html").alias("noindex"))
-           .collect()}
-    for i, f in enumerate(frags):
-        assert got[i] is noindex_py(f.encode()), repr(f)

@@ -431,55 +431,3 @@ def test_curate_stage_metrics(spark):
     assert vals[0] == 120
     assert all(a >= b for a, b in zip(vals, vals[1:])), metrics
     assert metrics["final"] == out.count()
-
-
-def test_curate_quality_model_gate(spark):
-    """Stage 1a': a trained classifier gate drops planted mediocre docs
-    that PASS every heuristic gate (stopword_ratio 0.08 > the 0.05
-    floor) — the model learns the sharper boundary from labels."""
-    from dqc_spark.pipeline import annotate, curate
-    from dqc_spark.qualitymodel import train_logreg
-
-    # both classes: >= 20 words, alphabetic, in-LM-ORDER word runs so
-    # the default bigram LM scores ppl ~51 (< the 100 gate), en langid.
-    # good ~ 0.69 stopword ratio; mediocre ~ 0.074 — above the 0.05
-    # heuristic floor, below what the labels call quality.
-    from dqc_spark.textmodels import WORDS
-
-    en = WORDS["en"]
-    good = " ".join(en[:28])
-    mediocre = " ".join(en[44:68] + ["the", "of"])
-    rows = []
-    for i in range(12):
-        rows.append((f"http://good.example.com/{i}", good + f" tag{i}",
-                     "en", 1.0))
-        rows.append((f"http://soso.example.com/{i}",
-                     mediocre + f" tag{i}", "en", 0.0))
-    pages = spark.createDataFrame(
-        [(u, t, l) for u, t, l, _ in rows], "url string, text string, lang string")
-    labeled = spark.createDataFrame(rows,
-        "url string, text string, lang string, label double")
-
-    ann = annotate(labeled).persist()
-    # sanity: every planted doc passes the heuristic gates
-    assert ann.filter(~F.col("keep")).count() == 0
-    model = train_logreg(ann, ["stopword_ratio"], "label")
-    ann.unpersist()
-
-    metrics: dict = {}
-    cur = curate(pages, near_dup_threshold=None, quality_model=model,
-                 quality_model_threshold=0.5, stage_metrics=metrics)
-    kept = {r["url"] for r in cur.select("url").collect()}
-    assert kept == {u for u, _, _, lab in rows if lab == 1.0}
-    # the stage metric rows pin where the cut happened
-    assert metrics["quality_gates"] == 24
-    assert metrics["quality_model_gate"] == 12
-
-    # no-silent-noop guards
-    import dataclasses
-
-    with pytest.raises(ValueError, match="quality_model_threshold"):
-        curate(pages, quality_model_threshold=0.5)
-    bad = dataclasses.replace(model, feature_cols=["no_such_feature"])
-    with pytest.raises(ValueError, match="no_such_feature"):
-        curate(pages, quality_model=bad).count()

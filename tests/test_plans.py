@@ -326,24 +326,6 @@ def test_repetition_signals_plan_has_no_shuffle(docs):
     assert "MapInPandas" in plan
 
 
-def test_domain_edges_single_exchange(docs):
-    """Kernel -> explode -> ONE groupBy exchange of domain pairs."""
-    from dqc_spark.linkgraph import domain_edges
-
-    pages = docs.select(
-        F.concat(F.lit("http://site"), (F.col("doc_id") % 7).cast("string"),
-                 F.lit(".example.com/p")).alias("url"),
-        F.encode(F.concat(F.lit('<a href="http://hub'),
-                          (F.col("doc_id") % 5).cast("string"),
-                          F.lit('.example.net/">h</a>')), "utf-8")
-        .alias("html"),
-    )
-    out = domain_edges(pages)
-    plan = plan_str(out)
-    assert plan.count("Exchange") <= 2  # partial+final agg exchange only
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-
-
 def test_lm_gram_counts_shuffle_pre_aggregated_rows_only(docs):
     """LM training counting pass: ONE exchange, carrying the kernel's
     per-batch (gram, cnt) combiner partials — never per-token rows.
@@ -352,17 +334,6 @@ def test_lm_gram_counts_shuffle_pre_aggregated_rows_only(docs):
     from dqc_spark.lmtrain import word_counts
 
     p = plan_str(word_counts(docs, "text"))
-    assert p.count("Exchange") == 1
-    assert "MapInPandas" in p
-
-
-def test_anchor_term_counts_single_exchange(spark):
-    from dqc_spark.linkgraph import anchor_term_counts
-
-    df = spark.createDataFrame(
-        [("http://a.com/1", b'<a href="http://b.com/x">words here</a>')],
-        "url string, html binary")
-    p = plan_str(anchor_term_counts(df))
     assert p.count("Exchange") == 1
     assert "MapInPandas" in p
 

@@ -88,55 +88,6 @@ def test_line_dedup_key_injective(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pagerank_fast_path_long_node_ids(spark):
-    from dqc_spark.linkgraph import pagerank, trustrank
-
-    edges = spark.createDataFrame(
-        [(1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (1, 3, 1.0)],
-        "src_domain long, dst_domain long, weight double")
-    fast = pagerank(edges, weight_col="weight", n_iter=6)
-    assert dict(fast.dtypes)["node"] == "bigint"
-    f = {r["node"]: r["rank"] for r in fast.collect()}
-    slow = {r["node"]: r["rank"]
-            for r in pagerank(edges, weight_col="weight", n_iter=6,
-                              driver_threshold=0).collect()}
-    assert set(f) == {1, 2, 3} and set(slow) == {1, 2, 3}
-    for k in f:
-        assert f[k] == pytest.approx(slow[k], abs=1e-9)
-    # trustrank seeds keep the node dtype too (str() coercion matched
-    # nothing on long-keyed graphs)
-    t = {r["node"]: r["rank"]
-         for r in trustrank(edges, seeds=[1], weight_col="weight",
-                            n_iter=6).collect()}
-    assert t[1] > t[2] > 0
-
-
-def test_pagerank_null_endpoint_and_weight(spark):
-    from dqc_spark.linkgraph import pagerank
-
-    # NULL weight: edge contributes nothing but still registers nodes;
-    # identical between fast and distributed paths
-    edges_nw = spark.createDataFrame(
-        [("a", "b", 1.0), ("b", "a", None), ("b", "c", 1.0)],
-        "src_domain string, dst_domain string, weight double")
-    f = {r["node"]: r["rank"]
-         for r in pagerank(edges_nw, weight_col="weight",
-                           n_iter=4).collect()}
-    s = {r["node"]: r["rank"]
-         for r in pagerank(edges_nw, weight_col="weight", n_iter=4,
-                           driver_threshold=0).collect()}
-    assert set(f) == set(s) == {"a", "b", "c"}
-    for k in f:
-        assert f[k] == pytest.approx(s[k], abs=1e-9)
-    # NULL endpoint: the fast path bails to the distributed loop
-    # (join-dropout semantics) instead of crashing in sorted()
-    edges_null = spark.createDataFrame(
-        [("a", "b", 1.0), (None, "b", 1.0)],
-        "src_domain string, dst_domain string, weight double")
-    out = pagerank(edges_null, weight_col="weight", n_iter=2).collect()
-    assert len(out) >= 2
-
-
 def test_pack_first_fit_null_tokens_rejected(spark):
     from dqc_spark.sampling import pack_first_fit
 

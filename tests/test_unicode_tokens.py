@@ -248,3 +248,28 @@ def test_fast_path_guard_is_exact_over_all_codepoints():
         in_py = c.isspace() and not (0x1C <= i <= 0x1F)
         assert in_rx == in_py, hex(i)
         assert not (c.isspace() and cjk.fullmatch(c)), hex(i)
+
+
+def test_gate_words_col_counts_kernel_words(spark):
+    """gates.words_col / stopword_ratio split where the gate kernel's
+    str.split() does: on sentences whose word gaps include U+3000,
+    NBSP and an ASCII information separator, the Catalyst word count
+    and stopword ratio equal features_py's.  Java ``\\s`` (ASCII-only)
+    counted 6 words in the first sentence, not 9."""
+    from dqc_spark.features import features_py
+    from dqc_spark.gates import stopword_ratio, words_col
+
+    texts = [
+        "the cat\u3000sat on\xa0the mat and\u3000then slept",
+        "der Hund und\xa0die Katze\x1cist hier",
+        "\u3000\xa0leading and trailing gaps\xa0",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)],
+                               "i int, t string")
+    got = {r["i"]: (r["nw"], r["sw"]) for r in df.select(
+        "i", F.size(words_col(F.col("t"))).alias("nw"),
+        stopword_ratio(F.col("t")).alias("sw")).collect()}
+    for i, t in enumerate(texts):
+        want = features_py(t)
+        assert got[i] == (want["n_words"], want["stopword_ratio"]), repr(t)
+    assert got[0][0] == 9

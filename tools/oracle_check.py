@@ -51,13 +51,13 @@ def value_hash(pdf: pd.DataFrame) -> str:
 # the most expensive SQL-oracled entries — heaviest Python kernels,
 # widest shuffles, or float expressions with known SF-sensitivity
 HEAVY = [
-    "text_line_dedup", "text_boilerplate_removal",
+    "text_line_dedup",
     "text_bm25_topk", "text_bm25_batch", "text_decontaminate",
     "pack_fixed_sequences", "order_shard_assign", "mix_epoch_expand",
     "snaptable_diff", "corpus_report_by_lang", "html_main_content",
     "html_extract_text", "warc_ingest", "wet_ingest",
     "text_structure_signals", "text_repetition", "text_repetition_ngrams",
-    "text_hashed_tfidf", "quality_model_fit", "dedup_ngram_jaccard",
+    "text_hashed_tfidf", "dedup_ngram_jaccard",
 ]
 
 
@@ -85,8 +85,11 @@ def main() -> int:
         print(f"unknown query name(s): {' '.join(unknown)}", file=sys.stderr)
         return 2
 
+    # no console progress bar: its "[Stage N: ...]" redraws carry no
+    # newline, so an ok/FAIL line would start mid-line behind one
     spark = get_spark(app_name="oracle_check", master="local[8]",
-                      shuffle_partitions=8)
+                      shuffle_partitions=8,
+                      extra_conf={"spark.ui.showConsoleProgress": "false"})
 
     con = duckdb.connect()
     for t in TABLES:
