@@ -7,13 +7,16 @@ pages(url, warc_ts, html, text, lang)
   -> keep = no gate fired        (per-doc generalization, SURVEY §2.4)
   -> scrubbed_text = PII scrub, ONLY for kept docs (dropped docs never
      pay the Python regex cost)
-  -> table-level audit: zero-row-success fold over the same gate
-     columns + salted URL-uniqueness + lang-enum checks
+  -> (optionally) a day-partitioned write, about one file per day
+  -> table-level audit: ONE query counts the gates, lang enum and URL
+     uniqueness (zero-row-success fold)
 
 Shuffle inventory (the whole pipeline):
   0 shuffles for the gate/scrub path (pure map),
-  1 shuffle for URL uniqueness (two-phase salted groupBy),
-  1 tiny broadcast for the lang enum (none — it's an IN-list literal).
+  1 rebalance exchange on ``day`` before the write (AQE splits a hot day),
+  2 for the table checks: ``groupBy(url)`` (partial aggregation merges a
+    hot url map side, so no salting) and the global fold's,
+  0 for the lang enum (an IN-list literal).
 The scan never reads ``html`` unless a gate needs it — column pruning
 drops the widest column at the parquet reader.
 """
@@ -31,7 +34,7 @@ from dqc_spark.langid import lang_mismatch_pred
 from dqc_spark.perplexity import DEFAULT_MAX_PPL, high_ppl_pred
 from dqc_spark.scoring import with_scores
 from dqc_spark.scrub import scrub_udf
-from dqc_spark.skew import salted_duplicate_count
+from dqc_spark.snaptable import write_layout
 from dqc_spark.textmodels import LANGS
 
 GATE_ORDER = [
@@ -103,52 +106,64 @@ def annotate(
     return df
 
 
+def _check_counts(
+    annotated: DataFrame, url_col: str, lang_col: str, allowed: list[str]
+) -> DataFrame:
+    """The one-row frame behind ``table_checks``."""
+    from dqc_spark.checks import enum_pred
+
+    flags = {g: F.col(g) for g in GATE_ORDER if g in annotated.columns}
+    flags["lang_enum"] = enum_pred(lang_col, allowed)
+    flags["kept"] = F.col("keep")
+    per_url = annotated.groupBy(url_col).agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.sum(F.when(p, 1).otherwise(0)).alias(k) for k, p in flags.items()],
+    )
+    return per_url.agg(
+        F.sum("n").alias("total"),
+        F.count(F.when(F.col("n") > 1, 1)).alias("dup_urls"),
+        *[F.sum(k).alias(k) for k in flags],
+    )
+
+
 def table_checks(
     annotated: DataFrame,
     url_col: str = "url",
     lang_col: str = "lang",
     allowed_langs: list[str] | None = None,
 ) -> list:
-    """Reference-semantics table-level checks over the annotated frame:
-    every per-doc gate folds to a zero-row-success boolean (one fused
-    agg), URL uniqueness runs as a salted two-phase groupBy, lang enum
-    as a plain filter-count — all counted in the same job where possible.
-    """
-    from dqc_spark.checks import CheckResult, enum_pred
+    """Reference-semantics table-level checks over the annotated frame,
+    in ONE query (one scan, two exchanges): ``groupBy(url)`` sums each
+    url's rows and its gate, lang-enum and keep flags, and a global agg
+    folds those into the totals and the count of urls with more than
+    one row (is_column_unique, checker.go:60-61; NULLs group together).
+    A sum over no rows is NULL and folds to 0: an empty frame fails
+    only the row-count check."""
+    from dqc_spark.checks import CheckResult
 
     allowed = allowed_langs or LANGS
-    aggs = [
-        F.sum(F.when(F.col(g), 1).otherwise(0)).alias(g)
-        for g in GATE_ORDER
-        if g in annotated.columns
+    row = _check_counts(annotated, url_col, lang_col, allowed).first()
+    counts = {k: int(v or 0) for k, v in row.asDict().items()}
+    results = [
+        CheckResult(g, passed=(counts[g] == 0), error_count=counts[g])
+        for g in GATE_ORDER if g in counts
     ]
-    aggs.append(
-        F.sum(F.when(enum_pred(lang_col, allowed), 1).otherwise(0)).alias("lang_enum")
-    )
-    aggs.append(F.count(F.lit(1)).alias("total"))
-    aggs.append(F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept"))
-    row = annotated.agg(*aggs).first()
-
-    results = []
-    for g in GATE_ORDER:
-        if g in annotated.columns:
-            n = int(row[g])
-            results.append(CheckResult(g, passed=(n == 0), error_count=n))
-    n = int(row["lang_enum"])
+    n = counts["lang_enum"]
     results.append(
         CheckResult("is_column_enum", passed=(n == 0), error_count=n,
                     params={"column": lang_col, "enum_values": ",".join(allowed)})
     )
-    dup_urls = salted_duplicate_count(annotated, url_col)
+    n = counts["dup_urls"]
     results.append(
-        CheckResult("is_column_unique", passed=(dup_urls == 0),
-                    error_count=dup_urls, params={"column": url_col})
+        CheckResult("is_column_unique", passed=(n == 0),
+                    error_count=n, params={"column": url_col})
     )
+    total = counts["total"]
     results.append(
-        CheckResult("is_table_row_count_between", passed=row["total"] > 0,
-                    observed=float(row["total"]),
-                    params={"row_count": str(row["total"]),
-                            "kept": str(row["kept"])})
+        CheckResult("is_table_row_count_between", passed=total > 0,
+                    observed=float(total),
+                    params={"row_count": str(total),
+                            "kept": str(counts["kept"])})
     )
     return results
 
@@ -160,17 +175,21 @@ def run_pipeline(
     thresholds: dict | None = None,
     run_id: str | None = None,
 ) -> DataFrame:
-    """Annotate -> (optionally) write kept docs -> audit the run."""
+    """Annotate -> (optionally) write kept docs -> audit the run.  The
+    read-back takes the written schema: no footer-inference job, and an
+    empty output reads back as an empty frame."""
     run_id = run_id or uuid.uuid4().hex
     ann = annotate(pages, thresholds=thresholds)
     if output_path is not None:
+        dated = ann.withColumn("day", F.to_date("warc_ts"))
         (
-            ann.withColumn("day", F.to_date("warc_ts"))
+            write_layout(dated, ["day"])
             .write.mode("overwrite")
             .partitionBy("day")
             .parquet(output_path)
         )
-        ann = ann.sparkSession.read.parquet(output_path).drop("day")
+        ann = (ann.sparkSession.read.schema(dated.schema)
+               .parquet(output_path).drop("day"))
     if audit is not None:
         for res in table_checks(ann):
             audit.log(res.check_type, res.passed, res.params,

@@ -20,6 +20,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dqc_spark import snaptable
 from dqc_spark.audit import ParquetAuditSink
 from dqc_spark.pipeline import annotate, curate
 
@@ -91,8 +92,6 @@ def run_resumable(
         "day", F.to_date("warc_ts")
     )
     if output_format == "snapshot":
-        from dqc_spark import snaptable
-
         t = snaptable.SnapshotTable(spark, output_path)
         try:
             t.current_version()
@@ -114,7 +113,8 @@ def run_resumable(
         spark.conf.set(conf_key, "dynamic")
         try:
             (
-                ann.write.mode("overwrite")
+                snaptable.write_layout(ann, ["day"])
+                .write.mode("overwrite")
                 .partitionBy("day")
                 .parquet(output_path)
             )

@@ -71,10 +71,20 @@ __all__ = [
     "SnapshotTable",
     "create",
     "CommitConflict",
+    "write_layout",
     "write_rows",
 ]
 
 _MAX_COMMIT_RETRIES = 10
+
+
+def write_layout(df: DataFrame, partition_cols: list[str]) -> DataFrame:
+    """The layout rule of every ``partitionBy`` write: rebalance by the
+    partition columns, so each value lands as about one file, not one
+    per (task, value); AQE splits a value above its advisory partition
+    size (the Iceberg Spark writer's hash distribution).  No columns:
+    ``df`` as is."""
+    return df.hint("rebalance", *partition_cols) if partition_cols else df
 
 
 class CommitConflict(RuntimeError):
@@ -200,15 +210,14 @@ class SnapshotTable:
         self, df: DataFrame, partition_cols: list[str]
     ) -> list[dict]:
         """Materialize ``df`` as immutable files under data/ and return
-        manifest entries.  One file per (partition-tuple); within a
-        partition Spark writes its shards under a staging dir that is
-        then registered file-by-file — files are INVISIBLE until a
+        manifest entries, about one file per partition tuple
+        (``write_layout``).  Spark writes into a staging dir whose files
+        are then registered file-by-file — files are INVISIBLE until a
         manifest references them, which is what makes the commit
         atomic."""
         stage = os.path.join(self.data, f"stage-{uuid.uuid4().hex}")
-        w = df.write.mode("overwrite")
-        if partition_cols:
-            w = w.partitionBy(*partition_cols)
+        w = (write_layout(df, partition_cols).write.mode("overwrite")
+             .partitionBy(*partition_cols))
         w.parquet(stage)
         entries: list[dict] = []
         for dirpath, _dirs, files in os.walk(stage):
@@ -758,8 +767,10 @@ class SnapshotTable:
 
     def compact(self, target_max_files: int = 1) -> int:
         """Rewrite the live snapshot into ≤ ``target_max_files`` files
-        per partition (small-file compaction — audit tables accrete one
-        file per flush).  Pure rewrite: same rows, new version."""
+        (small-file compaction — audit tables accrete one file per
+        flush); a partitioned table lands under the ``write_layout``
+        rule, about one file per partition value.  Pure rewrite: same
+        rows, new version."""
         base = self.current_version()
         m = self.manifest(base)
         live = self.read(version=base).coalesce(max(1, target_max_files))

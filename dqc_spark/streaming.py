@@ -299,9 +299,6 @@ def snaptable_epoch_sink(
     replayed epoch twice.  Cost: O(versions since this run's last
     commit) manifest reads — ~1 in steady state (every batch commits,
     even empty ones), full history only on a new run's first batch.
-    Legacy manifests written before run scoping (bare ``stream_epoch``
-    props) fall back to the old unscoped equality check so upgrading
-    a live checkpoint cannot double-commit its crash-window epoch.
 
     The create-vs-append decision keys on ``current_version()`` (is
     there a COMMITTED manifest), not on directory existence: a crash
@@ -333,14 +330,6 @@ def snaptable_epoch_sink(
             if p.get("stream_run") == run:
                 # this run's newest marker = its max committed epoch
                 return int(p["stream_epoch"]) >= epoch_id
-            if "stream_epoch" in p and "stream_run" not in p:
-                # pre-run-scoping manifest (migration): only the
-                # NEWEST legacy commit can be a crash-window replay —
-                # stop the walk here either way.  Matching deeper
-                # legacy epochs would make a FRESH query silently drop
-                # every batch whose id collides with the old run's
-                # history (found in review).
-                return p["stream_epoch"] == str(epoch_id)
         # no live manifest carries this run's marker — consult the
         # markers carried forward by expire_snapshots.  Carried epochs
         # are always <= any live manifest's epoch for the same run

@@ -24,7 +24,7 @@ Canonical form (conservative, lossless for routing purposes):
     single most common duplicate spelling pair — canonicalize equal
 
 ``domain_of`` returns the lowercased host (no port); per-domain stats
-(the hot-domain skew report feeding quota/salting decisions) are a
+(the hot-domain skew report feeding quota decisions) are a
 plain partial-aggregatable groupBy.
 """
 
@@ -153,8 +153,8 @@ def domain_stats(
     the total branch's exchange (it drops text/total_chars) so
     ReusedExchange never fires and the corpus is scanned TWICE — the
     same measured trap CLAUDE.md documents for ordering.py.  Feed the
-    output into ``stratified_sample`` quota choices or ``skew.py``
-    salting decisions; call ``cache.release_all()`` when done."""
+    output into ``stratified_sample`` quota choices; call
+    ``cache.release_all()`` when done."""
     from dqc_spark import cache
 
     chars = (

@@ -158,15 +158,69 @@ def test_table_checks_and_audit(spark, pages):
     assert results["is_table_row_count_between"]["result"] is True
 
 
-def test_salted_count_matches_plain_groupby(spark, pages):
-    from dqc_spark.skew import salted_group_count
+def test_fused_table_checks_plan_and_counts_under_hot_url(spark):
+    """table_checks counts everything in ONE query: the plan holds the
+    url exchange (with a partial_count merging a hot url map side
+    before it) and the global fold's exchange, nothing more.  On a
+    frame where ~90% of rows share one url, plus a NULL url that
+    appears twice, the duplicate-url count equals the plain groupBy's
+    and each gate count equals a plain sum."""
+    from dqc_spark.pipeline import _check_counts
+    from dqc_spark.textmodels import LANGS
 
-    plain = {
-        r["url"]: r["n"]
-        for r in pages.groupBy("url").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {r["url"]: r["n"] for r in salted_group_count(pages, "url").collect()}
-    assert plain == salted
+    base = spark.range(2000).select(
+        F.when(F.col("id") % 10 != 0, F.lit("hot"))
+        .when(F.col("id") < 20, F.lit(None))
+        .otherwise(F.concat(F.lit("u"), F.col("id").cast("string")))
+        .alias("url"),
+        F.when(F.col("id") % 13 == 0, F.lit("xx"))
+        .otherwise(F.lit("en")).alias("lang"),
+        (F.col("id") % 3 == 0).alias("gate_too_few_words"),
+        (F.col("id") % 7 == 0).alias("gate_high_ppl"),
+    ).withColumn("keep", ~(F.col("gate_too_few_words")
+                           | F.col("gate_high_ppl")))
+    assert base.filter(F.col("url").isNull()).count() == 2
+    assert base.filter(F.col("url") == "hot").count() == 1800
+
+    counts = _check_counts(base, "url", "lang", LANGS)
+    plan = counts._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    exchanges = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert len(exchanges) == 2, plan
+    url_ex = next(i for i in exchanges if "hashpartitioning(url" in lines[i])
+    # the plan string lists children below parents: the partial
+    # aggregate feeding the url exchange sits on a later line
+    assert any("partial_count" in ln for ln in lines[url_ex + 1:]), plan
+
+    res = {r.check_type: r for r in table_checks(base)}
+    dup = base.groupBy("url").count().filter(F.col("count") > 1).count()
+    assert res["is_column_unique"].error_count == dup == 2  # hot and NULL
+    for g in ("gate_too_few_words", "gate_high_ppl"):
+        want = base.select(F.sum(F.col(g).cast("int"))).first()[0]
+        assert res[g].error_count == want, g
+    n_bad_lang = base.filter(F.col("lang") == "xx").count()
+    assert res["is_column_enum"].error_count == n_bad_lang
+    assert res["is_table_row_count_between"].params == {
+        "row_count": "2000",
+        "kept": str(base.filter("keep").count())}
+
+
+@pytest.mark.parametrize("with_output", [False, True])
+def test_run_pipeline_on_empty_input_logs_failing_row_count(
+        spark, pages, tmp_path, with_output):
+    """An empty input is a failing run, not a crash: all 13 audit rows
+    are logged and only the row-count check fails — with no output
+    path (sums over no rows are NULL) and with one (the empty write
+    must read back with its schema, not by footer inference)."""
+    from dqc_spark.audit import MemoryAuditSink
+
+    sink = MemoryAuditSink()
+    out = str(tmp_path / "out") if with_output else None
+    run_pipeline(pages.limit(0), out, audit=sink)
+    results = {r["check_type"]: r["result"] for r in sink.rows}
+    assert len(sink.rows) == 13
+    assert [k for k, ok in results.items() if not ok] == [
+        "is_table_row_count_between"]
 
 
 def test_entry_contract(spark):

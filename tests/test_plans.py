@@ -209,8 +209,9 @@ def test_aqe_splits_skewed_join_partition(spark):
     """AQE skew-join handling (session default skewJoin.enabled=true):
     a 90%-hot key in a sort-merge join gets its partition SPLIT at
     runtime — `skew=true` in the final adaptive plan.  (Skewed
-    AGGREGATIONS are not auto-split, which is why skew.py's salted
-    two-phase groupBy exists.)"""
+    AGGREGATIONS need no split: a partial aggregate merges a hot key's
+    rows map side before the exchange, as pipeline.table_checks'
+    groupBy(url) relies on.)"""
     import re
 
     tuned = {
@@ -423,3 +424,84 @@ def test_corpus_report_is_single_fused_aggregation(docs):
     # must be persisted — otherwise each branch plans its own full
     # corpus scan (column pruning defeats ReusedExchange)
     assert "InMemoryRelation" in plan
+
+
+def _parquet_files(path: str) -> int:
+    return sum(1 for _d, _s, fs in os.walk(path)
+               for f in fs if f.endswith(".parquet"))
+
+
+def test_run_pipeline_write_rebalances_by_day_in_five_jobs(
+        spark, tmp_path, monkeypatch):
+    """run_pipeline's write goes through ONE rebalance exchange on
+    ``day`` with both pandas UDFs still evaluated (score and scrub), and
+    a whole op — write, schema read-back, fused table checks, audit
+    commit — starts at most 5 Spark jobs."""
+    import uuid
+
+    from dqc_spark import pipeline
+    from dqc_spark.audit import SnapshotAuditSink
+    from dqc_spark.pagesgen import generate_pages
+
+    pages = generate_pages(spark, 120, n_partitions=4)
+    layout, written = pipeline.write_layout, []
+
+    def recording_layout(df, cols):
+        written.append(layout(df, cols))
+        return written[-1]
+
+    monkeypatch.setattr(pipeline, "write_layout", recording_layout)
+    audit = SnapshotAuditSink(spark, str(tmp_path / "audit"))
+    audit.log("table_created", True, {})  # the create commit runs a job
+    audit.flush()
+
+    sc = spark.sparkContext
+    group = f"run_pipeline_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "run_pipeline job count")
+    try:
+        pipeline.run_pipeline(pages, str(tmp_path / "out"), audit=audit)
+        audit.flush()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 5, jobs
+
+    (df,) = written
+    plan = plan_str(df)
+    rebalance = [ln for ln in plan.splitlines()
+                 if "REBALANCE_PARTITIONS_BY_COL" in ln]
+    assert len(rebalance) == 1, plan
+    assert "hashpartitioning(day" in rebalance[0], plan
+    udfs = sorted(ln.split("ArrowEvalPython [", 1)[1].split("(", 1)[0]
+                  for ln in plan.splitlines() if "ArrowEvalPython [" in ln)
+    assert udfs == ["score_udf", "scrub_udf"], plan
+
+
+def test_each_partitioned_writer_writes_one_file_per_day(spark, tmp_path):
+    """The shared layout rule (snaptable.write_layout): a 4-partition
+    input spanning D days lands as exactly D data files through each
+    day-partitioned writer — run_pipeline, run_resumable's parquet path
+    and a partitioned snapshot table — not one per (task, day)."""
+    from dqc_spark import snaptable
+    from dqc_spark.audit import ParquetAuditSink
+    from dqc_spark.pagesgen import generate_pages
+    from dqc_spark.pipeline import run_pipeline
+    from dqc_spark.resume import run_resumable
+
+    pages = generate_pages(spark, 120, n_partitions=4)
+    days = pages.select(F.to_date("warc_ts")).distinct().count()
+    assert days > 1
+
+    run_pipeline(pages, str(tmp_path / "pipeline"))
+    assert _parquet_files(str(tmp_path / "pipeline")) == days
+
+    run_resumable(spark, pages, str(tmp_path / "resume"),
+                  ParquetAuditSink(spark, str(tmp_path / "audit")), "g")
+    assert _parquet_files(str(tmp_path / "resume")) == days
+
+    t = snaptable.create(
+        spark, str(tmp_path / "tbl"),
+        pages.withColumn("day", F.to_date("warc_ts")), partition_cols=["day"])
+    m = t.manifest(t.current_version())
+    assert len(m["files"]) == days
+    assert len({tuple(fe["partition"].items()) for fe in m["files"]}) == days

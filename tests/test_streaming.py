@@ -334,9 +334,8 @@ def test_snaptable_sink_replay_survives_concurrent_writers(
         spark, tmp_path):
     """The replay guard must find this run's marker however many
     versions OTHER writers committed since (a fixed global-version
-    window would scroll it out of sight and double-commit), must
-    treat any epoch <= the run's newest marker as a replay, and must
-    honor legacy pre-run-scoping markers."""
+    window would scroll it out of sight and double-commit), and must
+    treat any epoch <= the run's newest marker as a replay."""
     from pyspark.sql import Row
 
     from dqc_spark.snaptable import SnapshotTable
@@ -360,16 +359,4 @@ def test_snaptable_sink_replay_survives_concurrent_writers(
     assert t.current_version() == 8  # epoch 1 committed
     s(pages, 0)
     assert t.current_version() == 8  # 0 <= newest(1) -> skip
-    # legacy markers (no stream_run): only the NEWEST one is a
-    # possible crash-window replay — a fresh run whose epoch id merely
-    # collides with OLDER legacy history must still commit (review:
-    # matching the whole legacy range would silently drop its batches)
-    t.append(extra, props={"stream_epoch": "5"})
-    t.append(extra, props={"stream_epoch": "99"})
-    s99 = snaptable_epoch_sink(spark, root, run_id="runC")
-    s99(pages, 99)
-    assert t.current_version() == 10  # newest legacy match -> skip
-    s5 = snaptable_epoch_sink(spark, root, run_id="runD")
-    s5(pages, 5)  # collides with an OLD legacy epoch only -> commits
-    assert t.current_version() == 11
-    assert t.read().count() == n_after_epoch0 * 3 + 8
+    assert t.read().count() == n_after_epoch0 * 2 + 6
