@@ -283,8 +283,6 @@ DRIVER_ORDER = [
     "check_increasing",
     "snapshot_score_drift",
     "dedup_soft_weights_neardup",
-    "semantic_dedup_keep",
-    "semantic_dedup_text",
     "url_domain_filter",
     "url_dedup_canonical",
     "text_repetition",
@@ -292,7 +290,6 @@ DRIVER_ORDER = [
     "text_quality_scores",
     "text_langid_heuristic",
     "text_c4_line_filter",
-    "text_hashed_tfidf",
     "text_tokens_unicode",
     "url_domain_blocklist",
     "metric_anomaly_days",
@@ -341,30 +338,23 @@ TAIL_ORDER = [
     "lm_bigram_counts",
     "snapshot_drift_by_source",
     "pack_first_fit_bins",
-    "text_bm25_topk",
     "dedup_soft_weights",
     "snapshot_source_overlap",
     "text_kn_perplexity",
-    "text_bm25_batch",
     "sample_split_corpus",
-    "ann_lsh_topk",
     "dedup_simhash_near_dups",
-    "embedding_near_dups_exact",
-    "ann_bruteforce_topk",
     "check_unique_pass",
     "pipeline_curate",
     "dedup_components",
     "text_fingerprints",
     "text_top_ngrams",
     "olap_events_windowed",
-    "ann_ivf_fullprobe",
     "text_decontaminate",
     "sample_hash_10pct",
     "sample_stratified_quota",
     "pack_token_budget",
     "text_chunks",
     "dedup_keep_canonical",
-    "ann_topk_arrow",
     "snapshot_new_docs",
     "text_normalize_nfc",
     "order_training_positions",
@@ -375,7 +365,6 @@ TAIL_ORDER = [
     "profile_histogram_nchars",
     "dedup_exact_groups",
     "dedup_minhash_near_dups",
-    "embedding_near_dups_lsh",
     "text_token_counts",
 ]
 

@@ -9,7 +9,7 @@ itself; un-released intermediates then accumulate cached blocks across
 repeated calls (round-1 ADVICE).
 
 Pattern: operators route every internal ``persist()`` through
-``track()``; callers that invoke dedup/similarity/pipeline operators
+``track()``; callers that invoke dedup/pipeline operators
 repeatedly (benchmarks, services, notebooks) call ``release_all()``
 once the results of a batch are materialized.  ``release_all`` is a
 no-op on frames the caller itself unpersisted, and safe to call at any

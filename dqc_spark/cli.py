@@ -389,28 +389,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="overlap n-gram size (13 is the common eval guard)")
     p.add_argument("--max-frac", type=float, default=0.5)
 
-    p = sub.add_parser("search",
-                       help="BM25 lexical search over a corpus")
-    p.add_argument("--data", required=True, help="docs parquet path")
-    p.add_argument("--query", required=True,
-                   help="space-separated query terms")
-    p.add_argument("--k", type=int, default=10)
-    p.add_argument("--key-column", default="doc_id")
-    p.add_argument("--text-column", default="text")
-
-    p = sub.add_parser("semdedup",
-                       help="model-free semantic dedup (hashed-TF-IDF "
-                            "+ cluster-local cosine prune)")
-    p.add_argument("--input", required=True, help="docs parquet path")
-    p.add_argument("--output", required=True)
-    p.add_argument("--key-column", default="doc_id")
-    p.add_argument("--text-column", default="text")
-    p.add_argument("--threshold", type=float, default=0.9)
-    p.add_argument("--clusters", type=int, default=16)
-    p.add_argument("--keep-only", action="store_true",
-                   help="write surviving docs instead of the "
-                        "(key, cluster, keep) decision table")
-
     p = sub.add_parser("source-overlap",
                        help="cross-source duplicate-overlap matrix")
     p.add_argument("--data", required=True, help="docs parquet path")
@@ -1237,43 +1215,6 @@ def main(argv=None) -> int:
         out.write.mode("overwrite").parquet(args.output)
         n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
         print(f"decontaminate: {n_in} -> {n_out} docs at {args.output}")
-        return 0
-    if c == "search":
-        from dqc_spark.retrieval import bm25_topk
-
-        docs = spark.read.parquet(args.data)
-        hits = bm25_topk(
-            docs, args.query.split(), k=args.k,
-            key_col=args.key_column, text_col=args.text_column,
-            round_to=4,
-        ).collect()
-        for r in hits:
-            print(f"{r['score']:>10.4f}  {r[args.key_column]}")
-        print(f"search: {len(hits)} hits for {args.query!r}")
-        return 0
-    if c == "semdedup":
-        from pyspark.sql import functions as F
-
-        from dqc_spark.cache import track
-        from dqc_spark.semdedup import semantic_dedup_text
-
-        docs = spark.read.parquet(args.input)
-        # persisted: the decision frame embeds Python stages and feeds
-        # both the write and the kept-count (multi-consumer rule)
-        dec = track(semantic_dedup_text(
-            docs, args.key_column, text_col=args.text_column,
-            n_clusters=args.clusters, threshold=args.threshold))
-        if args.keep_only:
-            out = docs.join(
-                dec.filter(F.col("keep")).select(args.key_column),
-                args.key_column, "left_semi")
-        else:
-            out = dec
-        out.write.mode("overwrite").parquet(args.output)
-        n_in = docs.count()
-        n_kept = dec.filter(F.col("keep")).count()
-        print(f"semdedup: {n_in} docs, {n_kept} kept "
-              f"({n_in - n_kept} semantic dups) at {args.output}")
         return 0
     if c == "source-overlap":
         from pyspark.sql import functions as F

@@ -1,6 +1,6 @@
 """Connected components over near-duplicate pair graphs, and canonical-
-document selection — the step between pair generation (dedup.py /
-similarity.py) and an actually-deduplicated corpus.
+document selection — the step between pair generation (dedup.py) and an
+actually-deduplicated corpus.
 
 Near-dup relations are not transitive (A~B, B~C but A!~C), yet training
 dedup must drop whole *clusters*: components of the pair graph are the

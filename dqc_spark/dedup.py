@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Five families, ordered by cost:
+Four families, ordered by cost:
 
   * exact           — hash-groupBy on a content digest (1 shuffle)
   * ngram_jaccard   — exact Jaccard over shingle sets for candidate pairs
@@ -8,7 +8,6 @@ Five families, ordered by cost:
                       candidates meet in a bucket join instead of an
                       O(n^2) cross join (the 100 TB path)
   * simhash         — 64-bit SimHash + pigeonhole chunk join
-  * embedding cosine near-dup — see similarity.py (shares the LSH shape)
 
 All signatures are computed with vectorized/pandas kernels inside Arrow
 batches; all pair-finding is expressed as joins/groupBys so Catalyst

@@ -1,5 +1,5 @@
 """Extended driver-contract queries: training-data operators (dedup,
-similarity, text stats, curation, ingest) over the TPC-H-style test
+text stats, curation, ingest) over the TPC-H-style test
 tables.  Split from __spark_entry__ so the entry file stays the
 thin contract; see queries()/oracle_sql() there."""
 
@@ -96,72 +96,6 @@ def q_cdc_chunks(spark, sf):
 
     docs = _t(spark, sf, "documents")
     return cdc_chunks(docs, "doc_id", "text")
-
-
-# ---------------------------------------------------------------------------
-# similarity search
-# ---------------------------------------------------------------------------
-
-_QUERY_VEC_ID = 7
-
-
-def _query_vec(spark, sf):
-    emb = _t(spark, sf, "embeddings")
-    return emb.filter(F.col("vec_id") == _QUERY_VEC_ID).first()["embedding"]
-
-
-def q_ann_bruteforce_topk(spark, sf):
-    from dqc_spark.similarity import brute_force_topk
-
-    emb = _t(spark, sf, "embeddings")
-    q = _query_vec(spark, sf)
-    return brute_force_topk(emb, q, k=10, round_to=4)
-
-
-def q_ann_lsh_topk(spark, sf):
-    # rows-only: approximate recall depends on the LSH draw
-    from dqc_spark.similarity import lsh_topk
-
-    emb = _t(spark, sf, "embeddings")
-    q = _query_vec(spark, sf)
-    return lsh_topk(emb, q, k=10, max_hamming=4)
-
-
-def q_embedding_near_dups_exact(spark, sf):
-    # exact all-pairs cosine >= 0.4 (oracle-checkable); the LSH variant
-    # below is the scale path
-    emb = _t(spark, sf, "embeddings")
-    a = emb.select(F.col("vec_id").alias("key_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("key_b"), F.col("embedding").alias("vb"))
-    from dqc_spark.similarity import cosine_col
-
-    return (
-        a.join(b, F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b", F.round(cosine_col("va", "vb"), 4).alias("cosine"))
-        .filter(F.col("cosine") >= 0.4)
-    )
-
-
-def q_embedding_near_dups_lsh(spark, sf):
-    # rows-only, but the row count IS a recall meter: the stored
-    # embeddings are near-random (max pairwise cosine ~0.6 at sf0.1), so
-    # near-dups are PLANTED deterministically — each vector unioned with
-    # a copy perturbed by 0.15x its own cyclic shift (cosine ~0.99 to its
-    # source, <0.7 to everything else).  Each planted pair the banded
-    # LSH misses lowers the recorded row count, so recall regressions
-    # show up in the differential gate despite the no-oracle mode.
-    from dqc_spark.similarity import embedding_near_dups
-
-    emb = _t(spark, sf, "embeddings").select("vec_id", "embedding")
-    d = 64
-    rolled = F.concat(F.slice("embedding", 2, d - 1), F.slice("embedding", 1, 1))
-    noisy = F.zip_with(
-        F.col("embedding"), rolled, lambda a, b: (a + F.lit(0.15) * b).cast("float")
-    )
-    copies = emb.select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), noisy.alias("embedding")
-    )
-    return embedding_near_dups(emb.unionByName(copies), threshold=0.9)
 
 
 # ---------------------------------------------------------------------------
@@ -335,33 +269,6 @@ def q_neardup_soft_weights(spark, sf):
     return soft_weights(docs, _dup_pairs(spark, sf), "doc_id")
 
 
-def q_ann_topk_arrow(spark, sf):
-    # same exact answer as ann_bruteforce_topk, scored in one Arrow
-    # matmul kernel instead of interpreted Catalyst HOF lambdas
-    from dqc_spark.similarity import brute_force_topk_arrow
-
-    emb = _t(spark, sf, "embeddings")
-    q = _query_vec(spark, sf)
-    return brute_force_topk_arrow(emb, q, k=10, round_to=4)
-
-
-def q_ann_ivf_fullprobe(spark, sf):
-    # IVF ANN machinery (k-means train -> cluster assign -> probe ->
-    # Arrow re-score) differentially checked END-TO-END: with
-    # nprobe == n_clusters every cluster is scanned, so the result must
-    # equal exact brute force REGARDLESS of what k-means produced —
-    # any row lost or duplicated by the assign/probe plumbing breaks the
-    # hash.  The approximate low-nprobe behavior is pinned by
-    # tests/test_ivf.py recall tests instead.
-    from dqc_spark.ivf import build_ivf_index, ivf_topk, train_centroids
-
-    emb = _t(spark, sf, "embeddings")
-    q = _query_vec(spark, sf)
-    cent = train_centroids(emb, k=8, max_iter=5)
-    idx = build_ivf_index(emb, cent)
-    return ivf_topk(idx, cent, q, k=10, nprobe=len(cent), round_to=4)
-
-
 # ---------------------------------------------------------------------------
 # sampling / packing / chunking / semi-structured (training-data selection)
 # ---------------------------------------------------------------------------
@@ -524,27 +431,6 @@ def q_line_dedup(spark, sf):
         F.md5("text_dedup").alias("dedup_md5"),
         "n_lines",
         "n_lines_kept",
-    )
-
-
-def q_hashed_tfidf(spark, sf):
-    # model-free document vectors (hashing trick + IDF), compared as
-    # the SPARSE float64 (doc_id, bucket, weight) frame — every stage
-    # (bucket = little-endian md5 % dim, signed tf, smoothed IDF, L2
-    # norm) is SQL-expressible there, unlike the float32 array the
-    # vector path assembles (assembly parity is pinned by
-    # test_textvectors).  ROUND(…,6): idf/norm contain ln/sqrt over
-    # engine-ordered float sums, so the engines compute DIFFERENT
-    # doubles and ROUND absorbs the cross-engine error (CLAUDE.md
-    # rounding-mode rule).
-    from dqc_spark.textvectors import hashed_tfidf_weights
-
-    docs = _t(spark, sf, "documents")
-    w = hashed_tfidf_weights(docs, "doc_id", dim=128)
-    return w.select(
-        F.col("key").alias("doc_id"),
-        F.col("bucket").cast("long").alias("bucket"),
-        F.round("weight", 6).alias("w_6dp"),
     )
 
 
@@ -1019,18 +905,6 @@ def q_metric_anomaly_days(spark, sf):
     )
 
 
-def q_bm25_topk(spark, sf):
-    # lexical retrieval over the corpus: pure-Catalyst BM25, posting
-    # stream filtered to the query terms BEFORE any shuffle.  Scores
-    # rounded to 4 (the only cross-engine divergence is per-doc SUM
-    # order; every per-(doc,term) partial is bit-identical)
-    from dqc_spark.retrieval import bm25_topk
-
-    return bm25_topk(
-        _t(spark, sf, "documents"), ["hash", "join", "window"],
-        k=20, round_to=4)
-
-
 def q_score_drift(spark, sf):
     # PSI distribution-drift report between two derived snapshots of
     # the documents table: prev = even doc_ids (raw n_chars), cur = odd
@@ -1051,23 +925,12 @@ def q_score_drift(spark, sf):
     return score_drift(cur, prev, "v", [100.0, 200.0, 400.0, 800.0])
 
 
-def q_semantic_dedup_text(spark, sf):
-    # model-free SemDeDup: hashed-TF-IDF vectors -> the same k-means
-    # blocking + cluster-local prune, no embedding table involved.
-    # Decision-column form: rows == input count regardless of k-means.
-    from dqc_spark.semdedup import semantic_dedup_text
-
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    return semantic_dedup_text(docs, "doc_id", n_clusters=8,
-                               threshold=0.95)
-
-
 def q_split_leakage(spark, sf):
     # eval-integrity check: near-dup pairs straddling the train/val
     # boundary.  Leakage is planted (every 40th doc cloned into val
     # with a one-token edit — high Jaccard, different exact n-grams);
     # rows-only (MinHash estimates are engine-specific), pair semantics
-    # pinned by tests/test_semdedup.py::test_split_leakage*.
+    # pinned by tests/test_curation_extras.py::test_split_leakage*.
     from dqc_spark.decontam import split_leakage
 
     docs = _t(spark, sf, "documents").select("doc_id", "text")
@@ -1091,21 +954,6 @@ def q_split_corpus(spark, sf):
         _t(spark, sf, "documents").select("doc_id"), "doc_id")
 
 
-def q_bm25_batch(spark, sf):
-    # batched retrieval: one corpus pass amortized over three queries;
-    # per-query scores provably equal the single-query form (pytest).
-    # rank cast to long so the dtype matches DuckDB's ROW_NUMBER
-    from dqc_spark.retrieval import bm25_topk_batch
-
-    out = bm25_topk_batch(
-        _t(spark, sf, "documents"),
-        {"q_hash": ["hash", "join"],
-         "q_window": ["window", "scan"],
-         "q_mixed": ["merge", "sort", "filter"]},
-        k=10, round_to=4)
-    return out.withColumn("rank", F.col("rank").cast("long"))
-
-
 def q_dedup_soft_weights(spark, sf):
     # SoftDeDup: keep every row, weight = 1/|exact-dup group|.  The
     # corpus is planted with re-crawls (every 10th doc duplicated) and
@@ -1120,21 +968,6 @@ def q_dedup_soft_weights(spark, sf):
         (F.col("doc_id") + 20000000).alias("doc_id"),
         F.lit(None).cast("string").alias("text"))
     return dedup_soft_weights(docs.union(dup).union(nulls), "doc_id")
-
-
-def q_semantic_dedup(spark, sf):
-    # SemDeDup over the embeddings table: seeded k-means centroids,
-    # cluster-local greedy cosine prune.  Decision-column form — one
-    # row per input vector with (cluster, keep) — so the rows-only
-    # driver check pins a count independent of what k-means produced;
-    # the keep-set semantics are pinned by tests/test_semdedup.py.
-    from dqc_spark.ivf import train_centroids
-    from dqc_spark.semdedup import semantic_dedup
-
-    emb = _t(spark, sf, "embeddings")
-    cent = train_centroids(emb, k=8, max_iter=5)
-    return semantic_dedup(emb, cent, threshold=0.99).select(
-        "vec_id", "cluster", "keep")
 
 
 def q_source_overlap(spark, sf):
@@ -1201,7 +1034,7 @@ _UNICODE_PLANTED_SQL = "[" + ", ".join(
 
 def q_text_tokens_unicode(spark, sf):
     """Both shared tokenizer families (fold_tokens = LM/whitespace
-    family, unicode_alnum_tokens = BM25 family) over the planted
+    family, unicode_alnum_tokens = the toxicity family) over the planted
     multilingual slice, as (family, token, n) counts — the driver
     differential proves the Catalyst and DuckDB legs tokenize
     byte-identically on non-Latin text."""
@@ -1876,10 +1709,6 @@ def extra_queries():
         "dedup_exact_groups": q_dedup_exact,
         "dedup_minhash_near_dups": q_minhash_near_dups,
         "dedup_simhash_near_dups": q_simhash_near_dups,
-        "ann_bruteforce_topk": q_ann_bruteforce_topk,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "embedding_near_dups_exact": q_embedding_near_dups_exact,
-        "embedding_near_dups_lsh": q_embedding_near_dups_lsh,
         "text_token_counts": q_token_counts,
         "text_quality_scores": q_quality_scores,
         "text_langid_heuristic": q_langid_heuristic,
@@ -1897,8 +1726,6 @@ def extra_queries():
         "dedup_keep_canonical": q_keep_canonical,
         "dedup_ngram_jaccard": q_ngram_jaccard,
         "text_cdc_chunks": q_cdc_chunks,
-        "ann_topk_arrow": q_ann_topk_arrow,
-        "ann_ivf_fullprobe": q_ann_ivf_fullprobe,
         "pipeline_curate": q_pipeline_curate,
         "text_decontaminate": q_decontaminate,
         "snapshot_new_docs": q_snapshot_new_docs,
@@ -1912,7 +1739,6 @@ def extra_queries():
         "text_c4_line_filter": q_c4_line_filter,
         "snapshot_drift_by_source": q_snapshot_drift,
         "pack_first_fit_bins": q_pack_first_fit,
-        "text_hashed_tfidf": q_hashed_tfidf,
         "url_canonicalize": q_url_canonicalize,
         "url_domain_stats": q_url_domain_stats,
         "html_extract_text": q_html_extract,
@@ -1920,16 +1746,12 @@ def extra_queries():
         "url_dedup_canonical": q_url_dedup_canonical,
         "text_repetition": q_text_repetition,
         "text_repetition_ngrams": q_text_repetition_ngrams,
-        "text_bm25_topk": q_bm25_topk,
         "dedup_soft_weights": q_dedup_soft_weights,
-        "semantic_dedup_keep": q_semantic_dedup,
         "snapshot_source_overlap": q_source_overlap,
         "text_kn_perplexity": q_kn_perplexity,
-        "text_bm25_batch": q_bm25_batch,
         "dedup_soft_weights_neardup": q_neardup_soft_weights,
         "sample_split_corpus": q_split_corpus,
         "eval_split_leakage": q_split_leakage,
-        "semantic_dedup_text": q_semantic_dedup_text,
         "snapshot_score_drift": q_score_drift,
         "text_tokens_unicode": q_text_tokens_unicode,
         "url_domain_blocklist": q_url_domain_blocklist,
@@ -2107,44 +1929,6 @@ def extra_oracle_sql():
             FROM documents d
             WHERE EXISTS (SELECT 1 FROM kept k WHERE k.doc_id = d.doc_id)
         """,
-        # BM25: every per-(doc,term) partial is bit-identical across
-        # engines (int tf/df/dl; avgdl = int-sum/int-count; ln of an
-        # identical double; literal arithmetic spelled with the SAME
-        # associativity as the Catalyst expression) — only the per-doc
-        # SUM is order-dependent, absorbed by ROUND(.,4)
-        "text_bm25_topk": f"""
-            WITH base AS (
-              SELECT doc_id,
-                     len({_ALTOKS_SQL}) AS dl,
-                     {_ALTOKS_SQL} AS toks
-              FROM documents
-            ), scal AS (
-              SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                     CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                       AS avgdl
-              FROM base
-            ), tf AS (
-              SELECT doc_id, dl, tok AS term, COUNT(*) AS tf
-              FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM base)
-              WHERE tok IN ('hash', 'join', 'window')
-              GROUP BY doc_id, dl, tok
-            ), dfreq AS (
-              SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-            )
-            SELECT tf.doc_id,
-                   ROUND(SUM(
-                       ln(1.0 + (scal.n - dfreq.df + 0.5)
-                                / (dfreq.df + 0.5))
-                       * tf.tf * (1.2 + 1.0)
-                       / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl
-                                                / scal.avgdl))
-                   ), 4) AS score
-            FROM tf, scal, dfreq
-            WHERE tf.term = dfreq.term
-            GROUP BY tf.doc_id
-            ORDER BY score DESC, tf.doc_id
-            LIMIT 20
-        """,
         # split: both engines compare IDENTICAL integers (md5-prefix
         # bucket vs integer-quantized thresholds — the CLAUDE.md rule)
         "sample_split_corpus": """
@@ -2158,53 +1942,6 @@ def extra_oracle_sql():
                                         1, 8))::BIGINT % 1000000 AS b
               FROM documents
             )
-        """,
-        # batched BM25: same per-partial bit-identity argument as
-        # text_bm25_topk; the per-query top-k is ROW_NUMBER over the
-        # ROUNDED score (both engines rank identical doubles)
-        "text_bm25_batch": f"""
-            WITH base AS (
-              SELECT doc_id,
-                     len({_ALTOKS_SQL}) AS dl,
-                     {_ALTOKS_SQL} AS toks
-              FROM documents
-            ), scal AS (
-              SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-                     CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                       AS avgdl
-              FROM base
-            ), tf AS (
-              SELECT doc_id, dl, tok AS term, COUNT(*) AS tf
-              FROM (SELECT doc_id, dl, unnest(toks) AS tok FROM base)
-              WHERE tok IN ('filter', 'hash', 'join', 'merge', 'scan',
-                            'sort', 'window')
-              GROUP BY doc_id, dl, tok
-            ), dfreq AS (
-              SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-            ), qexp(query_id, term) AS (
-              VALUES ('q_hash', 'hash'), ('q_hash', 'join'),
-                     ('q_window', 'scan'), ('q_window', 'window'),
-                     ('q_mixed', 'filter'), ('q_mixed', 'merge'),
-                     ('q_mixed', 'sort')
-            ), scored AS (
-              SELECT qexp.query_id, tf.doc_id,
-                     ROUND(SUM(
-                         ln(1.0 + (scal.n - dfreq.df + 0.5)
-                                  / (dfreq.df + 0.5))
-                         * tf.tf * (1.2 + 1.0)
-                         / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl
-                                                  / scal.avgdl))
-                     ), 4) AS score
-              FROM tf, scal, dfreq, qexp
-              WHERE tf.term = dfreq.term AND tf.term = qexp.term
-              GROUP BY qexp.query_id, tf.doc_id
-            )
-            SELECT query_id, doc_id, score, rank FROM (
-              SELECT *, ROW_NUMBER() OVER (
-                  PARTITION BY query_id
-                  ORDER BY score DESC, doc_id) AS rank
-              FROM scored
-            ) WHERE rank <= 10
         """,
         # near-dup soft weights: the truncated-hash cliques make the
         # components closure SQL-expressible (component = hash group),
@@ -2414,25 +2151,6 @@ def extra_oracle_sql():
             SELECT md5(text) AS text_hash, COUNT(*) AS n FROM documents
             GROUP BY 1 HAVING COUNT(*) > 1
         """,
-        "ann_bruteforce_topk": f"""
-            SELECT vec_id,
-                   ROUND(list_cosine_similarity(
-                       CAST(embedding AS DOUBLE[]),
-                       (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-                        WHERE vec_id = {_QUERY_VEC_ID})), 4) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id LIMIT 10
-        """,
-        "embedding_near_dups_exact": """
-            SELECT a.vec_id AS key_a, b.vec_id AS key_b,
-                   ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                                CAST(b.embedding AS DOUBLE[])),
-                         4) AS cosine
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                               CAST(b.embedding AS DOUBLE[])),
-                        4) >= 0.4
-        """,
         "text_token_counts": rf"""
             SELECT doc_id,
                    length(list_filter(regexp_split_to_array(text, '{_PYWS_SPLIT}'),
@@ -2469,52 +2187,6 @@ def extra_oracle_sql():
                           + LEAST(sw_r * 4, 1.0) * 0.3
                           + alpha_r * 0.3) * 10000) / 10000 AS quality_score
             FROM f
-        """,
-        # sparse hashed TF-IDF frame.  bucket = (little-endian md5
-        # uint64) % 128 — 128 divides 256, so only the digest's FIRST
-        # byte (hex chars 1-2) matters; sign = bit 0 of byte 8 (hex
-        # char 18).  tf is an exact integer-valued double; idf/norm
-        # contain ln/sqrt over engine-ordered sums -> ROUND 6 on both
-        # sides.  The per-doc sentinel in the Spark DF pass counts ALL
-        # docs (incl. empty), matching COUNT(*).
-        "text_hashed_tfidf": f"""
-            WITH tw AS (
-              SELECT doc_id, unnest({_FTOKS_SQL}) AS w
-              FROM documents
-            ), tb AS (
-              SELECT doc_id, md5(w) AS hx FROM tw
-            ), tok AS (
-              SELECT doc_id,
-                     ((strpos('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16
-                      + (strpos('0123456789abcdef', substr(hx, 2, 1)) - 1))
-                       % 128 AS bucket,
-                     CASE WHEN (strpos('0123456789abcdef',
-                                       substr(hx, 18, 1)) - 1) % 2 = 1
-                          THEN CAST(1.0 AS DOUBLE)
-                          ELSE CAST(-1.0 AS DOUBLE) END AS sgn
-              FROM tb
-            ), tf AS (
-              SELECT doc_id, bucket, SUM(sgn) AS tf
-              FROM tok GROUP BY doc_id, bucket
-            ), dfreq AS (
-              SELECT bucket, COUNT(DISTINCT doc_id) AS dfb
-              FROM tok GROUP BY bucket
-            ), nd AS (
-              SELECT COUNT(*) AS n_docs FROM documents
-            ), widf AS (
-              SELECT tf.doc_id, tf.bucket,
-                     tf.tf * (ln((CAST(1.0 AS DOUBLE) + nd.n_docs)
-                                 / (CAST(1.0 AS DOUBLE) + dfreq.dfb))
-                              + CAST(1.0 AS DOUBLE)) AS wgt
-              FROM tf JOIN dfreq USING (bucket) CROSS JOIN nd
-            ), nrm AS (
-              SELECT doc_id, sqrt(SUM(wgt * wgt)) AS nn
-              FROM widf GROUP BY doc_id
-            )
-            SELECT widf.doc_id, CAST(widf.bucket AS BIGINT) AS bucket,
-                   ROUND(widf.wgt / nrm.nn, 6) AS w_6dp
-            FROM widf JOIN nrm USING (doc_id)
-            WHERE widf.wgt <> 0
         """,
         "text_langid_heuristic": rf"""
             WITH f AS (
@@ -2745,25 +2417,6 @@ def extra_oracle_sql():
                                 doc_id) AS rn
               FROM documents
             ) WHERE rn = 1
-        """,
-        "ann_topk_arrow": f"""
-            SELECT vec_id,
-                   ROUND(list_cosine_similarity(
-                       CAST(embedding AS DOUBLE[]),
-                       (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-                        WHERE vec_id = {_QUERY_VEC_ID})), 4) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id LIMIT 10
-        """,
-        # full-probe IVF scans every cluster -> must equal brute force
-        "ann_ivf_fullprobe": f"""
-            SELECT vec_id,
-                   ROUND(list_cosine_similarity(
-                       CAST(embedding AS DOUBLE[]),
-                       (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings
-                        WHERE vec_id = {_QUERY_VEC_ID})), 4) AS cosine
-            FROM embeddings
-            ORDER BY cosine DESC, vec_id LIMIT 10
         """,
         # 3-gram slice [i:i+2] is 1-based INCLUSIVE in DuckDB -> 3 tokens;
         # explode-with-placeholder keeps gram-less docs (n_grams=0) in the

@@ -24,19 +24,25 @@ def get_spark(
     """Build (or reuse) a SparkSession with engine defaults.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
-    for tests; on a real cluster the submitter sets the master and these
-    configs become spark-submit ``--conf`` entries instead.
+    for tests.  Under ``spark-submit`` the submitter's ``--master`` is
+    kept unless ``master`` is passed: PySpark then runs inside the JVM
+    spark-submit launched (``PYSPARK_GATEWAY_PORT`` is set), and that
+    JVM's conf already holds the master.  The conf alone cannot tell
+    the cases apart, because spark-submit fills in ``local[*]`` when no
+    ``--master`` is given.
     """
-    if master is None:
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
 
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+        builder
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -6,10 +6,10 @@ deployment-supplied blocklist, gated at a threshold — the standard
 word-list toxicity filter (C4 dropped documents on its "bad words"
 list the same way).  The list is an input, not an opinion: ships
 as a file of one term per line (comments/#, blanks ignored), folded
-through the shared alnum tokenizer family (the BM25 family: case
-fold + punctuation strip), so "BadWord" matches the "bad word!" in a
-document — the whitespace family would keep the '!' attached and miss
-it.
+through the shared alnum tokenizer family
+(``wordhash.unicode_alnum_tokens``: case fold + punctuation strip), so
+"BadWord" matches the "bad word!" in a document — the whitespace
+family would keep the '!' attached and miss it.
 
 Spark shape: the (small) list broadcasts; scoring is ONE vectorized
 Arrow kernel per batch over the shared ``unicode_alnum_tokens`` kernel — no

@@ -1,10 +1,9 @@
-"""Shared Unicode-portable tokenizer family + md5 word-hash identity.
+"""Shared Unicode-portable tokenizer family.
 
-The decontam grams, LM gram tables, anchor terms, hashed-TF-IDF
-buckets, and BM25 posting stream — plus their DuckDB differential
-oracles — depend on EXACTLY this tokenization and word identity; a
-drifting per-module copy would silently break an oracle, so they all
-import from here.
+The decontam grams, LM gram tables, MinHash shingles and toxicity
+blocklist terms — plus their DuckDB differential oracles — depend on
+EXACTLY this tokenization; a drifting per-module copy would silently
+break an oracle, so they all import from here.
 
 Three-engine discipline (the ``htmlextract`` rule): every class below
 is ONE literal string that parses identically as a Java regex
@@ -20,7 +19,7 @@ driver oracle.
   Tokenizers ISOLATE each such codepoint into its own token first
   (the CCNet-style codepoint fallback: a space-free Japanese/Chinese
   document otherwise becomes one giant "word"), so LM grams over CJK
-  are character n-grams and BM25 matches CJK queries per character.
+  are character n-grams and a CJK blocklist term matches per character.
   Hangul is intentionally absent (Korean is space-delimited);
   Thai/Lao/Myanmar/Khmer get their own CLUSTER treatment via
   ``SEA_GROUP`` in the gram-identity families only — per codepoint
@@ -34,7 +33,7 @@ driver oracle.
   (TAB LF VT FF CR SP NEL NBSP OGHAM + U+2000-200A LSEP PSEP NNBSP
   MMSP IDSP).
 * ``NONALNUM_JAVA`` / ``NONALNUM_PY`` — the not-(letter|digit) split
-  for the BM25 token family: Java/RE2 spell it ``[^\\p{L}\\p{N}]+``;
+  for the alnum token family: Java/RE2 spell it ``[^\\p{L}\\p{N}]+``;
   python ``re`` lacks ``\\p`` so it uses the provably equal ``[\\W_]+``
   (python ``\\w`` = ``\\p{L}`` + ``\\p{N}`` + underscore exactly, per
   ``str.isalnum``'s L*/Nd/Nl/No categories).
@@ -50,26 +49,20 @@ driver oracle.
   divergence: a handful of Unicode-14 letters DuckDB cannot lower at
   all (Ⱟ, Ꟁ/Ꟈ/Ꟊ/Ꟑ/Ꟗ/Ꟙ/Ꟶ, Vithkuqi U+10570..) — never plant these in
   an oracle-compared fixture.
-* ``md5_word`` — (h1, h2, sign): the digest's two little-endian 8-byte
-  words plus a sign bit, cached per word.  Engine-portable and
-  process-stable (never python ``hash``); 128 bits of material so
-  callers can take one lane (feature hashing) or both (shingle lanes).
 
 ``ascii_tokens``/``WS_ASCII`` remain for callers that must match
 legacy ASCII-\\s behavior; new code uses ``unicode_tokens`` (whitespace
-family, case untouched) or ``unicode_alnum_tokens`` (BM25 family,
-lowercases).
+family, case untouched) or ``unicode_alnum_tokens`` (the toxicity
+blocklist's family, lowercases).
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 __all__ = [
     "WS_ASCII",
     "ascii_tokens",
-    "md5_word",
     "CJK_CLASS",
     "CJK_GROUP",
     "SEA_BASE_CLASS",
@@ -122,8 +115,8 @@ CJK_GROUP = f"([{CJK_CLASS}])"
 # python parse time, so every leg interpolates identical characters.
 #
 # Only the GRAM-IDENTITY families segment this way (``fold_tokens`` —
-# LM/TF-IDF/decontam — and ``unicode_alnum_tokens`` — BM25): none of
-# their consumers ever rebuilds output text, so the segmentation is
+# LM/decontam/MinHash — and ``unicode_alnum_tokens`` — toxicity): none
+# of their consumers ever rebuilds output text, so the segmentation is
 # free.  ``unicode_tokens`` (the whitespace family) stays UN-segmented
 # for these scripts: rebuilding text from clusters with a no-separator
 # rejoin — correct for CJK, whose running text has no spaces — would
@@ -131,7 +124,7 @@ CJK_GROUP = f"([{CJK_CLASS}])"
 # Thai/Lao/Khmer/Myanmar document (the CJK-rebuild failure mode, one
 # script family over).  Consequence, documented: the
 # whitespace family sees an unbroken SEA phrase as one token;
-# LM/BM25/decontam see clusters.
+# LM/decontam/toxicity see clusters.
 SEA_MARK_CLASS = (
     "\u0e31\u0e33-\u0e3a\u0e47-\u0e4e"    # Thai dependent vowels/tones
     "\u0eb1\u0eb3-\u0ebc\u0ec8-\u0ecd"    # Lao dependent vowels/tones
@@ -243,8 +236,9 @@ def unicode_tokens(text: str | None) -> list[str]:
 
 
 def unicode_alnum_tokens(text: str | None) -> list[str]:
-    """BM25-family tokens: fold case, isolate CJK codepoints and SEA
-    clusters, split on not-(letter|digit).  Matches the Catalyst plan
+    """Alnum-family tokens (the toxicity blocklist's): fold case,
+    isolate CJK codepoints and SEA clusters, split on
+    not-(letter|digit).  Matches the Catalyst plan
     from ``unicode_alnum_tokens_col`` and the DuckDB oracle spelling
     from ``unicode_alnum_tokens_sql``."""
     iso = sea_isolate(cjk_isolate(fold_case(text)))
@@ -253,8 +247,8 @@ def unicode_alnum_tokens(text: str | None) -> list[str]:
 
 def fold_tokens(text: str | None) -> list[str]:
     """Case-folded gram-identity tokens — the LM-family tokenizer
-    (LM gram tables, perplexity scoring, decontam grams, anchor terms,
-    TF-IDF buckets).
+    (LM gram tables, perplexity scoring, decontam grams, MinHash
+    shingles).
     Whitespace family plus SEA cluster isolation (no consumer of this
     family rebuilds output text — see the SEA_* note).  Train-time and
     score-time vocabularies agree BY CONSTRUCTION: every one of those
@@ -327,17 +321,3 @@ def ascii_tokens(text: str | None) -> list[str]:
     """Whitespace tokens of ``text`` (ASCII \\s, empties dropped) —
     legacy spelling, kept for exact-match consumers."""
     return [t for t in WS_ASCII.split(text or "") if t]
-
-
-def md5_word(word: str, cache: dict) -> tuple[int, int, float]:
-    """(h1, h2, sign) for one word, memoized in ``cache``."""
-    v = cache.get(word)
-    if v is None:
-        d = hashlib.md5(word.encode("utf-8")).digest()
-        v = (
-            int.from_bytes(d[0:8], "little"),
-            int.from_bytes(d[8:16], "little"),
-            1.0 if d[8] & 1 else -1.0,
-        )
-        cache[word] = v
-    return v

@@ -150,19 +150,6 @@ def test_cli_blocked_domains_file_paths(spark, tmp_path):
         _parse_blocked(spark, str(tmp_path / "nope" / "domains")).collect()
 
 
-def test_cli_search(capsys, spark, db_path, docs_parquet):
-    rc, out = _run(capsys, ["--db-path", db_path, "search",
-                            "--data", docs_parquet,
-                            "--query", "quick brown fox", "--k", "3"])
-    assert rc == 0
-    assert "search: 2 hits" in out  # docs 0 and 2 contain the terms
-    # top hit is doc 2 (same tf, shorter effective noise) or doc 0 —
-    # both listed, scores printed desc
-    lines = [ln for ln in out.splitlines() if "  " in ln and "search" not in ln]
-    scores = [float(ln.split()[0]) for ln in lines]
-    assert scores == sorted(scores, reverse=True)
-
-
 def test_cli_source_overlap(capsys, spark, db_path, tmp_path):
     p = str(tmp_path / "src_docs.parquet")
     rows = [("a", "same text"), ("b", "same text"), ("b", "only b"),
@@ -187,24 +174,6 @@ def test_cli_curate_split(capsys, spark, db_path, tmp_path):
     assert rc == 0
     splits = {r["split"] for r in spark.read.parquet(out_p).collect()}
     assert splits <= {"train", "val"} and "train" in splits
-
-
-def test_cli_semdedup(capsys, spark, db_path, tmp_path):
-    src = str(tmp_path / "sd_docs.parquet")
-    rows = [
-        (1, "spark shuffles data between executors during wide stages"),
-        (2, "wide executors during data shuffles spark stages between"),
-        (3, "completely unrelated cooking recipe with flour and sugar"),
-    ]
-    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(src)
-    out_p = str(tmp_path / "sd_out.parquet")
-    rc, out = _run(capsys, ["--db-path", db_path, "semdedup",
-                            "--input", src, "--output", out_p,
-                            "--clusters", "2", "--threshold", "0.95",
-                            "--keep-only"])
-    assert rc == 0 and "1 semantic dups" in out
-    kept = {r["doc_id"] for r in spark.read.parquet(out_p).collect()}
-    assert kept == {1, 3}  # the bag-of-words rewrite (2) is pruned
 
 
 def test_cli_completeness_and_freshness(capsys, spark, db_path, tmp_path):

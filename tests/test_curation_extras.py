@@ -1,6 +1,6 @@
-"""Round-2 curation operators: decontamination, incremental snapshot
-dedup (+bloom), NFC normalization, deterministic global ordering,
-compression-ratio signal."""
+"""Round-2 curation operators: decontamination and cross-split leakage,
+incremental snapshot dedup (+bloom), NFC normalization, deterministic
+global ordering, compression-ratio signal."""
 
 import hashlib
 import random
@@ -108,6 +108,51 @@ def test_contamination_plan_broadcasts_benchmark(spark, contam_docs):
     docs, bench, _ = contam_docs
     plan = contamination_scores(docs, bench, n=3)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan  # corpus side never shuffles for the probe
+
+
+def test_split_leakage_detects_planted_pair(spark):
+    from dqc_spark.decontam import split_leakage
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [
+        (1, base + " one", "train"),
+        (2, base + " one extra", "val"),      # near-dup of 1, cross-split
+        (3, "completely different content about spark shuffles", "train"),
+        (4, base + " one tweak", "train"),    # near-dup of 1, SAME split
+        (5, "unrelated validation document text entirely", "val"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, split string")
+    got = split_leakage(df, "doc_id", threshold=0.5).collect()
+    pairs = {frozenset((r["key_a"], r["key_b"])) for r in got}
+    assert frozenset((1, 2)) in pairs
+    # same-split near-dup (1,4) must NOT be reported
+    assert frozenset((1, 4)) not in pairs
+    for r in got:
+        assert r["split_a"] != r["split_b"]
+        assert r["est_jaccard"] >= 0.5
+
+
+def test_split_leakage_clean_corpus_empty(spark):
+    from dqc_spark.decontam import split_leakage
+
+    rows = [(1, "alpha beta gamma delta epsilon", "train"),
+            (2, "zeta eta theta iota kappa", "val")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, split string")
+    assert split_leakage(df, "doc_id", threshold=0.5).count() == 0
+
+
+def test_split_leakage_surfaces_null_labels(spark):
+    from dqc_spark.decontam import split_leakage
+
+    base = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(1, base + " one", "train"),
+            (2, base + " one extra", None),   # unlabeled near-dup
+            (3, base + " one tweak", None)]   # NULL-vs-NULL: NOT a pair
+    df = spark.createDataFrame(rows, "doc_id long, text string, split string")
+    pairs = {frozenset((r["key_a"], r["key_b"]))
+             for r in split_leakage(df, "doc_id", threshold=0.5).collect()}
+    assert frozenset((1, 2)) in pairs   # train-vs-NULL surfaced
+    assert frozenset((2, 3)) not in pairs  # both unlabeled: same bucket
 
 
 # ---------------------------------------------------------------------------

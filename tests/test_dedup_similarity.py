@@ -1,4 +1,4 @@
-"""Unit tests for dedup / similarity / textstats operators
+"""Unit tests for dedup / textstats operators
 with planted duplicates and known-answer fixtures."""
 
 import numpy as np
@@ -95,137 +95,6 @@ def test_simhash_finds_planted_near_dups(spark, docs, max_hamming):
     assert got == within(planted)
     with pytest.raises(ValueError, match="pigeonhole"):
         simhash_near_dups(docs, "doc_id", max_hamming=16)
-
-
-def test_brute_force_topk_exact(spark):
-    from dqc_spark.similarity import brute_force_topk
-
-    rng = np.random.Generator(np.random.Philox(key=[3, 0]))
-    vecs = rng.standard_normal((50, 8)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(50)],
-        "vec_id long, embedding array<float>",
-    )
-    q = vecs[5]
-    got = brute_force_topk(df, [float(x) for x in q], k=5).collect()
-    sims = vecs @ q / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(q))
-    want = list(np.argsort(-sims)[:5])
-    assert [r["vec_id"] for r in got] == [int(i) for i in want]
-    assert got[0]["vec_id"] == 5 and got[0]["cosine"] == pytest.approx(1.0)
-
-
-def test_lsh_topk_contains_self(spark):
-    from dqc_spark.similarity import lsh_topk
-
-    rng = np.random.Generator(np.random.Philox(key=[4, 0]))
-    vecs = rng.standard_normal((80, 64)).astype("float32")
-    vecs[11] = vecs[3] + rng.standard_normal(64).astype("float32") * 0.01
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(80)],
-        "vec_id long, embedding array<float>",
-    )
-    got = lsh_topk(df, [float(x) for x in vecs[3]], k=3, max_hamming=2)
-    ids = [r["vec_id"] for r in got.collect()]
-    assert ids[0] == 3 and 11 in ids  # self + planted neighbor retrieved
-
-
-def test_lsh_index_matches_oneoff_and_reuses_signatures(spark):
-    # the batch-query index must return the same answers as the one-off
-    # lsh_topk for the same planes/seed, without recomputing signatures
-    from dqc_spark.similarity import LshIndex, lsh_topk
-
-    rng = np.random.Generator(np.random.Philox(key=[9, 0]))
-    vecs = rng.standard_normal((120, 64)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(120)],
-        "vec_id long, embedding array<float>",
-    )
-    idx = LshIndex(df)
-    for qi in (3, 40, 77):
-        q = [float(x) for x in vecs[qi]]
-        a = [(r.vec_id, r.cosine) for r in idx.topk(q, k=5, max_hamming=3).collect()]
-        b = [(r.vec_id, r.cosine)
-             for r in lsh_topk(df, q, k=5, max_hamming=3).collect()]
-        assert a == b
-        assert a[0][0] == qi  # self is always retrieved
-    idx.close()
-
-
-def test_embedding_near_dups_lsh_finds_planted(spark):
-    from dqc_spark.similarity import embedding_near_dups
-
-    rng = np.random.Generator(np.random.Philox(key=[5, 0]))
-    vecs = rng.standard_normal((60, 64)).astype("float32")
-    vecs[20] = vecs[7] * 1.001  # cosine ~ 1
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<float>",
-    )
-    pairs = embedding_near_dups(df, threshold=0.95).collect()
-    assert any(r["key_a"] == 7 and r["key_b"] == 20 for r in pairs)
-
-
-def test_embedding_near_dups_recall_vs_exact(spark):
-    # recall of the banded LSH against the exact all-pairs oracle on a
-    # corpus with PLANTED near-dup clusters (the stored test embeddings
-    # are near-random, so the planting happens here): 100 bases x 2
-    # noisy copies each + the bases themselves
-    from dqc_spark.similarity import embedding_near_dups
-
-    rng = np.random.Generator(np.random.Philox(key=[6, 0]))
-    base = rng.standard_normal((100, 64))
-    rows = []
-    vid = 0
-    all_vecs = []
-    for v in base:
-        for _ in range(3):  # base + 2 noisy copies
-            w = v + 0.10 * rng.standard_normal(64)
-            all_vecs.append(w)
-            rows.append((vid, [float(x) for x in w]))
-            vid += 1
-    m = np.stack(all_vecs)
-    mn = m / np.linalg.norm(m, axis=1, keepdims=True)
-    cos = mn @ mn.T
-    iu = np.triu_indices(len(m), 1)
-    exact = {
-        (int(a), int(b))
-        for a, b in zip(iu[0][cos[iu] >= 0.9], iu[1][cos[iu] >= 0.9])
-    }
-    assert len(exact) >= 200  # planting worked
-
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {
-        (r["key_a"], r["key_b"])
-        for r in embedding_near_dups(df, threshold=0.9).collect()
-    }
-    # precision is 1.0 by construction (exact cosine re-score)
-    assert got <= exact
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.9, f"LSH recall {recall:.3f} below 0.9"
-
-
-def test_lsh_candidates_bounded_under_skew(spark):
-    # a degenerate corpus (one vector repeated 400x) would emit ~80k
-    # candidate pairs per band uncapped; the bucket cap must drop the
-    # hot buckets so the join fanout stays bounded — this is the
-    # 100-TB-safety property the round-1 implementation lacked
-    from dqc_spark.similarity import (
-        hyperplane_lsh_candidate_pairs,
-        hyperplane_signatures,
-    )
-
-    rng = np.random.Generator(np.random.Philox(key=[7, 0]))
-    hot = rng.standard_normal(64)
-    vecs = [hot] * 400 + [rng.standard_normal(64) for _ in range(100)]
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    sigs = hyperplane_signatures(df, n_planes=64)
-    n_cand = hyperplane_lsh_candidate_pairs(sigs, max_bucket=50).count()
-    # every bucket containing the hot vector exceeds the cap and is
-    # dropped; remaining candidates come from the 100 random vectors
-    assert n_cand < 400 * 399 / 2 / 10, n_cand
 
 
 def test_textstats_known_answers(spark):
@@ -327,54 +196,19 @@ def test_dedup_exact_priority_null_text_and_column_name(spark):
     assert kept == {2, 3}
 
 
-def test_arrow_topk_zero_and_null_vectors_never_top_k(spark):
-    """Zero-norm / NULL embeddings yield NULL cosine (sorted last) in
-    BOTH brute-force twins — an unguarded NaN would sort FIRST."""
-    from dqc_spark.similarity import brute_force_topk, brute_force_topk_arrow
+def test_soft_weights(spark):
+    from dqc_spark.dedup import dedup_soft_weights
 
-    q = [1.0, 0.0, 0.0, 0.0]
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),   # zero vector -> NaN unguarded
-        (3, None),                    # NULL -> np.stack crash unguarded
-        (4, [0.5, 0.5, 0.0, 0.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for fn in (brute_force_topk, brute_force_topk_arrow):
-        got = fn(df, q, k=2, round_to=6).collect()
-        assert [r["vec_id"] for r in got] == [1, 4], fn.__name__
-        assert all(r["cosine"] is not None for r in got), fn.__name__
-
-
-def test_lsh_topk_64_planes_sign_bit(spark):
-    """n_planes=64 packs bit 63 into the int64 sign bit; the query
-    signature must wrap identically (the plain 1<<63 python int could
-    not even be F.lit'd)."""
-    import numpy as np
-
-    from dqc_spark.similarity import LshIndex, lsh_topk
-
-    rng = np.random.default_rng(5)
-    rows = [(i, rng.standard_normal(64).tolist()) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # query = vector 7 itself: its signature matches exactly, so it must
-    # be retrievable at hamming 0 regardless of which sign bits are set
-    q = rows[7][1]
-    got = lsh_topk(df, q, k=1, n_planes=64, max_hamming=0).collect()
-    assert got and got[0]["vec_id"] == 7
-    ix = LshIndex(df, n_planes=64)
-    got2 = ix.topk(q, k=1, max_hamming=0).collect()
-    ix.close()
-    assert got2 and got2[0]["vec_id"] == 7
-
-
-def test_signatures_reject_uniform_dim_mismatch(spark):
-    from py4j.protocol import Py4JJavaError
-    from pyspark.errors import PythonException
-
-    from dqc_spark.similarity import embedding_near_dups
-
-    rows = [(i, [float(i), 1.0]) for i in range(20)]  # dim 2, default 64
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with pytest.raises((PythonException, Py4JJavaError), match="dim"):
-        embedding_near_dups(df).collect()
+    df = spark.createDataFrame(
+        [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, None), (6, None)],
+        "doc_id bigint, text string")
+    rows = {r["doc_id"]: r for r in dedup_soft_weights(
+        df, "doc_id").collect()}
+    assert len(rows) == 6  # every row kept, including NULL texts
+    assert [rows[i]["n_copies"] for i in (1, 2, 3)] == [3, 3, 3]
+    assert rows[1]["weight"] == pytest.approx(1 / 3)
+    assert rows[4]["n_copies"] == 1 and rows[4]["weight"] == 1.0
+    # NULL texts form one group of their own
+    assert rows[5]["n_copies"] == 2 and rows[5]["weight"] == 0.5
+    # total mass == number of distinct contents (incl. the NULL group)
+    assert sum(r["weight"] for r in rows.values()) == pytest.approx(3.0)

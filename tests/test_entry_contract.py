@@ -60,7 +60,8 @@ def test_oracle_check_rejects_unknown_query_name():
 
 def test_heavy_list_names_registered_queries():
     # `oracle_check.py --heavy` exits 2 on any unregistered name, so a
-    # query deleted from the registry must leave HEAVY too
+    # query deleted from the registry must leave HEAVY too; and HEAVY
+    # is the SQL-oracled sweep, so a rows-only name would compare nothing
     import importlib.util
     import os
 
@@ -71,6 +72,8 @@ def test_heavy_list_names_registered_queries():
     spec.loader.exec_module(mod)
     stale = set(mod.HEAVY) - set(E.queries())
     assert not stale, f"HEAVY names unregistered queries: {stale}"
+    no_oracle = set(mod.HEAVY) - set(E.oracle_sql())
+    assert not no_oracle, f"HEAVY names rows-only queries: {no_oracle}"
 
 
 def test_entry_ext_import_failure_is_not_swallowed(monkeypatch):

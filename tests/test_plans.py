@@ -339,24 +339,6 @@ def test_lm_gram_counts_shuffle_pre_aggregated_rows_only(docs):
     assert "MapInPandas" in p
 
 
-def test_bm25_plan_shape(docs):
-    # BM25's scale contract: (1) the posting explode is guarded by the
-    # arrays_overlap prefilter so non-matching docs never explode;
-    # (2) per-term tf partial-aggregates map-side before the only wide
-    # shuffle; (3) the final top-k is TakeOrderedAndProject, not a
-    # global sort; (4) the per-term df re-enters via broadcast
-    from dqc_spark.retrieval import bm25_topk
-
-    p = plan_str(bm25_topk(docs, ["hash", "join"], k=10))
-    assert "arrays_overlap" in p
-    assert "partial_count" in p
-    assert "TakeOrderedAndProject" in p
-    assert "BroadcastHashJoin" in p
-    # and it must never scan more than (key, text)
-    read_schema = p.split("ReadSchema:")[1].splitlines()[0]
-    assert "lang" not in read_schema and "source" not in read_schema
-
-
 def test_pii_spans_is_shuffle_free_and_prunes_to_key_and_text(docs):
     from dqc_spark.piispans import pii_spans
 

@@ -1,5 +1,5 @@
 """Regression pins for the round-3 review findings: bloom probe
-strictness, NULL-vector LSH tolerance and line-dedup key injectivity."""
+strictness and line-dedup key injectivity."""
 
 import numpy as np
 import pytest
@@ -14,38 +14,6 @@ def test_probe_matrix_whitespace_values_fall_back():
     mat = _probe_matrix(np.array(vals), 4096, 4)
     for row, v in zip(mat, vals):
         assert list(row) == _probe_positions(v, 4096, 4)
-
-
-def test_hyperplane_signatures_null_and_ragged_vectors(spark):
-    from dqc_spark.similarity import hyperplane_signatures
-
-    rows = [
-        (1, [1.0] * 8),
-        (2, None),          # NULL embedding (e.g. left-join miss)
-        (3, [1.0] * 3),     # ragged
-        (4, [-1.0] * 8),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {r["key"]: r["sig"] for r in
-           hyperplane_signatures(df, dim=8, n_planes=16).collect()}
-    assert set(got) == {1, 2, 3, 4}
-    assert got[2] == 0 and got[3] == 0  # zero-vector convention
-    assert got[1] != got[4]
-
-
-def test_lsh_index_and_topk_share_plane_derivation(spark):
-    # the query-side planes must be bit-identical with the kernel's:
-    # a self-query's signature distance to itself must be 0
-    from dqc_spark.similarity import LshIndex
-
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(50)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    ix = LshIndex(df, dim=16, n_planes=16)
-    q = dict(rows)[7]
-    top = ix.topk(q, k=1, max_hamming=0).collect()
-    ix.close()
-    assert top and top[0]["vec_id"] == 7  # hamming 0 bucket contains self
 
 
 def test_line_dedup_key_injective(spark):

@@ -7,7 +7,7 @@ This test is the measurement behind that claim: every planted sample —
 CJK, Cyrillic, Greek (final sigma), Turkish dotted-İ, accented Latin,
 exotic Unicode spaces, halfwidth katakana — must tokenize identically
 on all three legs, for both the whitespace family and the
-case-folding alnum (BM25) family.
+case-folding alnum (toxicity) family.
 """
 
 import duckdb
@@ -63,7 +63,7 @@ SAMPLES = [
 @pytest.fixture(scope="module")
 def legs(spark):
     """(python, spark, duckdb) token lists per sample, all three
-    families: ws (unicode_tokens, the rebuild family), al (BM25), fold
+    families: ws (unicode_tokens, the rebuild family), al (toxicity), fold
     (LM/gram-identity).  The Catalyst columns are spelled INLINE from
     the shared class constants — that is the pin: a leg edit that
     forgets one engine breaks this fixture."""
@@ -152,7 +152,7 @@ def test_sea_cluster_segmentation():
     assert all(len(t) >= 1 for t in fold_tokens("ພາສາລາວ"))
     assert fold_tokens("မြန်မာ") == ["မြ", "န်", "မာ"]
     assert fold_tokens("ខ្មែរ") == ["ខ្", "មែ", "រ"]
-    # a BM25-family Thai query term matches per cluster
+    # an alnum-family Thai blocklist term matches per cluster
     assert "ไ" in unicode_alnum_tokens("ค้นหา ไทย")
 
 

@@ -24,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
@@ -51,13 +51,12 @@ def value_hash(pdf: pd.DataFrame) -> str:
 # the most expensive SQL-oracled entries — heaviest Python kernels,
 # widest shuffles, or float expressions with known SF-sensitivity
 HEAVY = [
-    "text_line_dedup",
-    "text_bm25_topk", "text_bm25_batch", "text_decontaminate",
+    "text_line_dedup", "text_decontaminate",
     "pack_fixed_sequences", "order_shard_assign", "mix_epoch_expand",
     "snaptable_diff", "corpus_report_by_lang", "html_main_content",
     "html_extract_text", "warc_ingest", "wet_ingest",
     "text_structure_signals", "text_repetition", "text_repetition_ngrams",
-    "text_hashed_tfidf", "dedup_ngram_jaccard",
+    "dedup_ngram_jaccard",
 ]
 
 
